@@ -14,27 +14,23 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .schemas import SCHEMAS
-from .session import ensure_tuned
+from .session import ensure_tuned, session_memo
 
-# Both memo stores live ON the SparkSession object (attribute dicts keyed
-# by (sf_dir, name)), not in an id(spark)-keyed module dict: a recycled
-# CPython id after session GC would hand back DataFrame handles bound to a
-# dead JVM session (ADVICE r03).  Object-attached state dies with the
-# session, so aliasing is impossible.
+# Both memo stores are session_memo namespaces keyed by (sf_dir, name).
 #
-# _CACHE_ATTR: .cache()'d DataFrames, populated only when
+# "table_cache": .cache()'d DataFrames, populated only when
 # SPARK_GRAFT_CACHE=1 (bench mode): one batch reads each hot table once
 # into the columnar in-memory store, mirroring the warm-cache protocol the
 # DuckDB BASELINE was measured under (BASELINE.md).
 #
-# _HANDLES_ATTR: plain DataFrame HANDLES (no .cache(), no data pinned).
+# "table_handles": plain DataFrame HANDLES (no .cache(), no data pinned).
 # DataFrames are immutable, so handing the same object back is
 # semantically identical to re-reading — it just skips the per-load py4j
 # round trips (session tuning, parquet footer listing, schema inspection,
 # normalization), which are ~10 JVM calls per table and dominated measured
 # DataFrame-construction time (BASELINE.md round 3: 70–190 ms per query).
-_CACHE_ATTR = "_bigdatawork_table_cache"
-_HANDLES_ATTR = "_bigdatawork_table_handles"
+_CACHE_NS = "table_cache"
+_HANDLES_NS = "table_handles"
 
 # Physical layout policy for the cached (bench-mode) tables: cluster each
 # hot table by its dominant join/window key — the in-memory analog of
@@ -176,18 +172,6 @@ def _cluster_partitions(spark: SparkSession) -> int:
         return 32
 
 
-def _session_store(spark: SparkSession, attr: str) -> dict:
-    store = getattr(spark, attr, None)
-    if store is None:
-        store = {}
-        try:
-            setattr(spark, attr, store)
-        except Exception:
-            pass  # un-taggable session: degrade to re-reading per call
-    return store
-
-
-
 _TS_TYPES = (T.TimestampType, T.TimestampNTZType)
 
 # Epoch-unit bands, unambiguous for any date between 1973 and 2262:
@@ -297,8 +281,8 @@ def drop_tables(spark: SparkSession, sf_dir: str) -> None:
     Lives here, next to the stores it evicts, so the store layout has ONE
     owner (bench.py's sf1.0 phase calls this to avoid squeezing the
     sf0.1 cache it times afterwards)."""
-    for attr in (_CACHE_ATTR, _HANDLES_ATTR):
-        store = getattr(spark, attr, None) or {}
+    for ns in (_CACHE_NS, _HANDLES_NS):
+        store = session_memo(spark, ns)
         for key in [k for k in store if k[0] == sf_dir]:
             df = store.pop(key)
             try:
@@ -343,7 +327,7 @@ def load(
     key = (sf_dir, name)
     dcols = _DERIVED_COLS.get(name, [])
     if os.environ.get("SPARK_GRAFT_CACHE") == "1":
-        cache = _session_store(spark, _CACHE_ATTR)
+        cache = session_memo(spark, _CACHE_NS)
         if key not in cache:
             df = _read(spark, sf_dir, name)
             for cname, cexpr in dcols:
@@ -380,7 +364,7 @@ def load(
         if not derived and dcols:
             out = out.drop(*[c for c, _ in dcols])
         return out
-    handles = _session_store(spark, _HANDLES_ATTR)
+    handles = session_memo(spark, _HANDLES_NS)
     if key not in handles:
         handles[key] = _read(spark, sf_dir, name)
     out = handles[key]

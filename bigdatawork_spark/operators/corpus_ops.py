@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
+from ..session import session_memo, spread_if_narrow
 
 
 
@@ -277,22 +278,15 @@ def char_ngram_profile(spark, sf_dir):
     # and built a per-row array of L string objects through the
     # interpreted higher-order path; hoisting lower() and substring-ing
     # post-explode got 33-40 s → 13.7 s at synthetic sf1.0.
-    # r17 re-adjudication (VERDICT r16 item 5, guide §2.5/§2.6 + §1):
-    # nearly ALL of the residual 13-14 s was the ONE-FILE documents scan
-    # serializing gram generation on a single core — the posexplode,
-    # substring and partial aggregation all ran inside that lone scan
-    # task.  Round-robin the slim (lang, lowered-text) relation to core
-    # width first (documents ≈ 50 MB decoded at sf1.0 — one cheap
-    # exchange), and generate grams with the same one-pass codegen
-    # regexp_extract_all lookahead dedup_ngram_jaccard adopted in r08,
-    # which also avoids duplicating the ~290-char lt across every
-    # exploded position.  Interleaved A/B at sf1.0 (noop sink, 3 rounds):
-    # posexplode 13.6-14.3 s; posexplode+spread 1.2-2.3 s; regex
-    # unspread 2.6-3.9 s; regex+spread 0.76-1.5 s — adopted regex+spread
-    # (result frame verified identical at sf1.0, oracle HASH at sf0.01).
+    # Spread the slim (lang, lowered-text) relation (documents ≈ 50 MB
+    # decoded at sf1.0 — one cheap exchange), then generate grams with the
+    # one-pass codegen regexp_extract_all lookahead dedup_ngram_jaccard
+    # adopted in r08, which also avoids duplicating the ~290-char lt
+    # across every exploded position.  Interleaved A/B at sf1.0 (noop
+    # sink, 3 rounds): posexplode 13.6-14.3 s; posexplode+spread
+    # 1.2-2.3 s; regex unspread 2.6-3.9 s; regex+spread 0.76-1.5 s.
     grams = (
-        d.selectExpr("lang", "lower(text) as lt")
-        .repartition(spark.sparkContext.defaultParallelism)
+        spread_if_narrow(d.selectExpr("lang", "lower(text) as lt"))
         .select(
             "lang",
             F.explode(
@@ -314,24 +308,15 @@ def char_ngram_profile(spark, sf_dir):
     )
 
 
-# Learned merge rules memoized per (sf_dir, n_merges) ON the session object
-# (io.py's pattern — dies with the session, id-reuse-safe).  The rules are a
-# plain list of tuples (no JVM handles), training is deterministic, and the
-# corpus is immutable per sf_dir, so re-training is pure waste: without the
-# memo, bpe_encode_apply re-trains from scratch right after bpe_train_merges
-# already did, and the schema-only driver-contract sweep paid two full
-# trainings just to inspect output schemas (ADVICE r04).
-_BPE_ATTR = "_bigdatawork_bpe_memo"
-
-
+# Learned merge rules memoized per (sf_dir, n_merges) in the session memo.
+# The rules are a plain list of tuples (no JVM handles), training is
+# deterministic, and the corpus is immutable per sf_dir, so re-training is
+# pure waste: without the memo, bpe_encode_apply re-trains from scratch
+# right after bpe_train_merges already did, and the schema-only
+# driver-contract sweep paid two full trainings just to inspect output
+# schemas (ADVICE r04).
 def _bpe_train(spark, sf_dir, n_merges: int = 4):
-    memo = getattr(spark, _BPE_ATTR, None)
-    if memo is None:
-        memo = {}
-        try:
-            setattr(spark, _BPE_ATTR, memo)
-        except Exception:
-            pass  # un-taggable session: degrade to re-training per call
+    memo = session_memo(spark, "bpe_merges")
     key = (sf_dir, n_merges)
     if key not in memo:
         memo[key] = _bpe_train_impl(spark, sf_dir, n_merges)
@@ -973,15 +958,10 @@ def bigram_nll_scores(d, id_col: str = "doc_id", col: str = "text"):
     words = d.selectExpr(
         f"{id_col}", f"filter(split(lower({col}), ' '), x -> x != '') as ws"
     )
-    # r17 (guide §2.5/§2.6): the documents scan is ONE parquet file at
-    # every bench SF, and `pairs` is consumed twice (model counts + the
-    # scoring join) — unspread, BOTH bigram explodes ran as single
-    # tasks.  Round-robin the compact word-array rows first: 6.4-7.6 s →
-    # 3.4-5.0 s at sf1.0.  The new partitioning changes the double-avg
-    # fold order; output verified pandas-equal at sf1.0 and oracle HASH
-    # re-verified at sf0.001/0.01/0.1 (the avg_nll round-6 values sit
-    # clear of rounding boundaries on every checked corpus).
-    words = words.repartition(d.sparkSession.sparkContext.defaultParallelism)
+    # `pairs` feeds both the model counts and the scoring join: spread the
+    # compact word-array rows before both bigram explodes, 6.4-7.6 s →
+    # 3.4-5.0 s at sf1.0.
+    words = spread_if_narrow(words)
     pairs = (
         words.where("size(ws) >= 2")
         .selectExpr(
@@ -1002,12 +982,20 @@ def bigram_nll_scores(d, id_col: str = "doc_id", col: str = "text"):
         .crossJoin(F.broadcast(vocab))
         .selectExpr("w1", "w2", "ln((cnt + 0.5) / (n_ctx + 0.5 * vocab)) as lp")
     )
+    # Layout-invariant average: the per-bigram log-probs are summed as
+    # DECIMAL(28,12) (exact, so fold order cannot move the last ulp and
+    # flip the 6th-decimal rounding) and divided once at the end — the
+    # dsir_importance_resample discipline.
     return (
         pairs.join(model, ["w1", "w2"])
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-            F.round(-F.avg("lp"), 6).alias("avg_nll"),
+            F.round(
+                -F.sum(F.col("lp").cast("decimal(28,12)")).cast("double")
+                / F.count(F.lit(1)),
+                6,
+            ).alias("avg_nll"),
         )
         .selectExpr(
             f"{id_col}", "n_bigrams", "avg_nll", "round(exp(avg_nll), 4) as ppl"

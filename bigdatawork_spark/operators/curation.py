@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
+from ..session import restage, session_memo, spread_if_narrow
 
 
 @register(
@@ -308,14 +309,12 @@ def dedup_ngram_jaccard(spark, sf_dir):
     (dedup_near_minhash) and verify candidates with exactly this
     operator."""
     d = load(spark, sf_dir, "documents")
-    # r17 re-adjudication (VERDICT r16 item 5, guide §2.5/§2.6): the
-    # documents table is ONE parquet file at every bench SF, so without
-    # this round-robin the regexp gram pass, array_distinct and xxhash64
-    # transform all ran inside a single scan task AND the cache below
-    # kept that one-partition layout for every downstream consumer.
-    # Interleaved noop-sink A/B at sf1.0: 31.5-35.6 s → 24.2-27.0 s.
+    # Spread before the regexp gram pass, array_distinct and xxhash64
+    # transform, so the cache below keeps a core-wide layout for every
+    # downstream consumer.  Noop-sink A/B at sf1.0: 31.5-35.6 s →
+    # 24.2-27.0 s.
     arrays = (
-        d.repartition(spark.sparkContext.defaultParallelism)
+        spread_if_narrow(d)
         .select(
             "doc_id",
             # (?s) so '.' crosses newlines — parity with the oracle's
@@ -1160,8 +1159,9 @@ def dedup_repeated_spans(spark, sf_dir):
     8.2-8.6 s, output verified row-identical (49 890 spans both forms;
     oracle HASH green at sf0.01/0.1).  Cross-engine divergence would
     need a 64-bit collision among the corpus's distinct grams that md5
-    does not share (~1e-8 at sf1.0's gram count) — same accepted-risk
-    class as the jaccard gram ids."""
+    does not share.  Birthday bound: n²/2⁶⁵ for n distinct grams, ≈ 2e-5
+    (order 1e-5) at sf1.0, taking its 27M gram rows as the upper bound on
+    n — same accepted-risk class as the jaccard gram ids."""
     d = (
         load(spark, sf_dir, "documents")
         .filter("text is not null and length(text) >= 20")
@@ -1627,16 +1627,6 @@ def _augmented_documents(spark, sf_dir):
     )
 
 
-# Bounded-lifetime cache for the hashed (augmented) relation: every
-# admission builder consumes batch/corpus from MULTIPLE subplans (group
-# mins + joins), and Spark recomputes the full union+sha2 lineage per
-# consumer otherwise (the SURVEY §7 cache-shared-subplans lesson).  One
-# sf_dir is live at a time; switching evicts the previous dir's entries
-# (tests fuzz over fresh tmp dirs — without eviction each example would
-# leak a cached relation into executor storage, ADVICE r10).
-_SPLIT_CACHE: dict[str, dict[bool, object]] = {}
-
-
 def _hashed_documents(spark, sf_dir, *, augmented: bool, cache: bool = True):
     import os
 
@@ -1649,30 +1639,32 @@ def _hashed_documents(spark, sf_dir, *, augmented: bool, cache: bool = True):
             else load(spark, sf_dir, "documents").select("doc_id", "text", "source")
         )
         return d.withColumn("h", F.sha2("text", 256))
-    per = _SPLIT_CACHE.get(sf_dir)
+    # Cached hashed (augmented) relation: every admission builder consumes
+    # batch/corpus from MULTIPLE subplans (group mins + joins), and Spark
+    # recomputes the full union+sha2 lineage per consumer otherwise (the
+    # SURVEY §7 cache-shared-subplans lesson).  One sf_dir is live at a
+    # time; switching evicts the previous dir's entries (tests fuzz over
+    # fresh tmp dirs — without eviction each example would leak a cached
+    # relation into executor storage).
+    memo = session_memo(spark, "hashed_documents")
+    per = memo.get(sf_dir)
     if per is None:
-        for old_dir in list(_SPLIT_CACHE):
-            for df in _SPLIT_CACHE.pop(old_dir).values():
+        for old_dir in list(memo):
+            for df in memo.pop(old_dir).values():
                 try:
                     df.unpersist(blocking=False)
                 except Exception:
                     pass  # the old relation's session may already be stopped
-        per = _SPLIT_CACHE.setdefault(sf_dir, {})
+        per = memo[sf_dir] = {}
     if augmented not in per:
-        # r17 (guide §2.5): the documents scan is ONE parquet file at
-        # every bench SF, so the sha256 pass and the cached layout every
-        # _split consumer (incremental dedup family, both admission
-        # streams) filters from were a SINGLE partition — every
-        # downstream batch write/scan ran one task.  Round-robin to core
-        # width before the hash+cache (wm staging 5.6-6.8 → ~2 s warm;
-        # all consumers keyed/ordered, so layout is semantics-free).
-        # The cache=False path keeps the trivial scan-visible plan the
+        # Spread before the hash+cache so every _split consumer's batch
+        # write/scan is core-wide (wm staging 5.6-6.8 → ~2 s warm; all
+        # consumers keyed/ordered, so layout is semantics-free).  The
+        # cache=False path keeps the trivial scan-visible plan the
         # plan-pinning tests rely on.
-        per[augmented] = (
+        per[augmented] = spread_if_narrow(
             _hashed_documents(spark, sf_dir, augmented=augmented, cache=False)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .cache()
-        )
+        ).cache()
     return per[augmented]
 
 
@@ -1794,12 +1786,6 @@ def dedup_incremental_audit(spark, sf_dir):
     )
 
 
-# Bounded-lifetime cache (the minhash_pairs pattern, ADVICE r10): the two
-# staged feature relations feed lsh.fit and both join sides; each call
-# evicts the previous call's relations.
-_INC_STAGED_LAST: list[DataFrame] = []
-
-
 def incremental_minhash_hits(
     index_docs: DataFrame,
     batch_docs: DataFrame,
@@ -1824,18 +1810,16 @@ def incremental_minhash_hits(
         inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
     )
 
-    def stage(docs):
+    # the two staged feature relations feed lsh.fit and both join sides
+    def stage(slot, docs):
         s = tf.transform(ngram.transform(tok.transform(docs)))
-        return s.filter(F.size("shingles") >= 1).cache()
+        return restage(
+            docs.sparkSession, f"incremental_minhash_hits.{slot}",
+            s.filter(F.size("shingles") >= 1),
+        )
 
-    global _INC_STAGED_LAST
-    for old in _INC_STAGED_LAST:
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass  # the old relation's session may already be stopped
-    idx_staged, batch_staged = stage(index_docs), stage(batch_docs)
-    _INC_STAGED_LAST = [idx_staged, batch_staged]
+    idx_staged = stage("index", index_docs)
+    batch_staged = stage("batch", batch_docs)
 
     lsh = MinHashLSH(
         inputCol="features", outputCol="hashes",

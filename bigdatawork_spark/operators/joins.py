@@ -706,7 +706,8 @@ def _sf_tag(sf_dir: str) -> str:
     readability plus a hash of the FULL normalized path (ADVICE r11 — two
     corpora sharing a basename, e.g. tmp fixtures both named ``sf0.01``,
     must not silently reuse each other's materialized fact/dim layout;
-    the _SPLIT_CACHE pattern, applied to on-disk layouts)."""
+    the hashed-documents memo's sf_dir keying, applied to on-disk
+    layouts)."""
     import hashlib
 
     norm = os.path.normpath(os.path.abspath(sf_dir))

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
+from ..session import restage, session_memo, spread_if_narrow
 
 
 @register(
@@ -160,12 +161,6 @@ def dedup_near_exactjacc(spark, sf_dir):
     )
 
 
-# Last minhash_pairs / tfidf_keywords staged caches — evicted by the next
-# call of the same operator (bounded cache lifetime; see the cache sites).
-_MINHASH_STAGED_LAST: DataFrame | None = None
-_TFIDF_STAGED_LAST: DataFrame | None = None
-
-
 def minhash_pairs(docs: DataFrame, *, num_hash_tables: int = 5,
                   threshold: float = 0.2, shingle_n: int = 3,
                   seed: int = 42) -> DataFrame:
@@ -187,20 +182,10 @@ def minhash_pairs(docs: DataFrame, *, num_hash_tables: int = 5,
     )
     staged = tf.transform(ngram.transform(tok.transform(docs)))
     # LSH requires ≥1 non-zero feature: drop docs with <shingle_n words.
-    # The cache feeds both lsh.fit and both sides of the self-join, but a
-    # returned-lazy DF can't unpersist inside this function — so the
-    # lifetime is bounded instead: each call evicts the PREVIOUS call's
-    # staged relation (ADVICE r10: knob-varying repeated calls otherwise
-    # leak one cached relation per invocation into executor storage).
-    staged = staged.filter(F.size("shingles") >= 1)
-    global _MINHASH_STAGED_LAST
-    if _MINHASH_STAGED_LAST is not None:
-        try:
-            _MINHASH_STAGED_LAST.unpersist(blocking=False)
-        except Exception:
-            pass  # session of the old relation may already be stopped
-    staged = staged.cache()
-    _MINHASH_STAGED_LAST = staged
+    # The cache feeds both lsh.fit and both sides of the self-join.
+    staged = restage(
+        docs.sparkSession, "minhash_pairs", staged.filter(F.size("shingles") >= 1)
+    )
     lsh = MinHashLSH(
         inputCol="features", outputCol="hashes",
         numHashTables=num_hash_tables, seed=seed,
@@ -276,27 +261,19 @@ SCORER_BCAST_MAX_BYTES = 64 << 20
 # caching — the value is a deterministic projection of the immutable
 # per-sf_dir embeddings table (the events-staging-memo pattern); keyed
 # by (key, sf_dir, audit-cap env) so audit-capped and uncapped corpora
-# never alias.  Dies with the session object.
-_SCORER_MEMO_ATTR = "_bigdatawork_scorer_corpus_memo"
-
-
+# never alias.
 def _corpus_broadcast(spark, key: str, sf_dir: str, build):
-    import os
-
-    memo = getattr(spark, _SCORER_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        try:
-            setattr(spark, _SCORER_MEMO_ATTR, memo)
-        except Exception:
-            memo = None  # un-taggable session: build per call
-    cache_key = (key, sf_dir, os.environ.get(TWIN_AUDIT_ENV))
-    if memo is not None and cache_key in memo:
-        return memo[cache_key]
-    val = build()
-    if memo is not None:
-        memo[cache_key] = val
-    return val
+    """``build()`` returns (broadcast, pandas corpus); memoized as
+    (broadcast, pandas corpus or None).  The pandas copy only feeds the
+    audit-capped probe side, so uncapped sessions pin just the broadcast
+    handle."""
+    memo = session_memo(spark, "scorer_corpus")
+    audit = os.environ.get(TWIN_AUDIT_ENV)
+    cache_key = (key, sf_dir, audit)
+    if cache_key not in memo:
+        bc, bpdf = build()
+        memo[cache_key] = (bc, bpdf if audit else None)
+    return memo[cache_key]
 
 
 def guard_twin_size(df: DataFrame, key: str, production_key: str,
@@ -381,13 +358,10 @@ n AS (
 """
 
 
-# Probe matrix + sc.broadcast memoized per sf_dir ON the session object
-# (io.py's pattern): the probe set is constant for a given corpus, so the
-# bounded collect + broadcast happens once per session instead of on every
-# DataFrame construction (plan-lint sweeps, bench rebuilds — r05 review).
-_PROBE_ATTR = "_bigdatawork_cosine_probes"
-
-
+# Probe matrix + sc.broadcast memoized per sf_dir in the session memo:
+# the probe set is constant for a given corpus, so the bounded collect +
+# broadcast happens once per session instead of on every DataFrame
+# construction (plan-lint sweeps, bench rebuilds).
 def _cosine_probe_broadcast(spark, sf_dir, e):
     """Broadcast (probe_ids, probe_matrix, probe_norms) for vec_id ≤ 5,
     or None when the probe set is empty.
@@ -401,13 +375,7 @@ def _cosine_probe_broadcast(spark, sf_dir, e):
 
     import numpy as np
 
-    memo = getattr(spark, _PROBE_ATTR, None)
-    if memo is None:
-        memo = {}
-        try:
-            setattr(spark, _PROBE_ATTR, memo)
-        except Exception:
-            pass  # un-taggable session: degrade to re-collecting per call
+    memo = session_memo(spark, "cosine_probes")
     try:
         mtime = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
     except OSError:
@@ -711,10 +679,7 @@ def knn_classify(spark, sf_dir):
         )
 
     bc, bpdf = _corpus_broadcast(spark, "knn_classify", sf_dir, _build)
-    # round-robin spread (r16, guide §2.5): the embeddings scan is ONE
-    # parquet file at every bench SF — without it the whole quadratic
-    # scoring stage runs as a single task.
-    if "knn_classify" in TWIN_CAPS_APPLIED:
+    if bpdf is not None and "knn_classify" in TWIN_CAPS_APPLIED:
         # audit mode capped the input with limit(): that plan's row
         # selection is not guaranteed stable across jobs on multi-file
         # input, so derive the probe side from the SAME materialization
@@ -722,7 +687,8 @@ def knn_classify(spark, sf_dir):
         probe_src = spark.createDataFrame(bpdf, schema=sel.schema)
     else:
         probe_src = n
-    a = probe_src.repartition(spark.sparkContext.defaultParallelism).select(
+    # spread: otherwise the whole quadratic scoring stage is one task
+    a = spread_if_narrow(probe_src).select(
         F.col("vec_id").alias("src"), F.col("e").alias("ae"), F.col("nrm").alias("anrm")
     )
 
@@ -801,7 +767,7 @@ def _knn_classify_expr(spark, sf_dir):
     by nb)."""
     n = _normed_vectors(spark, sf_dir)
     n = guard_twin_size(n, "knn_classify", "knn_classify_ivf")
-    a = n.repartition(spark.sparkContext.defaultParallelism).select(
+    a = spread_if_narrow(n).select(
         F.col("vec_id").alias("src"), F.col("e").alias("ae"), F.col("nrm").alias("anrm")
     )
     b = n.select(
@@ -982,20 +948,9 @@ def tfidf_keywords(spark, sf_dir):
     cap = int(os.environ.get("SPARK_GRAFT_TFIDF_VOCAB_CAP", "1000000"))
 
     d = load(spark, sf_dir, "documents")
-    n_par = max(
-        d.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism
+    dd = restage(
+        spark, "tfidf_keywords", spread_if_narrow(d.select("doc_id", "text"))
     )
-    # Same bounded-lifetime discipline as minhash_pairs (ADVICE r10
-    # class): each call evicts the previous call's staged cache, so the
-    # bench loop's repeated invocations hold at most one cached relation.
-    global _TFIDF_STAGED_LAST
-    if _TFIDF_STAGED_LAST is not None:
-        try:
-            _TFIDF_STAGED_LAST.unpersist(blocking=False)
-        except Exception:
-            pass  # the old relation's session may already be stopped
-    dd = d.select("doc_id", "text").repartition(n_par).cache()
-    _TFIDF_STAGED_LAST = dd
     df_rows = (
         dd.select(
             F.explode(

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
+from ..session import spread_if_narrow
 from .llm_ops import (
     SCORER_BCAST_MAX_BYTES,
     TWIN_CAPS_APPLIED,
@@ -333,13 +334,13 @@ def dedup_embedding_cosine(spark, sf_dir):
         return spark.sparkContext.broadcast((ids, Bm, bnrm)), bpdf
 
     bc, bpdf = _corpus_broadcast(spark, "dedup_embedding_cosine", sf_dir, _build)
-    if "dedup_embedding_cosine" in TWIN_CAPS_APPLIED:
+    if bpdf is not None and "dedup_embedding_cosine" in TWIN_CAPS_APPLIED:
         # audit mode capped the input with limit(): derive the probe side
         # from the same materialization as the broadcast (ADVICE r16)
         probe_src = spark.createDataFrame(bpdf, schema=sel.schema)
     else:
         probe_src = n
-    a = probe_src.repartition(spark.sparkContext.defaultParallelism).select(
+    a = spread_if_narrow(probe_src).select(
         F.col("vec_id").alias("id_a"), F.col("e").alias("ae"), F.col("nrm").alias("anrm")
     )
 
@@ -652,17 +653,14 @@ def _kmeans(spark, sf_dir, k: int = 8, iters: int = 5):
         F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
     )
     cents = {
-        # (collected BEFORE the round-robin repartition below — the probe
-        # filter wants the 1-file scan's trivial plan)
+        # (collected BEFORE the spread below — the probe filter wants the
+        # scan's trivial plan)
         r["vec_id"]: list(r["v"])
         for r in e.filter(F.col("vec_id") <= k).collect()
     }
-    # the embeddings table is ONE parquet file at every bench SF — without
-    # this round-robin the per-round argmin map + partial aggregation run
-    # on a single core (guide §2.5/§2.6); the repartition shuffles only
-    # the slim (id, vector) relation (~10 MB at sf1.0) once per round's
-    # scan and the k×dim partial-agg output is unaffected
-    e = e.repartition(spark.sparkContext.defaultParallelism)
+    # spread the slim (id, vector) relation (~10 MB at sf1.0) so the
+    # per-round argmin map + partial aggregation are not one task
+    e = spread_if_narrow(e)
     sse_trace = []
     assign = None
     for _ in range(iters):
@@ -1420,20 +1418,17 @@ def multimodal_png_decode(spark, sf_dir):
 
     d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     # pmod for hash-derived (possibly negative) doc_ids — see
-    # multimodal_image_resize (r14 edge-corpus campaign)
-    # r17 (guide §2.5/§2.6): the 1-file documents scan ran the ENCODE
-    # stage — the pure-python zlib/filter loop, the expensive half of the
-    # key — as a single task; only decode was parallel (it sits behind
-    # the repartition exchange).  Round-robin the slim (doc_id, meta)
-    # rows first: 10.9 s → 3.4 s warm at sf1.0, same rows/hashes.
-    docs = d.select(
+    # multimodal_image_resize (r14 edge-corpus campaign).  Spread the slim
+    # (doc_id, meta) rows before the pure-python ENCODE stage, the
+    # expensive half of the key: 10.9 s → 3.4 s warm at sf1.0.
+    docs = spread_if_narrow(d.select(
         "doc_id",
         F.struct(
             (4 + F.pmod(F.col("doc_id") * 37, F.lit(29))).cast("long").alias("width"),
             (3 + F.pmod(F.col("doc_id") * 53, F.lit(23))).cast("long").alias("height"),
             F.lit("png").alias("format"),
         ).alias("meta"),
-    ).repartition(spark.sparkContext.defaultParallelism)
+    ))
 
     def encode(batches):
         for pdf in batches:
@@ -1555,14 +1550,11 @@ def nearest_centroid_classify(spark, sf_dir):
     form is unchanged in spirit (BLAS pandas UDF over broadcast
     centroids); the model stays model-artifact-sized."""
     e = load(spark, sf_dir, "embeddings")
-    # the synthetic embeddings table is ONE parquet file at every bench
-    # SF, so the scan is a single partition — round-robin the slim
-    # (id, label, vector) relation to core width first (a ~10 MB shuffle)
-    # or the whole interpreted scoring fold below runs on one core
-    # (guide §2.5 input skew / §2.6 idle capacity)
-    vecs = e.select(
+    # spread the slim (id, label, vector) relation (a ~10 MB shuffle) or
+    # the whole interpreted scoring fold below runs on one core
+    vecs = spread_if_narrow(e.select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    ).repartition(spark.sparkContext.defaultParallelism)
+    ))
     elems = vecs.select(
         "vec_id", "label", F.posexplode("v")
     ).select(

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
+from ..session import restage, spread_if_narrow
 
 
 @register(
@@ -56,12 +57,10 @@ def contamination_ngram(spark, sf_dir):
     words = d.select("doc_id", F.split("text", " ").alias("ws")).filter(
         F.size("ws") >= 5
     )
-    # r17 (guide §2.5/§2.6): `grams` is consumed by BOTH the bench and
-    # train branches, and the documents scan is one parquet file — both
-    # shingle explodes ran as single tasks.  Round-robin the compact
-    # word arrays first: 5.1-6.0 s → 2.2-2.5 s at sf1.0 (output
-    # pandas-equal; counts are keyed, fold-order-free).
-    words = words.repartition(spark.sparkContext.defaultParallelism)
+    # `grams` feeds BOTH the bench and train branches: spread the compact
+    # word arrays before the shingle explodes, 5.1-6.0 s → 2.2-2.5 s at
+    # sf1.0 (counts are keyed, fold-order-free).
+    words = spread_if_narrow(words)
     grams = words.select(
         "doc_id",
         F.explode(
@@ -606,15 +605,6 @@ def ngram_contamination(docs, n: int = 8):
 # global_row_index
 # ---------------------------------------------------------------------------
 
-# Bounded-lifetime cache for the range-id-assigned relation: it feeds both
-# the per-range count pass and the final projection.  Since ADVICE r11 the
-# range id is a deterministic expression over literal boundaries, so the
-# cache is purely a scan-sharing optimisation — an eviction-forced
-# recompute yields identical placement.  Returned-lazy DFs can't unpersist
-# in-function, so each call evicts the previous call's relation (the
-# minhash_pairs / tfidf_keywords lifetime pattern, ADVICE r10).
-_ROWIDX_STAGED_LAST = None
-
 _ROWIDX_PARTITIONS = 16
 
 
@@ -682,16 +672,9 @@ def global_row_index(spark, sf_dir):
     ).alias("pid")
     rng = li.select("l_orderkey", "l_linenumber", pid_expr)
 
-    global _ROWIDX_STAGED_LAST
-    if _ROWIDX_STAGED_LAST is not None:
-        try:
-            _ROWIDX_STAGED_LAST.unpersist(blocking=False)
-        except Exception:
-            pass  # the old relation's session may already be stopped
-    # Cache is a pure optimisation now (two consumers: counts + final
+    # Cache is a pure optimisation (two consumers: counts + final
     # projection) — an eviction-forced recompute yields identical pids.
-    rng = rng.cache()
-    _ROWIDX_STAGED_LAST = rng
+    rng = restage(spark, "global_row_index", rng)
 
     counts = rng.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).orderBy("pid")
     offsets, acc = [], 0
@@ -1120,12 +1103,11 @@ def dsir_importance_resample(spark, sf_dir):
     aggregation, TakeOrdered for the top-k — no all-pairs stage, no
     driver state beyond k rows."""
     d = load(spark, sf_dir, "documents")
-    # r17 (guide §2.5): spread the 1-file scan before the token explode
-    # so the cache fill — and the cached layout every downstream
-    # aggregate starts from — is core-wide, not a single partition.
+    # spread before the token explode so the cache fill — and the cached
+    # layout every downstream aggregate starts from — is core-wide.
     # Fold-order-safe: the per-doc sums are DECIMAL(28,12) by design.
     tokf = (
-        d.repartition(spark.sparkContext.defaultParallelism)
+        spread_if_narrow(d)
         .select("doc_id", "lang", F.explode(F.split("text", " ")).alias("word"))
         .filter(F.col("word") != "")
         .cache()

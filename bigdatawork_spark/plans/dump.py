@@ -26,7 +26,7 @@ HEADLINE_NOTES = {
     "win_time_tumbling": "tumbling window = plain groupBy on the bucketed ts; partial agg applies — shown cache-off with its Exchange; in the bench cache mode the query reads the hour-clustered events PROJECTION (io._PROJECTIONS, r16) and the plan is exchange-free (single stage, pinned by tests/test_plans.py::test_tumbling_hour_projection_is_exchange_free)",
     "wordcount": "explode→partial-agg; stopword skew handled by AQE at runtime",
     "sim_cosine_topk": "probe set broadcast; dot product folds JVM-side (no Python)",
-    "tfidf_keywords": "zero token-level shuffles (r7): vocab df via distinct-per-doc explode (map-side combined to |vocab| rows), dict sc.broadcast (capped), tf+score+top-3 inside one Arrow mapInPandas pass — the only exchange is the doc-row round-robin that restores scan parallelism",
+    "tfidf_keywords": "zero token-level shuffles (r7): vocab df via distinct-per-doc explode (map-side combined to |vocab| rows), dict sc.broadcast (capped), tf+score+top-3 inside one Arrow mapInPandas pass — the only exchange is the doc-row round-robin that restores scan parallelism, skipped when the input is already core-wide (cached/bench layout)",
 }
 
 
@@ -41,7 +41,7 @@ EXTRA_NOTES = {
     "dedup_ladder_exact_stage": "exact-dup pre-pass of the production ladder: sha256 group keys shuffle (64-byte keys, not documents), min-id representative window, deterministic replica injection for non-vacuous oracle",
     "winnow_fingerprint": "MOSS winnowing in ONE Window pass: repartition(doc_id) BEFORE the 27M-gram explode (spreads md5 hashing AND pre-satisfies the window partitioning — no exploded-row exchange), six lag/leads + rightmost-min reach predicate, no per-window expansion",
     "dedup_winnow_pairs": "winnowing stage 2: cached 16-byte fp rows, capped rare-fp bucket self-join (df in [2, min(4% docs, 64)]) — bounded pair fan-out per bucket, n_docs via 1-row broadcast fold",
-    "lm_perplexity_score": "corpus explodes ONCE into bigram pairs; model = two keyed aggs (grams+counts shuffles); scoring join per-bigram with the vocab size folded in as a 1-row broadcast",
+    "lm_perplexity_score": "corpus explodes ONCE into bigram pairs; model = two keyed aggs (grams+counts shuffles); scoring join per-bigram with the vocab size folded in as a 1-row broadcast; per-doc NLL is a DECIMAL sum divided once (layout-invariant)",
     "subquery_scalar_q17": "correlated scalar subquery, hand-decorrelated: ONE per-part aggregate joined back (AQE broadcasts it when small) — no per-row re-execution",
     "subquery_exists_q4": "EXISTS as LEFT SEMI join with mixed equi + non-equi date condition; semi join dedups multi-line matches without DISTINCT",
     "q10_returned_items": "both fact filters pushed to their scans; top-20 via TakeOrderedAndProject",
@@ -59,7 +59,7 @@ EXTRA_NOTES = {
     "mixture_resample": "per-source keep rates via broadcast 1-row-per-source aggregate; content-hash filter narrow over the fact side",
     "pipeline_curate_corpus": "4 chained façade stages collapse to one scan pass + single dedup shuffle (row_number on text) + final keyed agg",
     "session_paths": "one shuffle on user_id; both sessionizer windows + ordered path collect share the same sort — no re-exchange between windows",
-    "basket_pairs": "distinct (order,part) then a<b self-join on orderkey; pair fan-out bounded by basket size squared; AQE picks the join strategy",
+    "basket_pairs": "collect_set(partkey) per order is the distinct in ONE exchange keyed by orderkey; sorted-array triangular transform emits a<b pairs map-side (no self-join); only pair keys shuffle for the support count",
     "pattern_match_strict_seq": "fixed-length pattern = two lead() probes in ONE window pass; zero joins for MATCH_RECOGNIZE-style detection",
     "stats_winsorized": "exact percentile aggregate broadcasts clip bands back onto the scan; second pass clips + decimal-sums",
     "incremental_agg_merge": "two partial aggregates merged by re-aggregation — the mergeable-state plan that makes rollups delta-maintainable",

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime-settable confs applied to ANY session we are handed (the driver
 # owns its own session; these are safe to set post-creation).
@@ -62,26 +62,85 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Sentinel attribute set on the SparkSession OBJECT (not an id()-keyed
-# module set): after a stopped session is GC'd, CPython can recycle its id
-# for a new session, which would then silently skip tuning (ADVICE r03).
-# Tagging the object itself dies with the object, so aliasing is impossible.
-_TUNED_ATTR = "_bigdatawork_tuned"
-
-
 def ensure_tuned(spark: SparkSession) -> SparkSession:
     """tune() once per session — each conf.set is a py4j round trip, and the
     confs stick for the session's lifetime.  Used by io.load AND the
     __spark_entry__ query wrappers, so even a builder that synthesizes its
     data inline (no table load) runs under UTC/AQE/shuffle settings when the
     driver order puts it first."""
-    if not getattr(spark, _TUNED_ATTR, False):
+    memo = session_memo(spark, "tuned")
+    if not memo:
         tune(spark)
-        try:
-            setattr(spark, _TUNED_ATTR, True)
-        except Exception:
-            pass  # un-taggable session object: re-tune per call (idempotent)
+        memo["done"] = True
     return spark
+
+
+# The memo lives ON the SparkSession object, not in an id()-keyed module
+# dict: after a stopped session is GC'd, CPython can recycle its id for a
+# new session, which would then alias the dead session's state.
+# Object-attached state dies with the object.
+_MEMO_ATTR = "_bigdatawork_memo"
+
+
+def session_memo(spark: SparkSession, namespace: str) -> dict:
+    """The session-scoped dict for ``namespace`` — one per (session,
+    namespace), so namespaces never alias.  A session object that cannot
+    take an attribute gets a throwaway dict: callers then recompute per
+    call, which is always correct, just slower."""
+    memos = getattr(spark, _MEMO_ATTR, None)
+    if memos is None:
+        memos = {}
+        try:
+            setattr(spark, _MEMO_ATTR, memos)
+        except (AttributeError, TypeError):
+            return {}
+    return memos.setdefault(namespace, {})
+
+
+def restage(spark: SparkSession, slot: str, df: DataFrame) -> DataFrame:
+    """``df.cache()``, held in ``slot`` until the next restage of the same
+    slot unpersists it.  A builder that returns a lazy plan over a cache
+    cannot unpersist it itself, so the lifetime is bounded instead: each
+    call evicts the previous call's staged relation (repeated calls would
+    otherwise leak one cached relation each into executor storage).
+    The old occupant goes BEFORE the new cache is registered: unpersisting
+    after would drop the new entry too whenever both share a plan.  On an
+    un-taggable session nothing is evicted."""
+    memo = session_memo(spark, "restage")
+    old = memo.pop(slot, None)
+    if old is not None:
+        try:
+            old.unpersist(blocking=False)
+        except Exception:
+            pass  # the old relation's session may already be stopped
+    memo[slot] = df = df.cache()
+    return df
+
+
+def spread_if_narrow(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to ``defaultParallelism`` partitions when it has
+    fewer; otherwise return it unchanged.
+
+    The fixture tables are single-file parquet (``documents`` and
+    ``embeddings`` are one row group too), so their scans run as 1-3 tasks
+    and every explode, regexp or Python-UDF pass fed straight from them
+    runs on a core or two.  At 100 TB the same scan arrives in thousands
+    of splits, where an unconditional repartition would be a gratuitous
+    full exchange — hence the check.  Round-robin spreads rows, so it adds
+    no key skew; callers fold in a layout-independent way (keyed
+    aggregates, decimal sums).
+
+    Free only on an exchange-free input: ``getNumPartitions()`` plans the
+    RDD, which runs no job over a scan + project/filter/union or a filled
+    cache, but over an Exchange — including one under a not-yet-filled
+    cache — AQE materializes the shuffle stage: one job.  Every caller is
+    scan-fed, except the twins under the audit cap, whose input is
+    ``guard_twin_size``'s limit + repartition.
+    """
+    width = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < width:
+        return df.repartition(width)
+    return df
 
 
 def get_spark(app_name: str = "bigdatawork-spark", cpus: int | str | None = None) -> SparkSession:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
+from ..session import session_memo, spread_if_narrow
 
 _STREAM_ROOT = os.path.join(tempfile.gettempdir(), "bdw_stream")
 
@@ -52,30 +53,15 @@ def stamp_mtimes(src: str, order: int, stamped: set) -> None:
             os.utime(f, (t, t))
 
 
-# Default-source staging memo, ON the session object (io.py's pattern —
-# dies with the session, id-reuse-safe).  ~10 streaming keys stage the
-# IDENTICAL single-chunk copy of events; the staged dir is immutable
-# input (every query still computes from it with a fresh checkpoint), so
-# re-writing it per key was pure waste — measured 8.9 s cold / 2.1 s warm
-# per write at sf1.0, ~20 s/round across the streaming family (r16,
-# guide §1.2 "don't compute things you throw away").  Chunked callers
-# (batch-boundary-sensitive replays) keep fresh dirs.
-_SRC_MEMO_ATTR = "_bigdatawork_stream_src_memo"
-
-
-def _get_memo(spark):
-    memo = getattr(spark, _SRC_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        try:
-            setattr(spark, _SRC_MEMO_ATTR, memo)
-        except Exception:
-            memo = None  # un-taggable session: stage per call
-    return memo
-
-
+# Default-source staging memo (session_memo "stream_src").  ~10 streaming
+# keys stage the IDENTICAL single-chunk copy of events; the staged dir is
+# immutable input (every query still computes from it with a fresh
+# checkpoint), so re-writing it per key was pure waste — measured 8.9 s
+# cold / 2.1 s warm per write at sf1.0, ~20 s/round across the streaming
+# family (r16).  Chunked callers (batch-boundary-sensitive replays) keep
+# fresh dirs.
 def _memo_lookup(memo, key):
-    got = memo.get(key) if memo is not None else None
+    got = memo.get(key)
     # guard against cleanup()/tmp-reaper having removed the dir
     if got and glob.glob(os.path.join(got, "*.parquet")):
         return got
@@ -87,8 +73,8 @@ def _events_source_dir(spark, sf_dir, chunks: list | None = None) -> str:
     a fresh dir as one file per chunk predicate, in order.  The default
     (single catch-all chunk) staging is memoized per (session, sf_dir).
 
-    r17 (guide §2.6/§6): the default staging is written CORE-WIDTH (one
-    round-robin file per core) instead of ``coalesce(1)`` — the staged
+    r17: the default staging is written at least CORE-WIDTH
+    (``spread_if_narrow``) instead of ``coalesce(1)`` — the staged
     file set is the scan split plan for every downstream availableNow
     drain, and a single file made each consumer's scan a 1-task stage
     (sink_stream_memory's pass-through drain was 7.8-8.5 s at sf1.0 with
@@ -100,7 +86,7 @@ def _events_source_dir(spark, sf_dir, chunks: list | None = None) -> str:
     chunk — their file boundaries ARE the trigger boundaries."""
     memo = None
     if chunks is None:
-        memo = _get_memo(spark)
+        memo = session_memo(spark, "stream_src")
         got = _memo_lookup(memo, sf_dir)
         if got:
             return got
@@ -108,8 +94,7 @@ def _events_source_dir(spark, sf_dir, chunks: list | None = None) -> str:
     ev = load(spark, sf_dir, "events")
     stamped: set = set()
     if chunks is None:
-        width = spark.sparkContext.defaultParallelism
-        ev.repartition(width).write.mode("append").parquet(src)
+        spread_if_narrow(ev).write.mode("append").parquet(src)
         stamp_mtimes(src, 0, stamped)
     else:
         for i, pred in enumerate(chunks):
@@ -130,7 +115,7 @@ def _sentinel_events_source_dir(spark, sf_dir) -> str:
     the default staging (r17, guide §1.2 — every query still computes
     from it with a fresh checkpoint).  The events chunk stays ONE file:
     it must land in one trigger under maxFilesPerTrigger=1."""
-    memo = _get_memo(spark)
+    memo = session_memo(spark, "stream_src")
     key = (sf_dir, "__sentinel__")
     got = _memo_lookup(memo, key)
     if got:
@@ -148,8 +133,7 @@ def _sentinel_events_source_dir(spark, sf_dir) -> str:
             " CAST(0.0 AS DOUBLE) AS value, '{}' AS props"
         ).coalesce(1).write.mode("append").parquet(src)
         stamp_mtimes(src, i + 1, stamped)
-    if memo is not None:
-        memo[key] = src
+    memo[key] = src
     return src
 
 

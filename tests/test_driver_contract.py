@@ -504,8 +504,7 @@ def test_entry_queries_tune_a_foreign_session(spark):
     # UTC even if the collect fails — otherwise every later test in the
     # shared session runs under the wrong timezone (ADVICE r03).
     try:
-        if hasattr(spark, sess._TUNED_ATTR):
-            delattr(spark, sess._TUNED_ATTR)
+        sess.session_memo(spark, "tuned").clear()
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
         q = entry_mod.queries()
         # source_inline synthesizes data without loading any corpus table

@@ -451,6 +451,7 @@ def test_tumbling_hour_projection_is_exchange_free(spark, sf_dir, monkeypatch):
     the untimed InMemoryRelation fill).  Values must be identical to the
     non-cache path row-for-row."""
     from bigdatawork_spark.io import drop_tables
+    from bigdatawork_spark.session import session_memo
 
     # non-cache reference rows (the driver-correctness path)
     ref = sorted(
@@ -468,7 +469,7 @@ def test_tumbling_hour_projection_is_exchange_free(spark, sf_dir, monkeypatch):
         assert got == ref
         # the projection is a SECOND cache entry, keyed separately from the
         # primary layout — both must be resident and sf-scoped for eviction
-        store = getattr(spark, "_bigdatawork_table_cache", None) or {}
+        store = session_memo(spark, "table_cache")
         assert any(len(k) == 3 and k[2] == "hour" for k in store), list(store)
     finally:
         drop_tables(spark, sf_dir)

@@ -1,0 +1,279 @@
+"""The session primitives in ``session.py`` — ``session_memo``, ``restage``
+and ``spread_if_narrow`` — and the properties every builder built on them
+must keep: a spread launches no Spark job, is skipped on an input that is
+already wide, and never changes a result (the order-insensitive canonical
+hash of ``tests/compare.py`` is identical with the spread removed or
+forced to an unrelated width).
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+import uuid
+
+import pytest
+
+from bigdatawork_spark import session
+from bigdatawork_spark.operators import (
+    corpus_ops,
+    curation,
+    llm_ops,
+    pipeline_ops,
+    training_ops,
+)
+from bigdatawork_spark.plans.explain import plan_string
+from bigdatawork_spark.registry import ORACLES, QUERIES
+from bigdatawork_spark.schemas import TABLES
+from bigdatawork_spark.session import restage, session_memo, spread_if_narrow
+from bigdatawork_spark.streaming import stream_ops
+from tests.compare import canon_rows
+
+#: Every module that calls the spread helper (pinned below, so a new
+#: call site cannot dodge the monkeypatched runs).
+_SPREAD_MODULES = (corpus_ops, curation, llm_ops, pipeline_ops, training_ops,
+                   stream_ops)
+
+#: One builder per spread call site.
+SPREAD_BUILDERS = {
+    "knn_classify": QUERIES["knn_classify"],
+    "_knn_classify_expr": llm_ops._knn_classify_expr,
+    "tfidf_keywords": QUERIES["tfidf_keywords"],
+    "dedup_ngram_jaccard": QUERIES["dedup_ngram_jaccard"],
+    "dedup_incremental_exact": QUERIES["dedup_incremental_exact"],
+    "contamination_ngram": QUERIES["contamination_ngram"],
+    "dsir_importance_resample": QUERIES["dsir_importance_resample"],
+    "dedup_embedding_cosine": QUERIES["dedup_embedding_cosine"],
+    "kmeans_iterative": QUERIES["kmeans_iterative"],
+    "multimodal_png_decode": QUERIES["multimodal_png_decode"],
+    "nearest_centroid_classify": QUERIES["nearest_centroid_classify"],
+    "char_ngram_profile": QUERIES["char_ngram_profile"],
+    "lm_perplexity_score": QUERIES["lm_perplexity_score"],
+    "stream_complete_topk": QUERIES["stream_complete_topk"],
+}
+
+#: Batch builders whose returned plan carries the spread.
+_PLAN_BUILDERS = sorted(set(SPREAD_BUILDERS) - {"stream_complete_topk"})
+
+#: Hash-verified builders (_knn_classify_expr is knn_classify's
+#: oracle-parity twin).
+_HASHED_BUILDERS = sorted(
+    k for k in SPREAD_BUILDERS if k in ORACLES or k == "_knn_classify_expr"
+)
+
+
+def _forget_stagings(spark):
+    """Drop the staged inputs a previous run left behind, so the next run
+    re-stages them under whatever spread is patched in."""
+    hashed = session_memo(spark, "hashed_documents")
+    for per in hashed.values():
+        for df in per.values():
+            df.unpersist()
+    hashed.clear()
+    session_memo(spark, "stream_src").clear()
+
+
+def _patch_spread(monkeypatch, fn):
+    for mod in _SPREAD_MODULES:
+        monkeypatch.setattr(mod, "spread_if_narrow", fn)
+
+
+# ---------------------------------------------------------------------------
+# session_memo
+
+
+def test_session_memo_namespaces_do_not_alias(spark):
+    ns_a, ns_b = f"t-a-{uuid.uuid4().hex}", f"t-b-{uuid.uuid4().hex}"
+    a, b = session_memo(spark, ns_a), session_memo(spark, ns_b)
+    a["k"] = 1
+    assert "k" not in b and a is not b
+    # same namespace, same dict: the memo persists across calls
+    assert session_memo(spark, ns_a) is a
+
+
+def test_session_memo_untaggable_session_gets_throwaway_dict():
+    class Frozen:
+        __slots__ = ()
+
+    s = Frozen()
+    m1 = session_memo(s, "ns")
+    m1["k"] = 1
+    m2 = session_memo(s, "ns")
+    assert m2 == {} and m2 is not m1  # recompute-per-call fallback
+
+
+def test_session_memo_is_per_session():
+    class Session:
+        pass
+
+    s1, s2 = Session(), Session()
+    session_memo(s1, "ns")["k"] = 1
+    assert session_memo(s2, "ns") == {}
+
+
+# ---------------------------------------------------------------------------
+# restage
+
+
+def test_restage_unpersists_the_previous_occupant(spark):
+    slot = f"t-{uuid.uuid4().hex}"
+    first = restage(spark, slot, spark.range(10).selectExpr("id * 2 AS x"))
+    assert first.count() == 10
+    assert first.storageLevel.useMemory or first.storageLevel.useDisk
+    second = restage(spark, slot, spark.range(20).selectExpr("id * 3 AS x"))
+    assert second.count() == 20
+    lvl = first.storageLevel
+    assert not (lvl.useMemory or lvl.useDisk or lvl.useOffHeap)  # NONE
+    assert second.storageLevel.useMemory or second.storageLevel.useDisk
+    # slots are independent: another slot's restage leaves this one cached
+    other = restage(spark, slot + "-other", spark.range(5))
+    assert second.storageLevel.useMemory or second.storageLevel.useDisk
+    for df in (second, other):
+        df.unpersist()
+
+
+def test_restage_same_plan_twice_stays_cached(spark):
+    """Evict-then-cache order: restaging an identical plan must not leave
+    the slot uncached (unpersist-after would drop the shared entry)."""
+    slot = f"t-{uuid.uuid4().hex}"
+    restage(spark, slot, spark.range(7).selectExpr("id + 1 AS y"))
+    again = restage(spark, slot, spark.range(7).selectExpr("id + 1 AS y"))
+    assert again.count() == 7
+    assert again.storageLevel.useMemory or again.storageLevel.useDisk
+    again.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# spread_if_narrow
+
+
+def test_spread_if_narrow_widens_a_one_partition_scan(spark, tmp_path):
+    dp = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "one")
+    spark.range(100).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() < dp
+    out = spread_if_narrow(scan)
+    assert out.rdd.getNumPartitions() == dp
+    assert "RoundRobinPartitioning" in plan_string(out)
+    assert sorted(r.id for r in out.collect()) == list(range(100))
+
+
+def test_spread_if_narrow_leaves_a_wide_leaf_unchanged(spark):
+    dp = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 100, numPartitions=2 * dp)
+    out = spread_if_narrow(wide)
+    assert out is wide
+    assert "RoundRobinPartitioning" not in plan_string(out)
+
+
+def test_spread_if_narrow_launches_no_job_on_a_scan(spark, tmp_path):
+    path = str(tmp_path / "scan")
+    spark.range(50).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path).selectExpr("id * 2 AS x").filter("x > 3")
+    sc = spark.sparkContext
+    group = f"spread-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "spread_if_narrow probe")
+    try:
+        spread_if_narrow(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_spread_modules_are_pinned():
+    callers = {
+        name for name, mod in sys.modules.items()
+        if name.startswith("bigdatawork_spark.") and mod is not session
+        and getattr(mod, "spread_if_narrow", None) is session.spread_if_narrow
+    }
+    assert callers == {m.__name__ for m in _SPREAD_MODULES}
+
+
+@pytest.mark.parametrize("key", sorted(SPREAD_BUILDERS))
+def test_builder_spread_launches_no_job(spark, sf_dir, monkeypatch, key):
+    """Every spread call site feeds the helper an exchange-free input, so
+    its partition-count check costs zero Spark jobs."""
+    sc = spark.sparkContext
+    calls = []
+
+    def counted(df):
+        group = f"spread-{uuid.uuid4().hex}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, f"spread_if_narrow in {key}")
+        try:
+            out = spread_if_narrow(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        calls.append(list(sc.statusTracker().getJobIdsForGroup(group)))
+        return out
+
+    _forget_stagings(spark)
+    _patch_spread(monkeypatch, counted)
+    SPREAD_BUILDERS[key](spark, sf_dir)
+    assert calls, f"{key} no longer reaches spread_if_narrow"
+    assert all(jobs == [] for jobs in calls), calls
+
+
+@pytest.mark.parametrize("key", _HASHED_BUILDERS)
+def test_builder_result_is_layout_invariant(spark, sf_dir, monkeypatch, key):
+    """Same canonical hash with the spread removed (the raw 1-file scan
+    layout) and forced to an unrelated width."""
+    used = []
+
+    def identity(df):
+        used.append("identity")
+        return df
+
+    def forced(df):
+        used.append("forced")
+        return df.repartition(7)
+
+    rows = []
+    for fn in (identity, forced):
+        _forget_stagings(spark)
+        _patch_spread(monkeypatch, fn)
+        rows.append(canon_rows(SPREAD_BUILDERS[key](spark, sf_dir).toPandas()))
+    _forget_stagings(spark)
+    assert {"identity", "forced"} <= set(used), f"{key} never spread"
+    assert rows[0] == rows[1], f"{key}: result depends on partition layout"
+
+
+@pytest.fixture(scope="module")
+def presplit_dir(spark, sf_dir, tmp_path_factory):
+    """sf_dir with the two single-file tables rewritten as 2×cores files;
+    the rest symlinked."""
+    out = tmp_path_factory.mktemp("presplit")
+    width = 2 * spark.sparkContext.defaultParallelism
+    for t in TABLES:
+        src = os.path.join(sf_dir, f"{t}.parquet")
+        dst = str(out / f"{t}.parquet")
+        if t in ("documents", "embeddings"):
+            spark.read.parquet(src).repartition(width).write.parquet(dst)
+        else:
+            os.symlink(src, dst)
+    return str(out)
+
+
+@pytest.mark.parametrize("key", _PLAN_BUILDERS)
+def test_builder_spreads_only_narrow_inputs(spark, sf_dir, presplit_dir, key):
+    """Over the 1-file fixtures the uncached plan keeps its spread; over a
+    pre-split input (one file per partition) none is added."""
+    dp = spark.sparkContext.defaultParallelism
+    _forget_stagings(spark)
+    assert "RoundRobinPartitioning" in plan_string(
+        SPREAD_BUILDERS[key](spark, sf_dir)
+    ), key
+    # one partition per file, so the pre-split scans are ≥ dp wide
+    prev = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 30))
+    try:
+        assert spark.read.parquet(
+            os.path.join(presplit_dir, "documents.parquet")
+        ).rdd.getNumPartitions() >= dp
+        _forget_stagings(spark)
+        plan = plan_string(SPREAD_BUILDERS[key](spark, presplit_dir))
+    finally:
+        spark.conf.set("spark.sql.files.openCostInBytes", prev)
+        _forget_stagings(spark)
+    assert "RoundRobinPartitioning" not in plan, key

@@ -318,6 +318,19 @@ def test_vacuum_with_empty_history(spark, sf_dir):
         t.read(1)
 
 
+def test_python_stream_source_over_an_empty_manifest(spark, sf_dir, monkeypatch):
+    """source_python_stream over a manifest log with no commits must
+    return an empty, well-typed frame.  Spark 4.1 still fires one empty
+    micro-batch on an empty log, and its empty write leaves a schema-only
+    parquet file, so the read-back of the drain dir keeps its schema."""
+    from bigdatawork_spark.registry import QUERIES
+
+    monkeypatch.setattr(ManifestTable, "append", lambda self, df, *a, **k: 0)
+    want = "struct<event_type:string,n_rows:bigint,sum_value:double>"
+    out = QUERIES["source_python_stream"](spark, sf_dir)
+    assert out.collect() == [] and out.schema.simpleString() == want
+
+
 def test_pre_ledger_tables_heal_and_reserved_names_raise(spark, sf_dir):
     """r14 third-review: tables written before the txn ledger existed
     (manifests lack 'txn') regain replay idempotence at the first
