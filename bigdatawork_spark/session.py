@@ -4,6 +4,16 @@ Scale notes (SURVEY.md §7.5): everything here is configuration, not code —
 the same queries run on a 1000-executor cluster by swapping the master URL
 and sizing ``spark.sql.shuffle.partitions`` to ~2-3× total cores.  AQE then
 coalesces/splits at runtime.  Locally we test on ``local[N]``.
+
+Python workers: ``get_spark`` starts them from ``pyworker_daemon``, not
+pyspark's stock daemon.  Workers are reused, yet each task stalled
+130-440 ms before its UDF loaded: pyspark's per-task
+``importlib.invalidate_caches()`` made every ``zipimporter`` re-read its
+archive's central directory (``pyspark.zip``, py4j, the spark-core jar).
+The package daemon skips the re-read of an unchanged archive.  Measured on
+4 cores: a trivial 8-partition ``mapInPandas`` went from 0.78-0.97 s to
+0.29-0.36 s.  The daemon module is a static conf, so a session not built
+here (one handed to ``tune``) keeps the stall.
 """
 
 from __future__ import annotations
@@ -143,6 +153,12 @@ def spread_if_narrow(df: DataFrame) -> DataFrame:
     return df
 
 
+def _worker_pythonpath() -> str:
+    """The checkout root, ahead of any inherited ``PYTHONPATH``."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.pathsep.join(filter(None, (root, os.environ.get("PYTHONPATH"))))
+
+
 def get_spark(app_name: str = "bigdatawork-spark", cpus: int | str | None = None) -> SparkSession:
     """One tuned local session.  Session startup is ~12 s (BASELINE.md) —
     always share a single session across a test run / bench batch."""
@@ -165,6 +181,11 @@ def get_spark(app_name: str = "bigdatawork-spark", cpus: int | str | None = None
         # (BASELINE.md r12); a long-lived cluster session wants the same —
         # recurring shapes should never recompile.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        # STATIC confs: Python workers fork from the package's daemon (see
+        # pyworker_daemon.py and the module docstring), which starts in the
+        # JVM's cwd, so the checkout root rides on the workers' PYTHONPATH.
+        .config("spark.python.daemon.module", "bigdatawork_spark.pyworker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

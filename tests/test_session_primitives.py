@@ -3,18 +3,24 @@ and ``spread_if_narrow`` — and the properties every builder built on them
 must keep: a spread launches no Spark job, is skipped on an input that is
 already wide, and never changes a result (the order-insensitive canonical
 hash of ``tests/compare.py`` is identical with the spread removed or
-forced to an unrelated width).
+forced to an unrelated width).  Also the Python-worker daemon every
+``get_spark`` session starts its workers from: it re-reads a zip archive
+only when the archive changed, and the workers find it from any cwd.
 """
 
 from __future__ import annotations
 
+import importlib
 import os
+import subprocess
 import sys
 import uuid
+import zipfile
+import zipimport
 
 import pytest
 
-from bigdatawork_spark import session
+from bigdatawork_spark import pyworker_daemon, session
 from bigdatawork_spark.operators import (
     corpus_ops,
     curation,
@@ -277,3 +283,94 @@ def test_builder_spreads_only_narrow_inputs(spark, sf_dir, presplit_dir, key):
         spark.conf.set("spark.sql.files.openCostInBytes", prev)
         _forget_stagings(spark)
     assert "RoundRobinPartitioning" not in plan, key
+
+
+# ---------------------------------------------------------------------------
+# the Python-worker daemon
+
+
+def test_unchanged_zip_is_not_reread_on_invalidate(tmp_path, monkeypatch):
+    """``pyworker_daemon.invalidate_caches`` re-reads an archive's directory
+    only when its (mtime, size) changed since the last read — and then the
+    archive's new modules import."""
+    archive = str(tmp_path / "mods.zip")
+    first, second = (f"zipmod_{uuid.uuid4().hex}" for _ in range(2))
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr(f"{first}.py", "X = 1\n")
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        pyworker_daemon.invalidate_caches)
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counted(path):
+        reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counted)
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module(first).X == 1
+        importlib.invalidate_caches()
+        seen = reads.count(archive)
+        assert seen >= 1
+        for _ in range(3):
+            importlib.invalidate_caches()
+        assert reads.count(archive) == seen  # unchanged: no re-read
+
+        with zipfile.ZipFile(archive, "w") as z:  # grows: size differs
+            z.writestr(f"{first}.py", "X = 1\n")
+            z.writestr(f"{second}.py", "Y = 2\n")
+        importlib.invalidate_caches()
+        assert reads.count(archive) == seen + 1
+        assert importlib.import_module(second).Y == 2
+    finally:
+        for name in (first, second):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_python_workers_fork_from_the_package_daemon(spark):
+    def patched_by(batches):
+        import zipimport
+
+        for pdf in batches:
+            yield pdf.assign(
+                by=zipimport.zipimporter.invalidate_caches.__module__
+            )[["by"]]
+
+    rows = spark.range(0, 64, numPartitions=4).mapInPandas(
+        patched_by, "by string"
+    ).distinct().collect()
+    assert [r.by for r in rows] == [pyworker_daemon.__name__]
+
+
+_OUTSIDE_CHECKOUT = """
+import sys
+sys.path.insert(0, {root!r})
+import pandas as pd
+from pyspark.sql.functions import pandas_udf
+from bigdatawork_spark.session import get_spark
+
+spark = get_spark("outside-checkout", cpus=2)
+
+@pandas_udf("long")
+def plus_one(s: pd.Series) -> pd.Series:
+    return s + 1
+
+print("SUM", spark.range(10).select(plus_one("id").alias("v")).groupBy().sum("v").first()[0])
+spark.stop()
+"""
+
+
+def test_workers_find_the_package_from_outside_the_checkout(tmp_path):
+    """A session started from another cwd, with the package reachable
+    only through a ``sys.path`` insert, still runs Python UDFs: the
+    workers' daemon module is found via ``spark.executorEnv.PYTHONPATH``."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    done = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_CHECKOUT.format(root=root)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "SUM 55" in done.stdout.splitlines(), done.stderr[-3000:]

@@ -6,17 +6,18 @@ Usage: python tools/drive_driver.py [N]        # first N keys of queries() order
 (vendored from the /verify skill recipe; the driver runs ~50 keys/round)
 """
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import __spark_entry__ as E
 from pyspark.sql import SparkSession
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-SF_DIR = __import__("os").environ.get("SPARK_GRAFT_SIM_SF", "/root/testdata/sf0.01")
+SF_DIR = os.environ.get("SPARK_GRAFT_SIM_SF", "/root/testdata/sf0.01")
 CONTRACT_SF_DIR = "/root/testdata/sf0.01"
 try:
     from bigdatawork_spark.registry import ORACLE_FIXED_SF as FIXED_SF_ORACLE_KEYS
