@@ -1106,11 +1106,12 @@ def dsir_importance_resample(spark, sf_dir):
     # spread before the token explode so the cache fill — and the cached
     # layout every downstream aggregate starts from — is core-wide.
     # Fold-order-safe: the per-doc sums are DECIMAL(28,12) by design.
-    tokf = (
+    tokf = restage(
+        spark,
+        "dsir_importance_resample",
         spread_if_narrow(d)
         .select("doc_id", "lang", F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .cache()
+        .filter(F.col("word") != ""),
     )
     tgt_freq = (
         tokf.filter(F.col("lang") == "en")

@@ -5,8 +5,9 @@ windowing LOGIC is hash-verified through the batch twins in
 ``operators/windows.py`` (SURVEY §2-I evidence note).
 
 Test harness pattern (§5.3 / §3.3): file-source replay of events parquet →
-``trigger(availableNow=True)`` → memory sink → ``awaitTermination`` →
-return the final static table.  Checkpoints live in fresh /tmp dirs so
+``trigger(availableNow=True)`` → ``_drain_to_parquet`` (a foreachBatch
+sink writing each micro-batch executor-side) → read the parquet back as
+the final static table.  Checkpoints live in fresh /tmp dirs so
 reruns never resume stale state.  At scale: same code with a real source
 (Kafka/files), RocksDB state store, and a durable checkpoint dir.
 """
@@ -14,6 +15,7 @@ reruns never resume stale state.  At scale: same code with a real source
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 import tempfile
@@ -145,52 +147,52 @@ def _read_stream(spark: SparkSession, src: str, max_files: int | None = None):
     return reader.parquet(src)
 
 
-def _drain_to_parquet(sdf, tag: str, output_mode: str = "append"):
-    """availableNow drain through a foreachBatch parquet sink — the
-    high-volume alternative to ``_drain_to_memory`` (r16, guide §5 "the
-    driver should do almost no data work"): the memory sink collects
-    every batch row into DRIVER memory and the result is then scanned
-    from a LocalTableScan, which serialized ~1M-row pass-through results
-    row by row (A/B at sf1.0: stream_static_join drain 11.8 s → 2.8 s);
-    foreachBatch writes batch rows executor-side in parallel and the
-    result reads back as ordinary parquet.  Same rows, same modes, same
-    checkpoint discipline — only the sink I/O path changes.  Returns the
-    read-back DataFrame (schema preserved even when the stream emits
-    zero rows)."""
+def _drain_to_parquet(
+    sdf,
+    tag: str,
+    output_mode: str = "append",
+    chk: str | None = None,
+    progress: list | None = None,
+):
+    """Drain an availableNow stream through a foreachBatch parquet sink and
+    return the result read back as a static DataFrame — the one drain every
+    availableNow key uses.  A memory sink collects every row into DRIVER
+    memory, serves it from a LocalTableScan row by row (r16, sf1.0:
+    stream_static_join 11.8 s there vs 2.8 s here) and leaves a temp view
+    pinning the rows until the session ends; foreachBatch writes each batch
+    executor-side in parallel and registers nothing.
+
+    ``complete`` mode re-emits the full result every trigger, so each batch
+    overwrites the last (as the memory sink clears its batches); every other
+    mode appends.  ``chk`` shares a checkpoint across queries (restart);
+    ``progress``, when given, is refilled with the query's
+    ``recentProgress`` records.  The schema is preserved even when the
+    stream emits zero rows."""
     out = _fresh_dir(f"out-{tag}")
+    mode = "overwrite" if output_mode == "complete" else "append"
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
+        batch_df.write.mode(mode).parquet(out)
 
     q = (
         sdf.writeStream.foreachBatch(_write)
         .outputMode(output_mode)
-        .option("checkpointLocation", _fresh_dir(f"chk-{tag}"))
+        .option("checkpointLocation", chk or _fresh_dir(f"chk-{tag}"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    if progress is not None:
+        progress[:] = [json.loads(p.json) for p in q.recentProgress]
     spark = sdf.sparkSession
     if not glob.glob(os.path.join(out, "*.parquet")):
         return spark.createDataFrame([], sdf.schema)
     return spark.read.schema(sdf.schema).parquet(out)
 
 
-def _drain_to_memory(sdf, name: str, output_mode: str = "append") -> None:
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", _fresh_dir(f"chk-{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 @register("source_stream_file")
 def source_stream_file(spark, sf_dir):
-    """File-based streaming source over an events parquet dir → memory."""
+    """File-based streaming source over an events parquet dir → parquet."""
     src = _events_source_dir(spark, sf_dir)
     sdf = _read_stream(spark, src).filter(F.col("event_type") == "purchase")
     out = _drain_to_parquet(sdf, "srcfile")
@@ -229,7 +231,14 @@ def sink_stream_memory(spark, sf_dir):
     src = _events_source_dir(spark, sf_dir)
     sdf = _read_stream(spark, src).select("event_id", "user_id", "event_type")
     name = f"t_{uuid.uuid4().hex[:8]}"
-    _drain_to_memory(sdf, name)
+    (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", _fresh_dir(f"chk-{name}"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     return spark.table(name).orderBy("event_id")
 
 
@@ -239,26 +248,8 @@ def sink_stream_foreachbatch(spark, sf_dir):
     sink dir is read back as the result (the escape hatch for arbitrary
     batch sinks)."""
     src = _events_source_dir(spark, sf_dir)
-    out = _fresh_dir("fb-out")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out)
-        )
-
     sdf = _read_stream(spark, src).select("event_id", "user_id", "value")
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", _fresh_dir("chk-fb"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out).select("event_id", "user_id", "value").orderBy(
-        "event_id"
-    )
+    return _drain_to_parquet(sdf, "fb").orderBy("event_id")
 
 
 @register("stream_tumbling")
@@ -275,10 +266,8 @@ def stream_tumbling(spark, sf_dir):
             F.round(F.sum("value"), 6).alias("total_value"),
         )
     )
-    name = f"t_{uuid.uuid4().hex[:8]}"
-    _drain_to_memory(sdf, name, output_mode="update")
     return (
-        spark.table(name)
+        _drain_to_parquet(sdf, "tumbling", output_mode="update")
         .select(
             F.col("w.start").alias("window_start"),
             "event_type",
@@ -310,10 +299,8 @@ def stream_watermark_late(spark, sf_dir):
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"t_{uuid.uuid4().hex[:8]}"
-    _drain_to_memory(sdf, name, output_mode="append")
     return (
-        spark.table(name)
+        _drain_to_parquet(sdf, "wmlate")
         .select(F.col("w.start").alias("window_start"), "n_events")
         .orderBy("window_start")
     )
@@ -384,7 +371,6 @@ def stream_stateful_count(spark, sf_dir):
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    name = f"t_{uuid.uuid4().hex[:8]}"
     # r16 (guide §2.6 idle capacity): the per-group pandas dispatch is the
     # cost here (~15k groups, one Python worker per state partition), and
     # the session default of 8 shuffle partitions left 3/4 of the cores
@@ -398,10 +384,10 @@ def stream_stateful_count(spark, sf_dir):
         str(spark.sparkContext.defaultParallelism),
     )
     try:
-        _drain_to_memory(sdf, name, output_mode="update")
+        out = _drain_to_parquet(sdf, "stateful", output_mode="update")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name).orderBy("user_id")
+    return out.orderBy("user_id")
 
 
 @register("stream_static_join")
@@ -464,9 +450,7 @@ def stream_stream_join(spark, sf_dir):
         & (F.col("ts_b") > F.col("ts_a"))
         & (F.col("ts_b") <= F.col("ts_a") + F.expr("INTERVAL 10 MINUTES")),
     ).select("first_id", "second_id", "user_id")
-    name = f"t_{uuid.uuid4().hex[:8]}"
-    _drain_to_memory(joined, name)
-    return spark.table(name).orderBy("first_id", "second_id")
+    return _drain_to_parquet(joined, "ssjoin").orderBy("first_id", "second_id")
 
 
 @register("stream_stream_left_join")
@@ -509,10 +493,8 @@ def stream_stream_left_join(spark, sf_dir):
         & (F.col("ts_b") <= F.col("ts_a") + F.expr("INTERVAL 10 MINUTES")),
         "leftOuter",
     ).select("first_id", "user_id", "second_id")
-    name = f"t_{uuid.uuid4().hex[:8]}"
-    _drain_to_memory(joined, name)
     return (
-        spark.table(name)
+        _drain_to_parquet(joined, "ssleft")
         .filter(F.col("user_id") >= 0)
         .orderBy("first_id", "second_id")
     )
@@ -548,7 +530,6 @@ def stream_stateful_tws(spark, sf_dir):
     import pandas as pd
 
     src = _events_source_dir(spark, sf_dir)
-    name = f"t_{uuid.uuid4().hex[:8]}"
     try:
         # Availability probe: the exact import the transformWithState
         # driver worker needs; ImportError here == guaranteed crash there.
@@ -599,15 +580,13 @@ def stream_stateful_tws(spark, sf_dir):
                     timeMode="None",
                 )
             )
-            _drain_to_memory(sdf, name, output_mode="update")
-            return spark.table(name).orderBy("user_id")
+            out = _drain_to_parquet(sdf, "tws", output_mode="update")
+            return out.orderBy("user_id")
         finally:
             spark.conf.set(prov_key, prev_provider)
     except Exception:
         # fallback: classic arbitrary-state API, same semantics
-        return stream_stateful_count.__wrapped__(spark, sf_dir) if hasattr(
-            stream_stateful_count, "__wrapped__"
-        ) else stream_stateful_count(spark, sf_dir)
+        return stream_stateful_count(spark, sf_dir)
 
 
 @register("stream_sliding")
@@ -624,10 +603,8 @@ def stream_sliding(spark, sf_dir):
             F.round(F.sum("value"), 6).alias("total_value"),
         )
     )
-    name = f"t_{uuid.uuid4().hex[:8]}"
-    _drain_to_memory(sdf, name, output_mode="update")
     return (
-        spark.table(name)
+        _drain_to_parquet(sdf, "sliding", output_mode="update")
         .select(
             F.col("w.start").alias("window_start"),
             "event_type",
@@ -711,9 +688,9 @@ def stream_union_sources(spark, sf_dir):
             .alias("total_value"),
         )
     )
-    name = f"t_{uuid.uuid4().hex[:8]}"
-    _drain_to_memory(sdf, name, output_mode="complete")
-    return spark.table(name).orderBy("event_type")
+    return _drain_to_parquet(sdf, "union", output_mode="complete").orderBy(
+        "event_type"
+    )
 
 
 @register(
@@ -746,9 +723,8 @@ def stream_complete_topk(spark, sf_dir):
         .orderBy(F.col("total_value").desc(), "user_id")
         .limit(10)
     )
-    name = f"t_{uuid.uuid4().hex[:8]}"
-    _drain_to_memory(sdf, name, output_mode="complete")
-    return spark.table(name).orderBy(F.col("total_value").desc(), "user_id")
+    out = _drain_to_parquet(sdf, "topk", output_mode="complete")
+    return out.orderBy(F.col("total_value").desc(), "user_id")
 
 
 @register(
@@ -846,12 +822,6 @@ def stream_curate_to_table(spark, sf_dir):
     )
 
 
-# --- folded from the round-11b module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
-
-# ---------------------------------------------------------------------------
-
-
 @register("stream_restart_checkpoint", streaming=True)
 def stream_restart_checkpoint(spark, sf_dir):
     """Exactly-once across a planned restart: a per-user purchase count
@@ -864,53 +834,31 @@ def stream_restart_checkpoint(spark, sf_dir):
     preemptions; rows-only at the driver (wall-clock source lifecycle),
     value-pinned by tests/test_round11b.py::
     test_stream_restart_checkpoint_exactly_once."""
-    from ..streaming.stream_ops import _events_source_dir, _fresh_dir
-
     ev = load(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     cut = ev.agg(F.percentile_approx("event_id", 0.5)).collect()[0][0]
     src = _events_source_dir(
         spark, sf_dir, chunks=[F.col("event_id") <= F.lit(cut)]
     )
     chk = _fresh_dir("chk-restart")
-    name = f"t_{uuid.uuid4().hex[:8]}"
-
-    def start(query_name):
-        sdf = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .parquet(src)
-            .filter(F.col("event_type") == "purchase")
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_purchases"))
-        )
-        return (
-            sdf.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    q1 = start(name)
-    q1.awaitTermination()
-    q1.stop()
+    sdf = (
+        _read_stream(spark, src)
+        .filter(F.col("event_type") == "purchase")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_purchases"))
+    )
+    _drain_to_parquet(sdf, "restart", output_mode="complete", chk=chk)
 
     # the source grows AFTER the first query finished and stopped
     ev.filter(F.col("event_id") > F.lit(cut)).coalesce(1).write.mode(
         "append"
     ).parquet(src)
 
-    name2 = f"t_{uuid.uuid4().hex[:8]}"
-    q2 = start(name2)
-    q2.awaitTermination()
-    q2.stop()
-    return spark.table(name2).orderBy("user_id")
+    out = _drain_to_parquet(sdf, "restart", output_mode="complete", chk=chk)
+    return out.orderBy("user_id")
 
 
-# --- folded from the round-11c module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change;
-# _split stays in operators.curation — imported in-function at the
-# three admission call sites (the repo's cross-package pattern). ---
+# _split stays in operators.curation — imported in-function at the three
+# admission call sites (the repo's cross-package pattern).
 
 # ---------------------------------------------------------------------------
 # stream_index_admission — the streaming twin of the admission family
@@ -945,10 +893,6 @@ def stream_index_admission(spark, sf_dir):
     pins the state-store eviction as a runtime metric; the index side
     stays a plain batch relation re-read per micro-batch, i.e. the
     persisted-index shape."""
-    import uuid as _uuid
-
-    from ..streaming.stream_ops import _fresh_dir, _read_stream, stamp_mtimes
-
     from ..operators.curation import _split
 
     batch, corpus = _split(spark, sf_dir, augmented=False)
@@ -985,17 +929,8 @@ def stream_index_admission(spark, sf_dir):
         )
         .select("doc_id", "text_hash", "n_batch_copies")
     )
-    name = f"t_{_uuid.uuid4().hex[:8]}"
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", _fresh_dir("chk-adm"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("doc_id")
+    out = _drain_to_parquet(sdf, "adm", output_mode="complete")
+    return out.orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1029,8 +964,6 @@ def _wm_source_dir(spark, sf_dir) -> str:
     process first and late-drop window 1 behind the 02:40 watermark).
     Shared by the builder and the kill/restart recovery test so both
     drive the identical source lifecycle."""
-    from ..streaming.stream_ops import _fresh_dir, stamp_mtimes
-
     from ..operators.curation import _split
 
     batch, corpus = _split(spark, sf_dir, augmented=False)
@@ -1075,8 +1008,6 @@ def _wm_admission_stream(spark, sf_dir, src):
     1-hour admission windows under a 30-minute watermark, append-mode
     finalized output.  Extracted so the checkpoint kill/restart test
     runs the EXACT pipeline the registered key runs."""
-    from ..streaming.stream_ops import _read_stream
-
     from ..operators.curation import _split
 
     _, corpus = _split(spark, sf_dir, augmented=False)
@@ -1137,26 +1068,8 @@ def stream_index_admission_wm(spark, sf_dir):
     survivor relations AND the state-store ``numRowsTotal`` trace
     (rises, then DROPS after each horizon passes — bounded state as a
     runtime metric, not prose) from ``_WM_LAST_PROGRESS``."""
-    import json as _json
-    import uuid as _uuid
-
-    from ..streaming.stream_ops import _fresh_dir
-
     src = _wm_source_dir(spark, sf_dir)
     sdf = _wm_admission_stream(spark, sf_dir, src)
-    name = f"t_{_uuid.uuid4().hex[:8]}"
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")  # append emits a window only once finalized
-        .option("checkpointLocation", _fresh_dir("chk-admwm"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _WM_LAST_PROGRESS.clear()
-    for p in q.recentProgress:
-        _WM_LAST_PROGRESS.append(
-            _json.loads(p.json) if hasattr(p, "json") else p
-        )
-    return spark.table(name).orderBy("window_start", "doc_id")
+    # append emits a window only once finalized
+    out = _drain_to_parquet(sdf, "admwm", progress=_WM_LAST_PROGRESS)
+    return out.orderBy("window_start", "doc_id")

@@ -100,3 +100,39 @@ def test_bnlj_whitelist_keys_still_use_bnlj_or_better(key, spark, sf_dir):
     plan = plan_string(QUERIES[key](spark, sf_dir))
     if "BroadcastNestedLoopJoin" not in plan:
         pytest.xfail(f"{key} improved past BNLJ — drop it from BNLJ_OK")
+
+
+# The memory sink keeps every result row in driver memory behind a temp
+# view that lives until the session ends; it is the thing under test in
+# these two keys and nowhere else (every other availableNow stream drains
+# through stream_ops._drain_to_parquet).
+MEMORY_SINK_OK = {"sink_stream_memory", "source_stream_rate"}
+
+
+def test_memory_sink_only_where_it_is_the_contract():
+    """Static source sweep, no plans built: ``.format("memory")`` (or a
+    ``format="memory"`` keyword) may appear in package source only inside
+    the functions in MEMORY_SINK_OK."""
+    import ast
+    import pathlib
+
+    import bigdatawork_spark
+
+    root = pathlib.Path(bigdatawork_spark.__file__).parent
+    found: list[tuple[str, str]] = []
+
+    def visit(node, owner, rel):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            owner = node.name if owner is None else owner
+        if isinstance(node, ast.Call):
+            args = [kw.value for kw in node.keywords if kw.arg == "format"]
+            if isinstance(node.func, ast.Attribute) and node.func.attr == "format":
+                args += node.args[:1]
+            if any(isinstance(a, ast.Constant) and a.value == "memory" for a in args):
+                found.append((rel, owner or "<module>"))
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner, rel)
+
+    for path in sorted(root.rglob("*.py")):
+        visit(ast.parse(path.read_text()), None, str(path.relative_to(root)))
+    assert {fn for _, fn in found} == MEMORY_SINK_OK, sorted(found)

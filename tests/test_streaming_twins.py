@@ -256,3 +256,52 @@ def test_stream_curate_cross_batch_dedup_is_nonvacuous(spark, sf_dir):
     n_kept_batch_world = d.select("text").distinct().count()
     assert n_batch1 + n_batch2 > n_landed  # replay arrived and was dropped
     assert n_landed == n_kept_batch_world
+
+
+def test_drain_to_parquet_modes_and_no_temp_views(spark):
+    """The one availableNow drain, at sf0.001: an update-mode aggregate
+    equals its batch twin; a complete-mode aggregate over two triggers
+    holds only the final state (each trigger re-emits the whole result,
+    so appending would duplicate every group); an append stream that
+    emits nothing still returns its typed schema; and neither the drains
+    nor a registered streaming key leave a view in the catalog."""
+    from .conftest import SF_SMALL
+
+    from bigdatawork_spark.io import load
+    from bigdatawork_spark.streaming.stream_ops import (
+        _drain_to_parquet,
+        _events_source_dir,
+        _read_stream,
+    )
+
+    n_tables = len(spark.catalog.listTables())
+    batch = sorted(
+        load(spark, SF_SMALL, "events").groupBy("event_type").count().collect()
+    )
+
+    src = _events_source_dir(spark, SF_SMALL)
+    upd = _read_stream(spark, src).groupBy("event_type").count()
+    got = sorted(_drain_to_parquet(upd, "t-update", output_mode="update").collect())
+    assert got == batch
+
+    mid = F.lit("2024-01-15").cast("timestamp")
+    src2 = _events_source_dir(
+        spark, SF_SMALL, chunks=[F.col("ts") < mid, F.col("ts") >= mid]
+    )
+    comp = _read_stream(spark, src2, max_files=1).groupBy("event_type").count()
+    progress: list = []
+    got = _drain_to_parquet(
+        comp, "t-complete", output_mode="complete", progress=progress
+    )
+    assert len(progress) == 2, "the complete-mode case must span two triggers"
+    assert sorted(got.collect()) == batch
+
+    empty = _read_stream(spark, src).filter(F.lit(False)).select("event_id", "ts")
+    got = _drain_to_parquet(empty, "t-empty")
+    assert got.count() == 0
+    assert [(f.name, f.dataType) for f in got.schema.fields] == [
+        (f.name, f.dataType) for f in empty.schema.fields
+    ]
+
+    assert QUERIES["stream_tumbling"](spark, SF_SMALL).count() > 0
+    assert len(spark.catalog.listTables()) == n_tables

@@ -9,13 +9,11 @@ flip silently."""
 
 from __future__ import annotations
 
-import uuid
-
 import pandas as pd
 from pyspark.sql import functions as F
 
 from bigdatawork_spark.streaming.stream_ops import (
-    _drain_to_memory,
+    _drain_to_parquet,
     _fresh_dir,
     _read_stream,
     stamp_mtimes,
@@ -72,11 +70,9 @@ def test_watermark_window_end_boundary(spark):
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"t_{uuid.uuid4().hex[:8]}"
-    _drain_to_memory(sdf, name, output_mode="append")
     out = {
         r["start"].strftime("%H:%M"): r["n"]
-        for r in spark.table(name)
+        for r in _drain_to_parquet(sdf, "wm-boundary")
         .select(F.col("w.start").alias("start"), "n")
         .collect()
     }
