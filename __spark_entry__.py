@@ -41,9 +41,10 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Ordered so not-yet-driver-verified SURVEY §2 contract keys come first:
-    the round-1 driver truncated at the first 50 keys, so insertion order
-    IS the verification budget (registry.DRIVER_PRIORITY)."""
+    Ordered by ``registry.driver_order``: not-yet-driver-verified SURVEY §2
+    contract keys first, then unverified extras, source-stale keys and
+    cadence-due streaming keys.  The driver truncates at the first 50
+    keys, so insertion order IS the verification budget."""
     return {k: _tuned(fn) for k, fn in driver_order(QUERIES).items()}
 
 

@@ -877,6 +877,11 @@ def text_lang_filter(spark, sf_dir):
     )
 
 
+#: Largest vocabulary ``tfidf_keywords`` collects to the driver as a
+#: broadcast df dict; above it the builder takes the distributed join path.
+TFIDF_VOCAB_CAP = 1_000_000
+
+
 @register(
     "tfidf_keywords",
     oracle="""
@@ -923,13 +928,13 @@ def tfidf_keywords(spark, sf_dir):
        the vocabulary document-frequency table — explode of the DISTINCT
        words per doc, map-side-combined down to |vocab| rows;
     2. the vocab df dict rides to executors via sc.broadcast, bounded by
-       a 1M-entry cap (override: SPARK_GRAFT_TFIDF_VOCAB_CAP) — an
-       open-vocabulary corpus overruns any driver-side dict, so above the
-       cap the builder AUTO-DEGRADES (VERDICT r10 item 3, formerly a
-       RuntimeError) to the fully-distributed tf⋈df equi-join + per-doc
-       window path below, which AQE turns into a skew-handled SMJ; both
-       paths round/tiebreak identically and are asserted hash-identical
-       in tests/test_edge_cases.py::test_tfidf_fallback_matches_broadcast;
+       ``TFIDF_VOCAB_CAP`` (1M entries) — an open-vocabulary corpus
+       overruns any driver-side dict, so above the cap the builder
+       AUTO-DEGRADES (VERDICT r10 item 3, formerly a RuntimeError) to the
+       fully-distributed tf⋈df equi-join + per-doc window path below,
+       which AQE turns into a skew-handled SMJ; both paths round/tiebreak
+       identically and are asserted hash-identical in
+       tests/test_edge_cases.py::test_tfidf_fallback_matches_broadcast;
     3. one Arrow-batched mapInPandas pass computes tf (pandas groupby —
        each batch row is a complete document, so a batch boundary can
        never split a doc), scores tf·ln(N/df) vectorized, rounds, and
@@ -945,8 +950,6 @@ def tfidf_keywords(spark, sf_dir):
 
     import numpy as np
 
-    cap = int(os.environ.get("SPARK_GRAFT_TFIDF_VOCAB_CAP", "1000000"))
-
     d = load(spark, sf_dir, "documents")
     dd = restage(
         spark, "tfidf_keywords", spread_if_narrow(d.select("doc_id", "text"))
@@ -959,11 +962,11 @@ def tfidf_keywords(spark, sf_dir):
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("df"))
-        .limit(cap + 1)
+        .limit(TFIDF_VOCAB_CAP + 1)
         .collect()
     )
     n_docs = float(d.count())
-    if len(df_rows) > cap:
+    if len(df_rows) > TFIDF_VOCAB_CAP:
         # Open-vocabulary corpus: no driver-side dict can hold the df
         # table, so degrade to the fully-distributed plan — token-level
         # tf and df aggregates joined on word (AQE handles hot-word skew),

@@ -31,98 +31,6 @@ ORACLES: dict[str, str] = {}
 ORACLE_FIXED_SF: frozenset[str] = frozenset({"parquet_layout_audit"})
 
 
-# Driver-facing key order.  The round-1 driver truncated its CORRECTNESS run
-# at the first 50 keys of ``queries()`` insertion order, leaving 65 SURVEY §2
-# contract keys without a driver row (VERDICT.md round 1, item 1).  This list
-# front-loads the not-yet-driver-verified contract keys so each round's 50-key
-# budget converts the maximum number of contract keys to driver-green rows:
-#   slots 1-50  : array_funcs (ERR fix re-check) + §2-K, C, E, remaining D,
-#                 F, G, batch time-windows — all untested in r01
-#   slots 51-66 : §2-B projections/filters + §2-J UDFs — untested in r01
-#   afterwards  : keys already green in CORRECTNESS_r01, then extras, in
-#                 original registration order.
-# Rounds 3+ should rotate newly-verified keys to the back the same way.
-DRIVER_PRIORITY: list[str] = [
-    # re-check the round-1 ERR first (array output stringified this round)
-    "array_funcs",
-    # §2-K LLM-data-pipeline
-    "dedup_exact",
-    "dedup_near_minhash",
-    "dedup_near_exactjacc",
-    "sim_cosine_topk",
-    "sim_ann_lsh",
-    "knn_classify",
-    "text_stats",
-    "text_lang_filter",
-    "tfidf_keywords",
-    "multimodal_join",
-    # §2-C joins
-    "join_inner_broadcast",
-    "join_inner_shuffle",
-    "join_multiway_q5",
-    "join_left_outer",
-    "join_right_outer",
-    "join_full_outer",
-    "join_left_semi",
-    "join_left_anti",
-    "join_cross",
-    "join_theta_range",
-    "join_asof",
-    "join_interval",
-    # §2-E windows
-    "win_row_number",
-    "win_rank_dense",
-    "win_ntile",
-    "win_lag_lead",
-    "win_first_last",
-    "win_running_sum",
-    "win_moving_avg",
-    "win_range_frame",
-    "win_percent_cume",
-    "topk_per_group",
-    # §2-D aggregations not yet driver-tested
-    "agg_approx_count_distinct",
-    "agg_having",
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_collect_list",
-    "agg_stats",
-    "agg_median_percentile",
-    # §2-F sort/limit
-    "sort_multi",
-    "limit_topk_q3",
-    # §2-G set ops
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    # §2-I batch time-windows (stream_* were rows-only green in r01)
-    "win_time_tumbling",
-    "win_time_sliding",
-    "win_time_session",
-    # ---- slot 51+ ----
-    # §2-B projections/filters
-    "project_select",
-    "project_cast",
-    "project_case_when",
-    "filter_simple",
-    "filter_compound",
-    "filter_in_between",
-    "filter_like",
-    "filter_null",
-    "distinct_rows",
-    # §2-J UDF/UDAF/UDTF
-    "udf_python",
-    "udf_pandas_scalar",
-    "udaf_pandas_grouped_agg",
-    "udtf_grouped_map",
-    "udtf_map_in_pandas",
-    "udtf_python",
-    "sql_udf_register",
-]
-
-
 # SURVEY.md §2's 92 contract keys — the judge's line-by-line checklist.
 # Used by driver_order to rank never-driver-verified contract keys ahead of
 # never-verified extras.  tests/test_driver_contract.py holds an independent
@@ -157,197 +65,6 @@ CONTRACT_KEYS: frozenset[str] = frozenset(
 )
 
 
-# Keys owed a fresh driver row by a named round.  A key ranks in the "due"
-# tier (after never-verified and source-stale keys, before the general
-# oldest-vintage rotation) while its newest clean driver row is OLDER than
-# its due round; once the driver samples it the boost self-disables, so a
-# consumed entry is inert rather than tech debt.  An entry whose due round
-# passes un-sampled (window overflow) STAYS due the next round — the
-# seeding self-heals, so over-seeding is safe.
-#
-# r13 seeding (VERDICT r12 item 1): 132 live keys carry r≤7-vintage driver
-# rows (19 r03 / 43 r04 / 49 r05 / 21 r07 — the engine under them gained
-# the non-ANSI flip r08, clustered caches r10, codegen-cache fix r12 since
-# their last row).  Burn-down schedule: all r03 + the 24 alphabetically
-# first r04 keys due r13; the remaining r04 + all r05 due r14; r07 due
-# r15.  The r12 entries below were all consumed (every key sampled green
-# in CORRECTNESS_r12) and are dropped.
-ROTATION_DUE: dict[str, int] = {
-    **{
-        k: 13
-        for k in (
-            # r03 vintage (19)
-            "agg_bitmap_distinct agg_heavy_hitters agg_hll_sketch agg_mode "
-            "basket_pairs cdc_scd2 event_transitions funnel_conversion "
-            "join_interval_bucketed merge_upsert pandas_api_bridge "
-            "pattern_match_strict_seq quality_filter_gopher retention_cohort "
-            "sample_hash_deterministic sample_stratified session_paths "
-            "stats_winsorized text_pii_scrub "
-            # r04 vintage, first 24 of 43 alphabetically
-            "agg_approx_percentile agg_histogram bpe_train_merges "
-            "chunk_documents dedup_cluster_cc dedup_keep_representative "
-            "dedup_latest_by_key dedup_simhash doc_fingerprint "
-            "dq_referential_audit dq_rule_checks embedding_centroid "
-            "embedding_norm_stats fuzzy_match_levenshtein graph_pagerank "
-            "graph_shortest_path graph_triangle_count html_strip_tags "
-            "incremental_agg_merge incremental_join_maintenance "
-            "join_asof_nearest join_interval_left join_lateral_topn "
-            "join_salted_skew "
-            # VERDICT r12 item 4 done-condition: the two stateful ledgers
-            # whose checkpoint-recovery equivalence was pinned this round
-            # get a fresh driver row THIS round, not on next cadence
-            "stream_index_admission_wm stream_stateful_tws"
-        ).split()
-    },
-    **{
-        k: 14
-        for k in (
-            # r04 vintage, remaining 19
-            "kmeans_iterative ngram_lm_train repetition_ngram_ratio "
-            "sample_negative_pairs sim_ann_ivf split_train_holdout "
-            "table_diff text_entropy_filter text_langid text_normalize "
-            "text_quality_score text_unigram_logprob token_count "
-            "ts_hypertable_rollup ts_interpolate_linear ts_resample_ffill "
-            "vector_quantize vocab_build zorder_cluster "
-            # r05 vintage (49)
-            "ab_test_lift agg_pivot bm25_rank contamination_ngram "
-            "dq_skew_profile gen_explode_outer inverted_index "
-            "join_bucketed_colocated ks_test_drift mixture_resample "
-            "ngram_topk observe_metrics pack_sequences parquet_layout_audit "
-            "pipeline_curate_corpus privacy_k_anonymity q10_returned_items "
-            "q11_important_stock q12_late_lines_priority "
-            "q13_cust_order_distribution q14_promo_share q15_top_supplier "
-            "q16_supplier_part_counts q19_disjunctive q20_dominant_suppliers "
-            "q21_waiting_suppliers q22_dormant_customers q2_min_cost_supplier "
-            "q6_forecast_revenue q7_volume_shipping q8_market_share "
-            "q9_product_profit reshape_unpivot set_union_schema_evolve "
-            "skyline_pareto sort_range_partitioned sql_catalog_api "
-            "sql_interface stats_linear_regression subquery_exists_q4 "
-            "subquery_in_q18 subquery_scalar_q17 ts_period_over_period "
-            "ts_time_weighted_avg udtf_cogrouped_map udtf_map_in_arrow "
-            "win_gaps_islands win_running_distinct win_time_range_frame"
-        ).split()
-    },
-    **{
-        k: 15
-        for k in (
-            # r07 vintage (21)
-            "char_ngram_profile coreset_sample_kcenter decontaminate_exact "
-            "dedup_containment dsir_importance_resample embedding_pca_gram "
-            "knn_classify_ivf mixture_epoch_plan nearest_centroid_classify "
-            "pack_bins_greedy privacy_dp_count profile_table "
-            "quality_classifier_nb semdedup_prune sim_ann_hyperplane "
-            "table_format_vacuum ts_downsample_lttb ts_outlier_mad "
-            "ts_seasonal_decompose win_moving_zscore win_rolling_median"
-        ).split()
-    },
-    **{
-        k: 15
-        for k in (
-            # r14 source-changed keys (pmod geometry, CC gram guard,
-            # guard_twin_size closure): each was re-driven green in the
-            # r14 full local sim (289/289) and its hash bootstrap-recorded
-            # so the r14 window stays on the r04/r05 burn-down cohort (the
-            # r13 pattern) — seeded here so the REAL driver re-samples the
-            # changed source next round.  The NINE keys that GAINED an
-            # oracle this round (heavy hitters, approx percentile/
-            # distinct, HLL, round-trips, bucketed join) are deliberately
-            # NOT seeded: driver_verified_keys already ranks an
-            # oracle-gained key as unverified (tier 0 for the contract
-            # keys, tier 1 for the extended ones), so all nine sit at the
-            # FRONT of the r14 window for their first hash-checked rows.
-            "dedup_cluster_cc dedup_embedding_cosine "
-            "dedup_keep_representative dedup_near_exactjacc "
-            "dedup_near_minhash knn_classify multimodal_frame_sample "
-            "multimodal_image_resize multimodal_png_decode "
-            "multimodal_wav_decode "
-            # manifest-format family: the r14 txn-ledger fix (replay
-            # idempotence surviving vacuum, caught by the model fuzz)
-            # changed ManifestTable under these; re-driven 10/10 green +
-            # full sim 289/289, bootstrap-recorded.  The streaming members
-            # re-sample on STREAMING_CADENCE anyway; the batch ones are
-            # seeded explicitly (table_format_vacuum already sits in the
-            # r07 due-15 cohort above — not repeated here).
-            "source_python_datasource table_format_changes "
-            "table_format_compaction table_format_merge "
-            "table_format_time_travel"
-        ).split()
-    },
-    **{
-        k: 16
-        for k in (
-            # r15 source-changed keys, all re-driven green in the r15 full
-            # local sim and bootstrap-recorded so the r15 window stays on
-            # the r04/r05/r07 burn-down cohort (VERDICT r14 item 1: zero
-            # new keys, the due tier takes the whole window) — seeded so
-            # the REAL driver re-samples the changed source next round.
-            # Two change families:
-            #  * manifest pre-ledger-heal + commit-name-guard fixes
-            #    (ADVICE r14): ManifestTable changed under the
-            #    table_format family and its python-datasource/stream/
-            #    pipeline consumers;
-            #  * the round8_ops -> domain-module fold (VERDICT r14
-            #    item 5): helper tags moved module, changing the closure
-            #    fingerprint of the four keys that reference a moved
-            #    shared helper (the three whose closure is self-contained
-            #    hash identically and need no re-verification).
-            # NOTE: table_format_vacuum and pipeline_curate_corpus are
-            # ALSO in this change set (both source-stale from the r15
-            # edits, both re-driven green + bootstrapped) but are NOT
-            # listed here: a due-16 entry would OVERWRITE their r13-era
-            # due-14/15 seeds (dict merge, later wins) and demote them
-            # out of the r15 burn-down window they belong to — their
-            # existing seeds already keep them due until sampled.
-            "table_format_time_travel table_format_compaction "
-            "table_format_changes table_format_merge "
-            "table_format_stream_read table_format_stream_sink "
-            "source_python_datasource source_python_stream "
-            "stream_curate_to_table "
-            "lm_perplexity_score dedup_spans_removal winnow_fingerprint "
-            "dedup_winnow_pairs "
-            # …and the second tranche: the r15 session went on to fold ALL
-            # remaining round-modules (round{10,11,11b,11c,13}_ops +
-            # staged_r06 — COVERAGE.md move map), re-ran the full local
-            # sim green, and bootstrap-recorded.  Seeded: every folded or
-            # closure-moved key that is NOT already covered by an earlier
-            # due entry, by the streaming cadence, or by sitting in the
-            # r15 burn-down window itself (the r07-vintage staged_r06 keys
-            # get their post-fold certification from the r15 window
-            # directly).
-            "corr_matrix decontaminate_ngram dedup_incremental_audit "
-            "dedup_incremental_exact dedup_incremental_minhash "
-            "dedup_index_persisted dedup_index_update_idempotent "
-            "dedup_ladder dedup_ladder_exact_stage dedup_url_host "
-            "dedup_url_normalize global_row_index join_bloom_prefilter "
-            "join_dpp_partitioned join_skew_aqe kfold_stratified "
-            "layout_zorder_stats quantile_bin_assign rank_fusion_rrf "
-            "url_filter_blocklist "
-            # r16 seeding (VERDICT r15 item 2): the five keys of the
-            # r08/r09 evidence tail NOT already in the r16 due set (the
-            # other seven — lm_perplexity_score, dedup_spans_removal,
-            # dedup_winnow_pairs, winnow_fingerprint, multimodal_{image_
-            # resize,frame_sample,png_decode} — are covered by the fold
-            # seeds above).  Checked for dict-merge overwrite hazard
-            # before seeding: none of the five carries an earlier entry.
-            # As the oldest surviving vintages (r08×1, r09×4) they rank
-            # directly behind the streaming cohort in the r16 window, so
-            # the done-condition 'oldest live vintage >= r10' is reachable
-            # this round rather than r17.
-            "bpe_encode_apply dedup_ngram_jaccard dedup_repeated_spans "
-            "dedup_segments_crossdoc topk_heavy_hitters "
-            # r16 source-changed key (VERDICT r15 item 3): the tumbling
-            # window now reads the events `hour` PROJECTION (exchange-free
-            # plan) — re-driven green in the r16 full local sim and
-            # bootstrap-recorded, seeded so the REAL driver certifies the
-            # new plan shape this round.  (kmeans_iterative and
-            # coreset_sample_kcenter, the r16 oracle conversions, are NOT
-            # seeded: driver_verified_keys already ranks an oracle-gained
-            # key as unverified, so both sit at the front of the window.)
-            "win_time_tumbling"
-        ).split()
-    },
-}
-
 # Streaming keys are due a driver re-sample EVERY OTHER ROUND (VERDICT r10
 # item 8 / r11 item 4: streaming is where session-conf drift bites silently,
 # and r11's 50-key window dropped the 16 streaming keys because nothing
@@ -376,10 +93,45 @@ def is_streaming_key(key: str) -> bool:
     return getattr(fn, "drives_stream", False) or ".streaming." in mod
 
 
+def correctness_rows() -> list[tuple[int, str, dict]]:
+    """``(round, key, row)`` for every row of every driver
+    ``CORRECTNESS_r<N>.json`` in the checkout root — the one reader of the
+    driver's per-round results.  Unreadable files are skipped."""
+    import glob
+    import json
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rows: list[tuple[int, str, dict]] = []
+    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
+        try:
+            with open(path) as f:
+                data = json.load(f)
+        except (OSError, ValueError):
+            continue
+        if isinstance(data, dict):
+            rows.extend(
+                (int(m.group(1)), k, row)
+                for k, row in data.items()
+                if isinstance(row, dict)
+            )
+    return rows
+
+
+def is_clean_row(row: dict) -> bool:
+    """A driver row that verifies its key: hash-green, or rows-only that
+    ran without error."""
+    return row.get("hash_match") is True or (
+        row.get("err") == "no_oracle" and row.get("spark_rows") is not None
+    )
+
+
 def driver_verified_keys() -> set[str]:
-    """Keys with a clean row in any driver ``CORRECTNESS_r*.json`` so far:
-    hash-green, or rows-only that ran without error.  Unreadable files are
-    skipped — worst case the ordering degrades to the static priority.
+    """Keys with a clean driver row in any round so far.
 
     A rows-only clean row counts as "verified" ONLY while the key still has
     no oracle: a key that gained an oracle AFTER its last driver row (e.g.
@@ -387,70 +139,23 @@ def driver_verified_keys() -> set[str]:
     unverified so the rotation surfaces it for a hash-checked row
     (VERDICT r07 item 2 — otherwise the oracle never gets exercised by
     the driver)."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    seen: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for k, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True:
-                seen.add(k)
-            elif (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-                and k not in ORACLES
-            ):
-                seen.add(k)  # rows-only key, ran clean, still oracle-less
-    return seen
+    return {
+        k
+        for _, k, row in correctness_rows()
+        if row.get("hash_match") is True
+        or (is_clean_row(row) and k not in ORACLES)
+    }
 
 
 def driver_latest_round() -> dict[str, int]:
-    """key → round number of the NEWEST clean driver row for that key
-    (hash-green, or rows-only that ran without error).  Used by
-    ``driver_order`` to rotate the oldest-verified vintages back into the
-    driver's ~50-key window (VERDICT r10 item 1: ~35 contract keys were
-    last driver-sampled in r01/r03 while the engine under them changed —
-    non-ANSI flip r08, sorted clustered caches r10).  Unreadable files are
-    skipped; keys never verified are absent."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    """key → round number of the NEWEST clean driver row for that key.
+    Used by ``driver_order`` to rotate the oldest-verified vintages back
+    into the driver's ~50-key window (VERDICT r10 item 1: a green row ages
+    as the engine under it changes).  Keys never verified are absent."""
     latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for k, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            clean = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            if clean:
-                latest[k] = max(latest.get(k, 0), rnd)
+    for rnd, k, row in correctness_rows():
+        if is_clean_row(row):
+            latest[k] = max(latest.get(k, 0), rnd)
     return latest
 
 
@@ -525,44 +230,60 @@ def _const_srcs(mod_name: str) -> dict[str, str]:
 
 
 def closure_sources(fn) -> dict[str, str]:
-    """tag → source text (or constant repr) for ``fn`` plus every
-    package-local helper it transitively references by name.
+    """tag → source text (or constant text) for ``fn`` plus every
+    package-local helper and constant its CODE references.
 
-    Closes the r11-documented blind spot (VERDICT r12 item 3): the old
-    fingerprint hashed only the builder's own text, so an edit to a shared
-    helper (``llm_ops.minhash_pairs``, ``io.load``'s derived columns, …)
-    did not mark its callers stale and tier-2 rotation could miss real
-    changes.  Traversal: every identifier in the function's source that
-    resolves in its global namespace to a function/class defined inside
-    this package recurses; names resolving to plain-value constants (e.g.
-    ``_DERIVED_COLS``) contribute their ``_stable_repr``.  The registry
-    module itself is EXCLUDED — ``register`` appears in every decorator
-    line, and rotation-bookkeeping edits must not mark all 287 operators
-    stale.  Identifier matching is textual, so a helper named inside a SQL
-    string over-includes — harmless: overreach only adds sensitivity,
-    never hides an edit.
+    An edit to a shared helper (``llm_ops.minhash_pairs``, ``io.load``'s
+    derived columns, …) must mark every caller stale, so the fingerprint
+    covers the transitive closure, not just the builder's own text
+    (VERDICT r12 item 3).  Names come from one ``ast.walk`` over each
+    source: ``Name`` ids and ``Attribute`` attrs that resolve in the
+    function's global namespace (f-string expressions included — that is
+    how oracle decorators reach ``_AUG_SQL``), plus ``import`` /
+    ``from … import`` statements, which bind inside a body and never reach
+    ``__globals__`` (the streaming admission family's ``stamp_mtimes``,
+    ``sql_api.sql``, …).  Docstrings, comments and string literals are not
+    code: a helper named only in prose is not part of the closure, so
+    editing it stales no key that merely mentions it.
 
-    IN-FUNCTION imports (r13 review): ``from ..streaming.stream_ops
-    import stamp_mtimes`` inside a builder body binds locally and never
-    appears in ``__globals__``, so the global-namespace walk alone missed
-    those helpers (~19 sites: the streaming admission family's
-    stamp_mtimes/_read_stream, sql_api.sql, io.load, …).  The source is
-    additionally AST-walked for package-local ``from … import``
-    statements and the imported objects join the traversal."""
+    Package-local functions and classes recurse; plain-value constants
+    contribute their assignment text (``_const_srcs``); a plain ``import
+    pkg.mod`` folds that whole module's source.  Only modules inside this
+    package count, and the registry itself is EXCLUDED — ``register``
+    appears in every decorator line, and rotation-bookkeeping edits must
+    not mark every operator stale."""
     import ast
+    import importlib
     import importlib.util
     import inspect
-    import re
     import sys
     import textwrap
 
-    ident = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
     value_types = (str, bytes, int, float, bool, tuple, list, dict, set,
                    frozenset)
     pkg = __name__.split(".")[0]
+
+    def in_pkg(mod: str) -> bool:
+        # package-BOUNDARY match (ADVICE r14/r15): a bare prefix would also
+        # take a foreign module such as "bigdatawork_spark_extras"
+        return (mod == pkg or mod.startswith(pkg + ".")) and mod != __name__
+
     out: dict[str, str] = {}
     seen: set[str] = set()
     stack = [fn]
+
+    def take(obj, owner: str, name: str) -> None:
+        if inspect.isfunction(obj) or inspect.isclass(obj):
+            if in_pkg(getattr(obj, "__module__", "") or ""):
+                stack.append(obj)
+        elif isinstance(obj, value_types):
+            ctag = f"const:{owner}.{name}"
+            if ctag not in seen:
+                seen.add(ctag)
+                # assignment text when the module defines it; value repr for
+                # names bound there by import (see _const_srcs)
+                out[ctag] = _const_srcs(owner).get(name) or _stable_repr(obj)
+
     while stack:
         f = stack.pop()
         mod = getattr(f, "__module__", "") or ""
@@ -579,53 +300,22 @@ def closure_sources(fn) -> dict[str, str]:
         if g is None:  # classes carry no __globals__: use their module dict
             m = sys.modules.get(mod)
             g = vars(m) if m is not None else {}
-        for name in sorted(set(ident.findall(src))):
-            obj = g.get(name)
-            if obj is None or obj is f:
-                continue
-            if inspect.isfunction(obj) or inspect.isclass(obj):
-                omod = getattr(obj, "__module__", "") or ""
-                # package-BOUNDARY match (ADVICE r15: the r14 fix covered
-                # only the ast.Import branch; a foreign module like
-                # "bigdatawork_spark_extras" reached via __module__ must
-                # not fold into the fingerprint either)
-                if (
-                    (omod == pkg or omod.startswith(pkg + "."))
-                    and omod != __name__
-                ):
-                    stack.append(obj)
-            elif isinstance(obj, value_types):
-                cmod = g.get("__name__", mod)
-                ctag = f"const:{cmod}.{name}"
-                if ctag not in seen:
-                    seen.add(ctag)
-                    # assignment text when the module defines it here;
-                    # value repr for names bound by import (see _const_srcs)
-                    out[ctag] = _const_srcs(cmod).get(name) or _stable_repr(obj)
-        # in-function `from … import` targets never reach __globals__ —
-        # resolve them off the AST and traverse the imported objects too
         try:
             tree = ast.parse(textwrap.dedent(src))
         except SyntaxError:
-            tree = None
-        for node in ast.walk(tree) if tree is not None else ():
-            # plain `import pkg.mod [as x]` (ADVICE r13): the bound name is
-            # a module, so the identifier scan above never traverses it —
-            # fold the whole module's source into the fingerprint (coarse
-            # but safe: any edit to that module marks the key stale).
-            if isinstance(node, ast.Import):
+            tree = ast.Module(body=[], type_ignores=[])
+        names: set[str] = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                names.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                names.add(node.attr)
+            elif isinstance(node, ast.Import):
+                # the bound name is a module: fold the whole module's source
+                # (coarse but safe — any edit to it marks the key stale)
                 for alias in node.names:
-                    # package-BOUNDARY match (ADVICE r14): a bare prefix
-                    # would also fold a foreign top-level module that
-                    # merely starts with the package name (e.g.
-                    # "bigdatawork_spark_extras") into the fingerprint
-                    if (
-                        alias.name != pkg
-                        and not alias.name.startswith(pkg + ".")
-                    ) or alias.name == __name__:
-                        continue
                     mtag = f"module:{alias.name}"
-                    if mtag in seen:
+                    if not in_pkg(alias.name) or mtag in seen:
                         continue
                     seen.add(mtag)
                     try:
@@ -635,55 +325,35 @@ def closure_sources(fn) -> dict[str, str]:
                         out[mtag] = inspect.getsource(im)
                     except Exception:
                         out[mtag] = f"<unresolvable {alias.name}>"
-                continue
-            if not isinstance(node, ast.ImportFrom):
-                continue
-            try:
-                # resolve relative imports against the module's __package__
-                # (ADVICE r13): for a package __init__ module,
-                # mod.rpartition('.') strips the package ITSELF and
-                # mis-resolves level-1 imports one level too high.
-                owner = sys.modules.get(mod)
-                base = getattr(owner, "__package__", None) or mod.rpartition(".")[0]
-                target = importlib.util.resolve_name(
-                    "." * node.level + (node.module or ""), base
-                ) if node.level else (node.module or "")
-            except (ImportError, ValueError):
-                continue
-            # package-BOUNDARY match here too (ADVICE r15): bare
-            # startswith(pkg) would fold "bigdatawork_spark_extras"
-            # reached via from-import into the fingerprint
-            if (
-                target != pkg and not target.startswith(pkg + ".")
-            ) or target == __name__:
-                continue
-            m = sys.modules.get(target)
-            if m is None:
-                # not yet imported (ADVICE r13): import it (guarded) rather
-                # than silently leaving the subtree out of the fingerprint
+            elif isinstance(node, ast.ImportFrom):
                 try:
-                    m = importlib.import_module(target)
+                    # relative imports resolve against the module's
+                    # __package__ (ADVICE r13: for a package __init__,
+                    # mod.rpartition('.') would strip the package itself)
+                    owner = sys.modules.get(mod)
+                    base = getattr(owner, "__package__", None) or mod.rpartition(".")[0]
+                    target = importlib.util.resolve_name(
+                        "." * node.level + (node.module or ""), base
+                    ) if node.level else (node.module or "")
+                except (ImportError, ValueError):
+                    continue
+                if not in_pkg(target):
+                    continue
+                try:
+                    # import (guarded) a target not yet loaded rather than
+                    # silently leaving its subtree out (ADVICE r13)
+                    m = sys.modules.get(target) or importlib.import_module(target)
                 except Exception:
                     continue
-            for alias in node.names:
-                obj = getattr(m, alias.name, None)
-                if obj is None or obj is f:
-                    continue
-                if inspect.isfunction(obj) or inspect.isclass(obj):
-                    omod = getattr(obj, "__module__", "") or ""
-                    if (
-                        (omod == pkg or omod.startswith(pkg + "."))
-                        and omod != __name__
-                    ):
-                        stack.append(obj)
-                elif isinstance(obj, value_types):
-                    ctag = f"const:{target}.{alias.name}"
-                    if ctag not in seen:
-                        seen.add(ctag)
-                        out[ctag] = (
-                            _const_srcs(target).get(alias.name)
-                            or _stable_repr(obj)
-                        )
+                for alias in node.names:
+                    obj = getattr(m, alias.name, None)
+                    if obj is not None and obj is not f:
+                        take(obj, target, alias.name)
+        cmod = g.get("__name__", mod)
+        for name in sorted(names):
+            obj = g.get(name)
+            if obj is not None and obj is not f:
+                take(obj, cmod, name)
     return out
 
 
@@ -746,63 +416,32 @@ def driver_order(
     Self-rotating across rounds, five tiers:
       0. never driver-verified SURVEY §2 contract keys
       1. never driver-verified extras
-      2. verified but STALE — the builder/oracle source changed since the
-         hash recorded at verification time (a green row certifies only
-         the source that produced it; VERDICT r05 item 2)
-      3. verified but DUE — named in ROTATION_DUE with a vintage older
-         than the due round, or a streaming key >= STREAMING_CADENCE
-         rounds stale (VERDICT r11 items 1 and 4)
+      2. verified but STALE — the recorded ``source_hash`` differs from
+         the current one (a green row certifies only the source that
+         produced it; VERDICT r05 item 2)
+      3. verified streaming keys whose newest clean row is
+         >= STREAMING_CADENCE rounds old (VERDICT r11 item 4)
       4. verified and unchanged
     so each round's ~50-key budget lands on fresh-or-changed keys with no
     manual reshuffling.  Within tiers 2-4 keys sort by the round of their
     NEWEST clean driver row ascending (oldest vintage first — VERDICT r10
-    item 1: a green row ages as the engine under it changes, so the
-    rotation must resample the stalest vintages, not a fixed priority
-    list).  Remaining ties keep DRIVER_PRIORITY order, then registration
-    order (deterministic).  Keys absent from ``d`` (e.g. rows-only keys
-    when ordering ORACLES) are skipped."""
+    item 1: a green row ages as the engine under it changes).  Remaining
+    ties keep registration order.  Keys absent from ``d`` (e.g. rows-only
+    keys when ordering ORACLES) are skipped."""
     verified = driver_verified_keys()
     recorded = _verified_hashes(_hash_file)
     vintage = driver_latest_round()
     upcoming = max(vintage.values(), default=0) + 1
-    prio = {k: i for i, k in enumerate(DRIVER_PRIORITY)}
-
-    def stale(k: str) -> bool:
-        rec = recorded.get(k)
-        return rec is None or rec != source_hash(k)
-
-    def due(k: str) -> bool:
-        rnd = vintage.get(k, 0)
-        # Active only once the upcoming round REACHES the entry's due round
-        # (r13: the burn-down schedule seeds due-14/15 cohorts in advance —
-        # without the upcoming gate they'd flood the current window and
-        # push the current cohort out of the 50-key budget).
-        if k in ROTATION_DUE and upcoming >= ROTATION_DUE[k] > rnd:
-            return True
-        return is_streaming_key(k) and rnd <= upcoming - STREAMING_CADENCE
 
     def rank(k: str):
+        rnd = vintage.get(k, 0)
         if k not in verified:
-            tier = 0 if k in CONTRACT_KEYS else 1
-        elif stale(k):
-            tier = 2
-        elif due(k):
-            tier = 3
-        else:
-            tier = 4
-        # Within the due tier, STREAMING keys rank ahead of batch keys
-        # (VERDICT r15 item 1): the r14 and r15 windows were both consumed
-        # by the vintage burn-down and displaced the streaming cohort two
-        # rounds past its own STREAMING_CADENCE.  Vintage ascending alone
-        # cannot fix this — r12-vintage streaming ties with r12-vintage
-        # batch and the r13-vintage streaming tail falls off a ~50-key
-        # window behind OLDER batch keys.  A cadence rule that can be
-        # displaced indefinitely is not a rule, so the sub-rank encodes
-        # the priority: due streaming first (oldest vintage first), then
-        # due batch (oldest vintage first).
-        sub = 0 if tier == 3 and is_streaming_key(k) else 1
-        rnd = vintage.get(k, 0) if tier >= 2 else 0
-        return (tier, sub, rnd, prio.get(k, len(prio)))
+            return (0 if k in CONTRACT_KEYS else 1, 0)
+        if recorded.get(k) != source_hash(k):
+            return (2, rnd)
+        if is_streaming_key(k) and rnd <= upcoming - STREAMING_CADENCE:
+            return (3, rnd)
+        return (4, rnd)
 
     # dict preserves registration order; stable sort keeps it as the tiebreak
     return {k: d[k] for k in sorted(d, key=rank)}

@@ -10,7 +10,9 @@ inference — so ingest behavior is schema-stable (SURVEY §1.3).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import functions as F
@@ -24,8 +26,10 @@ from ..registry import register
 # processes (e.g. the driver sim at two SFs) clobber each other's files
 # mid-read — observed as spurious hash mismatches in round 4.  The pid
 # suffix makes every process's fixture tree private; correctness runs are
-# unaffected (each process still reuses its own tree across calls).
+# unaffected (each process still reuses its own tree across calls).  The
+# tree is removed at interpreter exit.
 _TMP_ROOT = os.path.join(tempfile.gettempdir(), f"bdw_io-{os.getpid()}")
+atexit.register(shutil.rmtree, _TMP_ROOT, ignore_errors=True)
 
 
 def _tmp(name: str) -> str:

@@ -14,6 +14,7 @@ reruns never resume stale state.  At scale: same code with a real source
 
 from __future__ import annotations
 
+import atexit
 import glob
 import json
 import os
@@ -29,7 +30,11 @@ from ..io import load
 from ..registry import register
 from ..session import session_memo, spread_if_narrow
 
-_STREAM_ROOT = os.path.join(tempfile.gettempdir(), "bdw_stream")
+# Scratch root for staged sources, checkpoints and drained results: private
+# to this process, and removed at interpreter exit so runs do not pile up
+# trees under the temp dir.
+_STREAM_ROOT = os.path.join(tempfile.gettempdir(), f"bdw_stream-{os.getpid()}")
+atexit.register(shutil.rmtree, _STREAM_ROOT, ignore_errors=True)
 
 
 def _fresh_dir(tag: str) -> str:
@@ -64,7 +69,7 @@ def stamp_mtimes(src: str, order: int, stamped: set) -> None:
 # fresh dirs.
 def _memo_lookup(memo, key):
     got = memo.get(key)
-    # guard against cleanup()/tmp-reaper having removed the dir
+    # guard against a tmp reaper having removed the dir
     if got and glob.glob(os.path.join(got, "*.parquet")):
         return got
     return None
@@ -498,11 +503,6 @@ def stream_stream_left_join(spark, sf_dir):
         .filter(F.col("user_id") >= 0)
         .orderBy("first_id", "second_id")
     )
-
-
-def cleanup() -> None:
-    """Remove stream scratch dirs (best-effort)."""
-    shutil.rmtree(_STREAM_ROOT, ignore_errors=True)
 
 
 @register("stream_stateful_tws")

@@ -7,7 +7,7 @@ scalar-only output columns so that class of failure can never regress.
 
 The driver also truncates its per-round CORRECTNESS run at the first 50 keys
 of ``queries()`` insertion order, so that order IS the verification budget.
-Guard 2 pins the DRIVER_PRIORITY front-loading invariants.
+Guard 2 pins ``driver_order``'s tiering against an independent copy of it.
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from pyspark.sql.types import ArrayType, MapType, StructType
 
 from bigdatawork_spark.registry import (
     CONTRACT_KEYS,
-    DRIVER_PRIORITY,
     ORACLES,
     QUERIES,
     driver_order,
@@ -65,17 +64,6 @@ SURVEY2_KEYS = frozenset(
     "multimodal_join".split()
 )
 
-# Keys already driver-green in CORRECTNESS_r01 (HASH or rows-only pass) —
-# everything else in SURVEY2_KEYS must sit in the driver-priority front.
-R01_GREEN = frozenset(
-    "str_funcs wordcount str_regexp date_funcs ts_funcs math_funcs cond_funcs "
-    "map_json_funcs hash_funcs scan_parquet scan_csv scan_jsonl source_inline "
-    "sink_parquet source_stream_file source_stream_rate sink_stream_memory "
-    "sink_stream_foreachbatch stream_tumbling stream_watermark_late "
-    "stream_dedup stream_stateful_count stream_static_join agg_global "
-    "agg_groupby_q1 agg_count_distinct".split()
-)
-
 
 @pytest.mark.parametrize("key", sorted(QUERIES))
 def test_oracled_output_is_scalar_only(key, spark, sf_dir):
@@ -97,21 +85,6 @@ def test_survey2_keys_all_registered():
     assert not missing, f"SURVEY §2 keys absent from registry: {sorted(missing)}"
 
 
-def test_driver_priority_well_formed():
-    assert len(DRIVER_PRIORITY) == len(set(DRIVER_PRIORITY)), "duplicate keys"
-    unknown = [k for k in DRIVER_PRIORITY if k not in QUERIES]
-    assert not unknown, f"priority keys not in registry: {unknown}"
-
-
-def test_driver_priority_front_loads_unverified_contract_keys():
-    # Every §2 key without a driver-green r01 row must be in the priority
-    # front so the driver's 50-key-per-round budget reaches it first.
-    unverified = SURVEY2_KEYS - R01_GREEN
-    front = set(DRIVER_PRIORITY)
-    missing = unverified - front
-    assert not missing, f"unverified contract keys not front-loaded: {sorted(missing)}"
-
-
 def test_registry_contract_keys_match_survey2():
     # independent copies: a typo in either fails here
     assert CONTRACT_KEYS == SURVEY2_KEYS
@@ -121,7 +94,6 @@ def _mirror_tier(k, verified, recorded, vintage, upcoming):
     """Independent copy of driver_order's tiering — a drift in either side
     fails the tests below."""
     from bigdatawork_spark.registry import (
-        ROTATION_DUE,
         STREAMING_CADENCE,
         is_streaming_key,
         source_hash,
@@ -131,10 +103,7 @@ def _mirror_tier(k, verified, recorded, vintage, upcoming):
         return 0 if k in CONTRACT_KEYS else 1
     if recorded.get(k) != source_hash(k):
         return 2
-    rnd = vintage.get(k, 0)
-    if k in ROTATION_DUE and upcoming >= ROTATION_DUE[k] > rnd:
-        return 3
-    if is_streaming_key(k) and rnd <= upcoming - STREAMING_CADENCE:
+    if is_streaming_key(k) and vintage.get(k, 0) <= upcoming - STREAMING_CADENCE:
         return 3
     return 4
 
@@ -152,7 +121,7 @@ def test_driver_order_front_loads_unverified_then_extras_then_verified():
     tiers = [_mirror_tier(k, verified, recorded, vintage, upcoming) for k in ordered]
     assert tiers == sorted(tiers), (
         "driver_order must be tiered: unverified contract, unverified "
-        "extras, verified-but-stale, rotation-due, verified"
+        "extras, verified-but-stale, cadence-due streaming, verified"
     )
 
 
@@ -163,7 +132,6 @@ def test_streaming_cadence_floats_stale_streaming_keys():
     every-other-round streaming re-sample can't be crowded out of the
     driver's ~50-key window again."""
     from bigdatawork_spark.registry import (
-        ROTATION_DUE,
         STREAMING_CADENCE,
         _verified_hashes,
         driver_latest_round,
@@ -191,7 +159,6 @@ def test_streaming_cadence_floats_stale_streaming_keys():
         if k in verified
         and recorded.get(k) == source_hash(k)
         and not is_streaming_key(k)
-        and k not in ROTATION_DUE
         and vintage.get(k, 0) == upcoming - 1
     ]
     if not overdue or not fresh:
@@ -237,18 +204,11 @@ def test_codegen_class_cache_sized_for_the_batch(spark):
 
 def test_driver_window_covers_priority_tiers_when_they_fit():
     """Permanent rotation invariant (the r11 window-arithmetic lesson):
-    whenever the union of never-verified, source-stale, rotation-due, and
-    cadence-overdue-streaming keys fits in the driver's ~50-key window,
-    the first 50 of driver_order must contain ALL of them — no priority
-    key may be crowded out by fresh verified keys."""
-    from bigdatawork_spark.registry import (
-        ROTATION_DUE,
-        STREAMING_CADENCE,
-        _verified_hashes,
-        driver_latest_round,
-        is_streaming_key,
-        source_hash,
-    )
+    whenever the union of never-verified, source-stale and
+    cadence-overdue-streaming keys (tiers 0-3) fits in the driver's
+    ~50-key window, the first 50 of driver_order must contain ALL of
+    them — no priority key may be crowded out by fresh verified keys."""
+    from bigdatawork_spark.registry import _verified_hashes, driver_latest_round
 
     vintage = driver_latest_round()
     if not vintage:
@@ -256,16 +216,11 @@ def test_driver_window_covers_priority_tiers_when_they_fit():
     verified = driver_verified_keys()
     recorded = _verified_hashes()
     upcoming = max(vintage.values()) + 1
-    need = set()
-    for k in QUERIES:
-        if k not in verified:
-            need.add(k)
-        elif recorded.get(k) != source_hash(k):
-            need.add(k)
-        elif k in ROTATION_DUE and upcoming >= ROTATION_DUE[k] > vintage.get(k, 0):
-            need.add(k)
-        elif is_streaming_key(k) and vintage.get(k, 0) <= upcoming - STREAMING_CADENCE:
-            need.add(k)
+    need = {
+        k
+        for k in QUERIES
+        if _mirror_tier(k, verified, recorded, vintage, upcoming) < 4
+    }
     if len(need) > 50:
         pytest.skip(f"priority tiers exceed the window ({len(need)} keys)")
     window = set(list(driver_order(QUERIES))[:50])
@@ -273,42 +228,40 @@ def test_driver_window_covers_priority_tiers_when_they_fit():
     assert not missing, f"priority keys crowded out of the 50-key window: {missing}"
 
 
-def test_rotation_due_well_formed_and_self_disabling():
-    from bigdatawork_spark.registry import ROTATION_DUE, driver_latest_round
-
-    unknown = [k for k in ROTATION_DUE if k not in QUERIES]
-    assert not unknown, f"ROTATION_DUE keys not in registry: {unknown}"
-    # Self-disabling: once a key's vintage reaches its due round the boost
-    # is inert — simulate by checking the predicate, not the artifact.
-    vintage = driver_latest_round()
-    for k, due_round in ROTATION_DUE.items():
-        if vintage.get(k, 0) >= due_round:
-            continue  # consumed entries are fine
-        assert due_round >= 12
-
-
-def test_driver_order_floats_stale_keys_ahead_of_fresh(tmp_path):
+def test_driver_order_floats_stale_keys_ahead_of_fresh(tmp_path, monkeypatch):
     """VERDICT r06 item 5: a verified key whose builder source changed
     since its recorded verification hash must outrank verified-unchanged
-    keys (a green row certifies only the source that produced it)."""
+    keys (a green row certifies only the source that produced it).
+
+    Front-loading is checked on a real case, not a vacuous one: one
+    contract key and one extra are dropped from the verified set, so the
+    order must run contract key, then extra, then the stale key."""
     import json
 
+    from bigdatawork_spark import registry
     from bigdatawork_spark.registry import _verified_hashes, source_hash
 
-    verified = sorted(driver_verified_keys() & set(QUERIES))
-    if len(verified) < 2:
-        pytest.skip("need at least two verified keys")
-    stale_key, fresh_key = verified[0], verified[1]
+    real = driver_verified_keys()
+    verified = sorted(real & set(QUERIES))
+    contract = next((k for k in verified if k in CONTRACT_KEYS), None)
+    extra = next((k for k in verified if k not in CONTRACT_KEYS), None)
+    rest = [k for k in verified if k not in (contract, extra)]
+    if contract is None or extra is None or len(rest) < 2:
+        pytest.skip("need a verified contract key, extra and two others")
+    stale_key, fresh_key = rest[0], rest[1]
     snap = {k: source_hash(k) for k in verified}
     snap[stale_key] = "0" * 64  # pretend its source changed since the row
     hf = tmp_path / "hashes.json"
     hf.write_text(json.dumps(snap))
+    now_verified = real - {contract, extra}
+    monkeypatch.setattr(registry, "driver_verified_keys", lambda: now_verified)
     ordered = list(driver_order(QUERIES, _hash_file=str(hf)))
-    assert ordered.index(stale_key) < ordered.index(fresh_key)
+    pos = ordered.index
+    assert pos(contract) < pos(extra) < pos(stale_key) < pos(fresh_key)
     # the stale key still ranks BEHIND every never-verified key
     for k in QUERIES:
-        if k not in verified:
-            assert ordered.index(k) < ordered.index(stale_key)
+        if k not in now_verified:
+            assert pos(k) < pos(stale_key)
     # hygiene: the real snapshot parses and covers only registered keys
     real = _verified_hashes()
     assert set(real) <= set(QUERIES)
@@ -398,6 +351,57 @@ def test_helper_edit_marks_every_caller_stale(tmp_path):
         sys.modules.pop("bigdatawork_spark._closure_probe", None)
 
 
+_PROBE_PROSE = '''\
+_CAP = 4
+
+
+def prose_helper():
+    return 0
+
+
+def fmt_helper():
+    return 1
+
+
+def caller_prose(v):
+    """Formats v; see prose_helper for the other half."""
+    # prose_helper is not called here
+    return "prose_helper: " + str(v)
+
+
+def caller_code(v):
+    from bigdatawork_spark import _closure_probe as probe
+
+    return f"{fmt_helper()}:{v}" * probe._CAP
+'''
+
+
+def test_closure_fingerprints_code_not_prose(tmp_path):
+    """The closure is built from the AST's names, not a textual scan: a
+    helper named only in a docstring, a comment or a string literal stays
+    out of the caller's fingerprint (so editing it stales no key that
+    merely mentions it), while a helper called inside an f-string
+    expression and a constant reached through an attribute stay in."""
+    import sys
+
+    from bigdatawork_spark import registry
+
+    try:
+        mod = _load_probe_module(tmp_path / "probe_prose.py", _PROBE_PROSE)
+        prose = registry.closure_sources(mod.caller_prose)
+        assert not any(t.endswith(".prose_helper") for t in prose), sorted(prose)
+        code = registry.closure_sources(mod.caller_code)
+        assert any(t.endswith(".fmt_helper") for t in code), sorted(code)
+        assert any(t.endswith("._CAP") for t in code), sorted(code)
+    finally:
+        registry._CONST_SRC_CACHE.pop("bigdatawork_spark._closure_probe", None)
+        sys.modules.pop("bigdatawork_spark._closure_probe", None)
+    # real registry: text_unigram_logprob's docstring names tfidf_keywords,
+    # which must not enter its fingerprint
+    cs = registry.closure_sources(registry.QUERIES["text_unigram_logprob"])
+    assert not any(t.endswith("llm_ops.tfidf_keywords") for t in cs), sorted(cs)
+
+
 def test_closure_covers_in_function_imports():
     """r13 review: helpers bound by an in-function ``from … import``
     never reach ``__globals__``, so the global-namespace walk alone
@@ -446,13 +450,7 @@ def test_driver_order_rotates_oldest_vintage_first():
     round of their newest clean driver row ascending, so the driver's
     ~50-key window resamples the stalest vintages (r01/r03 §2-B/J/H/A keys)
     instead of a fixed priority order."""
-    from bigdatawork_spark.registry import (
-        _verified_hashes,
-        driver_latest_round,
-        source_hash,
-    )
-
-    from bigdatawork_spark.registry import is_streaming_key
+    from bigdatawork_spark.registry import _verified_hashes, driver_latest_round
 
     vintage = driver_latest_round()
     if not vintage:
@@ -461,12 +459,8 @@ def test_driver_order_rotates_oldest_vintage_first():
     recorded = _verified_hashes()
     upcoming = max(vintage.values()) + 1
     ordered = list(driver_order(QUERIES))
-    # per-tier vintage monotonicity (tiers 2, 3, 4 separately).  Tier 3
-    # additionally sub-ranks due STREAMING keys ahead of due batch keys
-    # (VERDICT r15 item 1: the cadence rule was displaced two rounds
-    # running by the vintage burn-down), so its monotonicity is asserted
-    # per sub-group and the streaming block must precede the batch block.
-    for want_tier in (2, 4):
+    # per-tier vintage monotonicity (tiers 2, 3, 4 separately)
+    for want_tier in (2, 3, 4):
         rounds = [
             vintage.get(k, 0)
             for k in ordered
@@ -474,21 +468,6 @@ def test_driver_order_rotates_oldest_vintage_first():
         ]
         assert rounds == sorted(rounds), (
             f"verified tier {want_tier} not vintage-ascending"
-        )
-    due = [
-        k
-        for k in ordered
-        if _mirror_tier(k, verified, recorded, vintage, upcoming) == 3
-    ]
-    flags = [is_streaming_key(k) for k in due]
-    assert flags == sorted(flags, reverse=True), (
-        "due tier: streaming keys must precede batch keys"
-    )
-    for grp_flag in (True, False):
-        rounds = [vintage.get(k, 0) for k in due if is_streaming_key(k) is grp_flag]
-        assert rounds == sorted(rounds), (
-            f"due tier ({'streaming' if grp_flag else 'batch'} sub-group) "
-            "not vintage-ascending"
         )
 
 

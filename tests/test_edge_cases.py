@@ -454,7 +454,9 @@ def test_tfidf_fallback_matches_broadcast(spark, sf_dir, monkeypatch):
     fast = QUERIES["tfidf_keywords"](spark, sf_dir)
     fast_rows = sorted(map(tuple, fast.collect()))
     # a 1-entry cap is always exceeded → fallback path
-    monkeypatch.setenv("SPARK_GRAFT_TFIDF_VOCAB_CAP", "1")
+    from bigdatawork_spark.operators import llm_ops
+
+    monkeypatch.setattr(llm_ops, "TFIDF_VOCAB_CAP", 1)
     slow = QUERIES["tfidf_keywords"](spark, sf_dir)
     from bigdatawork_spark.plans.explain import plan_string
 

@@ -384,3 +384,40 @@ def test_stateful_tws_kill_restart_equals_batch_twin(spark, sf_dir):
     )
     assert diff == 0, f"{diff} users' recovered counts diverge from the batch twin"
     assert w_latest.count() == want.count()  # every user emitted at least once
+
+
+_SCRATCH_PROBE = """\
+import os, sys
+sys.path.insert(0, {root!r})
+from bigdatawork_spark.sources import io_ops
+from bigdatawork_spark.streaming import stream_ops
+
+with open(os.path.join(stream_ops._fresh_dir("t"), "f"), "w") as f:
+    f.write("x")
+with open(io_ops._tmp("t"), "w") as f:
+    f.write("x")
+print(os.getpid(), stream_ops._STREAM_ROOT, io_ops._TMP_ROOT)
+"""
+
+
+def test_scratch_roots_are_per_process_and_removed_at_exit(tmp_path):
+    """The stream and io scratch roots are private to the process that
+    made them and gone once it exits, so runs do not pile up sources,
+    checkpoints and drained results.  The probe process imports the
+    package without starting Spark."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_PROBE.format(root=root)],
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True, text=True, timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    pid, *roots = done.stdout.split()[-3:]
+    for scratch in roots:
+        assert scratch.startswith(str(tmp_path)), scratch
+        assert scratch.endswith(f"-{pid}"), scratch
+        assert not os.path.exists(scratch), f"{scratch} left behind"

@@ -23,7 +23,6 @@ Usage:
   python tools/update_verified_hashes.py --bootstrap # after a full local sim
 """
 
-import glob
 import json
 import os
 import sys
@@ -31,27 +30,22 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bigdatawork_spark  # noqa: F401 — populates the registry
-from bigdatawork_spark.registry import QUERIES, driver_verified_keys, source_hash
+from bigdatawork_spark.registry import (
+    QUERIES,
+    correctness_rows,
+    driver_verified_keys,
+    is_clean_row,
+    source_hash,
+)
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SNAP = os.path.join(ROOT, "VERIFIED_HASHES.json")
 
 
 def newest_round_keys() -> set[str]:
-    files = sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")))
-    if not files:
-        return set()
-    with open(files[-1]) as f:
-        data = json.load(f)
-    out = set()
-    for k, row in data.items():
-        if not isinstance(row, dict):
-            continue
-        if row.get("hash_match") is True or (
-            row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-        ):
-            out.add(k)
-    return out
+    rows = correctness_rows()
+    newest = max((rnd for rnd, _, _ in rows), default=None)
+    return {k for rnd, k, row in rows if rnd == newest and is_clean_row(row)}
 
 
 def retired_keys() -> list[str]:
@@ -61,14 +55,7 @@ def retired_keys() -> list[str]:
     audits that union the CORRECTNESS history from counting these
     historical rows as unverified drift: their rows certify source that was
     deliberately retired, not source that went unverified."""
-    seen: set[str] = set()
-    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        seen.update(k for k, row in data.items() if isinstance(row, dict))
+    seen = {k for _, k, _ in correctness_rows()}
     return sorted(seen - set(QUERIES))
 
 
