@@ -237,14 +237,17 @@ def closure_sources(fn) -> dict[str, str]:
     derived columns, …) must mark every caller stale, so the fingerprint
     covers the transitive closure, not just the builder's own text
     (VERDICT r12 item 3).  Names come from one ``ast.walk`` over each
-    source: ``Name`` ids and ``Attribute`` attrs that resolve in the
-    function's global namespace (f-string expressions included — that is
-    how oracle decorators reach ``_AUG_SQL``), plus ``import`` /
-    ``from … import`` statements, which bind inside a body and never reach
-    ``__globals__`` (the streaming admission family's ``stamp_mtimes``,
-    ``sql_api.sql``, …).  Docstrings, comments and string literals are not
-    code: a helper named only in prose is not part of the closure, so
-    editing it stales no key that merely mentions it.
+    source: ``Name`` ids that resolve in the function's global namespace
+    (f-string expressions included — that is how oracle decorators reach
+    ``_AUG_SQL``), ``mod.attr`` attributes whose ``mod`` is bound to a
+    package module (by the globals or an in-body import), plus ``import``
+    / ``from … import`` statements, which bind inside a body and never
+    reach ``__globals__`` (the streaming admission family's ``_split``,
+    ``sql_api.sql``, …).  Any other attribute — a method call such as
+    ``readStream….load()``, a field — names nothing here.  Docstrings,
+    comments and string literals are not code: a helper named only in
+    prose is not part of the closure, so editing it stales no key that
+    merely mentions it.
 
     Package-local functions and classes recurse; plain-value constants
     contribute their assignment text (``_const_srcs``); a plain ``import
@@ -305,11 +308,14 @@ def closure_sources(fn) -> dict[str, str]:
         except SyntaxError:
             tree = ast.Module(body=[], type_ignores=[])
         names: set[str] = set()
+        attrs: set[tuple[str, str]] = set()  # (module name, attr) pairs
+        local_mods: dict[str, Any] = {}  # names an in-body import binds
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
                 names.add(node.id)
             elif isinstance(node, ast.Attribute):
-                names.add(node.attr)
+                if isinstance(node.value, ast.Name):
+                    attrs.add((node.value.id, node.attr))
             elif isinstance(node, ast.Import):
                 # the bound name is a module: fold the whole module's source
                 # (coarse but safe — any edit to it marks the key stale)
@@ -346,14 +352,24 @@ def closure_sources(fn) -> dict[str, str]:
                 except Exception:
                     continue
                 for alias in node.names:
-                    obj = getattr(m, alias.name, None)
-                    if obj is not None and obj is not f:
+                    obj = getattr(m, alias.name, None) or sys.modules.get(
+                        f"{target}.{alias.name}"
+                    )
+                    if inspect.ismodule(obj):
+                        local_mods[alias.asname or alias.name] = obj
+                    elif obj is not None and obj is not f:
                         take(obj, target, alias.name)
         cmod = g.get("__name__", mod)
         for name in sorted(names):
             obj = g.get(name)
             if obj is not None and obj is not f:
                 take(obj, cmod, name)
+        for base, attr in sorted(attrs):
+            m = local_mods.get(base) or g.get(base)
+            if inspect.ismodule(m) and in_pkg(m.__name__):
+                obj = getattr(m, attr, None)
+                if obj is not None and obj is not f:
+                    take(obj, m.__name__, attr)
     return out
 
 

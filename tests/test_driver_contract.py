@@ -402,6 +402,44 @@ def test_closure_fingerprints_code_not_prose(tmp_path):
     assert not any(t.endswith("llm_ops.tfidf_keywords") for t in cs), sorted(cs)
 
 
+_PROBE_ATTR = '''\
+from bigdatawork_spark import session as sess
+
+
+def helper():
+    return 0
+
+
+def caller_method(obj):
+    return obj.helper()
+
+
+def caller_module(df):
+    return sess.spread_if_narrow(df)
+'''
+
+
+def test_closure_resolves_attributes_by_their_module(tmp_path):
+    """An attribute enters the closure only through the module it is read
+    from: a method call that shares a module helper's name does not pull
+    that helper in (``readStream….load()`` once staled
+    ``source_stream_rate`` on every ``io.load`` edit), while a helper
+    reached as ``module.helper`` through a module global does."""
+    import sys
+
+    from bigdatawork_spark import registry
+
+    try:
+        mod = _load_probe_module(tmp_path / "probe_attr.py", _PROBE_ATTR)
+        cs = registry.closure_sources(mod.caller_method)
+        assert not any(t.endswith("_closure_probe.helper") for t in cs), sorted(cs)
+        cs = registry.closure_sources(mod.caller_module)
+        assert "bigdatawork_spark.session.spread_if_narrow" in cs, sorted(cs)
+    finally:
+        registry._CONST_SRC_CACHE.pop("bigdatawork_spark._closure_probe", None)
+        sys.modules.pop("bigdatawork_spark._closure_probe", None)
+
+
 def test_closure_covers_in_function_imports():
     """r13 review: helpers bound by an in-function ``from … import``
     never reach ``__globals__``, so the global-namespace walk alone
