@@ -1611,20 +1611,22 @@ aug AS (
 """
 
 
+def _replica_plants(d):
+    """The Spark twin of _AUG_SQL's replica branches over ``d``'s columns:
+    every doc_id % 50 = 0 row again at +1000007, every % 50 = 7 row at
+    +1000010.  The streaming admission sources stage these as their
+    replica file."""
+    def shifted(rem, by):
+        planted = d.filter(F.col("doc_id") % 50 == rem)
+        return planted.withColumn("doc_id", F.col("doc_id") + by)
+
+    return shifted(0, 1000007).unionByName(shifted(7, 1000010))
+
+
 def _augmented_documents(spark, sf_dir):
     """documents ∪ the deterministic replica plants (see _AUG_SQL)."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    return (
-        d.unionByName(
-            d.filter(F.col("doc_id") % 50 == 0).select(
-                (F.col("doc_id") + 1000007).alias("doc_id"), "text", "source"
-            )
-        ).unionByName(
-            d.filter(F.col("doc_id") % 50 == 7).select(
-                (F.col("doc_id") + 1000010).alias("doc_id"), "text", "source"
-            )
-        )
-    )
+    return d.unionByName(_replica_plants(d))
 
 
 def _hashed_documents(spark, sf_dir, *, augmented: bool, cache: bool = True):
@@ -1684,6 +1686,20 @@ def _split(spark, sf_dir, *, augmented: bool = True, cache: bool = True):
     )
 
 
+def _admitted(batch, idx):
+    """The admission survivor relation: the batch collapsed per content
+    hash (min doc_id, copy count), minus every hash in the index ``idx``."""
+    grp = batch.groupBy("h").agg(
+        F.min("doc_id").alias("doc_id"),
+        F.count(F.lit(1)).cast("bigint").alias("n_batch_copies"),
+    )
+    return (
+        grp.join(idx, "h", "left_anti")
+        .select("doc_id", F.col("h").alias("text_hash"), "n_batch_copies")
+        .orderBy("doc_id")
+    )
+
+
 @register(
     "dedup_incremental_exact",
     oracle=f"""
@@ -1718,15 +1734,7 @@ def dedup_incremental_exact(spark, sf_dir):
     the vacuous 0=0 a dup-free corpus would give."""
     batch, corpus = _split(spark, sf_dir)
     idx = corpus.select("h").distinct()
-    grp = batch.groupBy("h").agg(
-        F.min("doc_id").alias("doc_id"),
-        F.count(F.lit(1)).cast("bigint").alias("n_batch_copies"),
-    )
-    return (
-        grp.join(idx, "h", "left_anti")
-        .select("doc_id", F.col("h").alias("text_hash"), "n_batch_copies")
-        .orderBy("doc_id")
-    )
+    return _admitted(batch, idx)
 
 
 @register(
@@ -2010,15 +2018,7 @@ def dedup_index_persisted(spark, sf_dir):
     corpus.select("h").distinct().write.mode("overwrite").parquet(idx_path)
 
     idx = spark.read.parquet(idx_path)
-    grp = batch.groupBy("h").agg(
-        F.min("doc_id").alias("doc_id"),
-        F.count(F.lit(1)).cast("bigint").alias("n_batch_copies"),
-    )
-    return (
-        grp.join(idx, "h", "left_anti")
-        .select("doc_id", F.col("h").alias("text_hash"), "n_batch_copies")
-        .orderBy("doc_id")
-    )
+    return _admitted(batch, idx)
 
 
 # --- folded from the staged round-6 module (r15 module-hygiene

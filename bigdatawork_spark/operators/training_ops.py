@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..io import load
 from ..registry import register
 from ..session import restage, spread_if_narrow
+from .curation import split_label_sql
 
 
 @register(
@@ -308,8 +309,6 @@ def decontaminate_exact(spark, sf_dir):
     a left-semi/anti join on the fingerprint — at 100 TB the benchmark
     side is the broadcast side (eval sets are small by construction), so
     the scan stays single-pass with no wide shuffle."""
-    from .curation import split_label_sql
-
     d = load(spark, sf_dir, "documents").selectExpr(
         "doc_id",
         "source",
@@ -483,28 +482,13 @@ def mixture_epoch_plan(spark, sf_dir):
 # --- folded from the round-10 module (r15 module-hygiene fold,
 # VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
 
-#: (training_ops.py) — same thresholds so the two decontamination keys
-#: report over the identical split.
-_SPLIT_CASE = (
-    "CASE WHEN substring(md5(cast(doc_id as string)), 1, 4) < 'e666' "
-    "THEN 'train' WHEN substring(md5(cast(doc_id as string)), 1, 4) "
-    "< 'f333' THEN 'val' ELSE 'test' END"
-)
-
-_SPLIT_CASE_DUCK = (
-    "CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666' "
-    "THEN 'train' WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) "
-    "< 'f333' THEN 'val' ELSE 'test' END"
-)
-
-
 @register(
     "decontaminate_ngram",
     oracle=f"""
 WITH w AS (
   SELECT doc_id, source,
          list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws,
-         {_SPLIT_CASE_DUCK} AS split
+         {split_label_sql("doc_id")} AS split
   FROM documents WHERE text IS NOT NULL
 ),
 g AS (
@@ -565,7 +549,7 @@ def ngram_contamination(docs, n: int = 8):
         "doc_id",
         "source",
         "filter(split(lower(text), ' '), x -> x != '') as ws",
-        f"{_SPLIT_CASE} as split",
+        f"{split_label_sql('doc_id')} as split",
     )
     g = w.filter(F.size("ws") >= n).selectExpr(
         "doc_id",

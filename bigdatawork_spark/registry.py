@@ -308,7 +308,7 @@ def closure_sources(fn) -> dict[str, str]:
         except SyntaxError:
             tree = ast.Module(body=[], type_ignores=[])
         names: set[str] = set()
-        attrs: set[tuple[str, str]] = set()  # (module name, attr) pairs
+        attrs: set[tuple[str, str]] = set()  # (base, attr) of each base.attr
         local_mods: dict[str, Any] = {}  # names an in-body import binds
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
@@ -352,9 +352,9 @@ def closure_sources(fn) -> dict[str, str]:
                 except Exception:
                     continue
                 for alias in node.names:
-                    obj = getattr(m, alias.name, None) or sys.modules.get(
-                        f"{target}.{alias.name}"
-                    )
+                    obj = getattr(m, alias.name, None)
+                    if obj is None:  # a submodule not yet set on its package
+                        obj = sys.modules.get(f"{target}.{alias.name}")
                     if inspect.ismodule(obj):
                         local_mods[alias.asname or alias.name] = obj
                     elif obj is not None and obj is not f:

@@ -602,7 +602,7 @@ def table_format_stream_read(spark, sf_dir):
     the stream moves only each commit's delta — the manifest rows are
     metadata-sized and the checkpoint guarantees each commit applies
     once."""
-    from ..streaming.stream_ops import _fresh_dir
+    from ..streaming.stream_ops import _fresh_dir, _run_stream
 
     path = _tmp("manifest_stream_read")
     shutil.rmtree(path, ignore_errors=True)
@@ -632,14 +632,7 @@ def table_format_stream_read(spark, sf_dir):
             if added:
                 spark.read.parquet(*added).write.mode("append").parquet(out)
 
-    q = (
-        t.stream_manifests()
-        .writeStream.foreachBatch(apply_commit)
-        .option("checkpointLocation", _fresh_dir("chk-tf-read"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_stream(t.stream_manifests(), apply_commit, "tf-read")
     return (
         spark.read.parquet(out)
         .groupBy("event_type")
@@ -673,7 +666,7 @@ def table_format_stream_sink(spark, sf_dir):
     the final table must equal the full source, oracle-checked including
     a COUNT DISTINCT.  This is the streaming-ETL landing pattern: batch
     id → commit name is the transactional handshake Delta sinks use."""
-    from ..streaming.stream_ops import _events_source_dir, _fresh_dir, _read_stream
+    from ..streaming.stream_ops import _events_source_dir, _read_stream, _run_stream
 
     src = _events_source_dir(
         spark,
@@ -691,14 +684,7 @@ def table_format_stream_sink(spark, sf_dir):
         # simulate a failure-replay of the same batch: must be a no-op
         assert t.append(batch_df, n_files=2, name=f"stream-{batch_id}") == v
 
-    q = (
-        _read_stream(spark, src, max_files=1)
-        .writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", _fresh_dir("chk-tf-sink"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_stream(_read_stream(spark, src, max_files=1), commit_batch, "tf-sink")
     return (
         t.read()
         .groupBy("event_type")

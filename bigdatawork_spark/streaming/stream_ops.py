@@ -4,12 +4,14 @@ All keys are rows-only (streaming results aren't DuckDB-expressible); the
 windowing LOGIC is hash-verified through the batch twins in
 ``operators/windows.py`` (SURVEY §2-I evidence note).
 
-Test harness pattern (§5.3 / §3.3): file-source replay of events parquet →
-``trigger(availableNow=True)`` → ``_drain_to_parquet`` (a foreachBatch
-sink writing each micro-batch executor-side) → read the parquet back as
-the final static table.  Checkpoints live in fresh /tmp dirs so
-reruns never resume stale state.  At scale: same code with a real source
-(Kafka/files), RocksDB state store, and a durable checkpoint dir.
+Test harness pattern (§5.3 / §3.3): stage → read → run.  ``_stage``
+writes a key's frames into a fresh dir in trigger order; ``_read_stream``
+replays it as a file source; ``_run_stream`` starts the one foreachBatch
+``trigger(availableNow=True)`` query, and ``_drain_to_parquet`` (its
+parquet-writing caller) reads the result back as the final static table.
+Checkpoints live in fresh /tmp dirs so reruns never resume stale state.
+At scale: same code with a real source (Kafka/files), RocksDB state store,
+and a durable checkpoint dir.
 """
 
 from __future__ import annotations
@@ -43,73 +45,69 @@ def _fresh_dir(tag: str) -> str:
     return path
 
 
-def stamp_mtimes(src: str, order: int, stamped: set) -> None:
-    """Pin the parquet files a write just added under ``src`` to a
-    strictly-increasing synthetic mtime (``order`` minutes past a fixed
-    epoch), recording them in ``stamped``.  FileStreamSource processes
-    files in modification-time order; the 50 ms sleeps the per-trigger
-    writers previously relied on can TIE on a filesystem with coarse
-    mtime granularity, reordering triggers — under a watermark that
-    late-drops earlier windows' events (ADVICE r12,
-    ``stream_index_admission_wm``).  Explicit ``os.utime`` makes trigger
-    order a property of the data, not of host timing."""
-    t = 1_700_000_000.0 + 60.0 * order
-    for f in glob.glob(os.path.join(src, "*.parquet")):
-        if f not in stamped:
-            stamped.add(f)
-            os.utime(f, (t, t))
+def _parquet_files(src: str) -> set[str]:
+    return set(glob.glob(os.path.join(src, "*.parquet")))
 
 
-# Default-source staging memo (session_memo "stream_src").  ~10 streaming
-# keys stage the IDENTICAL single-chunk copy of events; the staged dir is
-# immutable input (every query still computes from it with a fresh
-# checkpoint), so re-writing it per key was pure waste — measured 8.9 s
-# cold / 2.1 s warm per write at sf1.0, ~20 s/round across the streaming
-# family (r16).  Chunked callers (batch-boundary-sensitive replays) keep
-# fresh dirs.
-def _memo_lookup(memo, key):
+def _stamp_trigger(files, i: int) -> None:
+    """Give ``files`` trigger ``i``'s synthetic mtime (``i`` minutes past a
+    fixed epoch).  FileStreamSource reads files in mtime order; write-time
+    mtimes can TIE on a coarse-granularity filesystem and reorder triggers,
+    which under a watermark late-drops earlier windows' events (ADVICE
+    r12).  Explicit mtimes make trigger order a property of the data."""
+    t = 1_700_000_000.0 + 60.0 * i
+    for f in files:
+        os.utime(f, (t, t))
+
+
+def _stage(frames, tag: str) -> str:
+    """Write each frame, in order, into a fresh dir and return it; frame
+    i's files carry trigger i's mtime.  The caller lays out each frame:
+    a one-partition frame is one file, i.e. one trigger under
+    ``maxFilesPerTrigger=1``."""
+    src = _fresh_dir(tag)
+    done: set[str] = set()
+    for i, frame in enumerate(frames):
+        frame.write.mode("append").parquet(src)
+        new = _parquet_files(src) - done
+        _stamp_trigger(new, i)
+        done |= new
+    return src
+
+
+def _staged_once(spark, key, frames) -> str:
+    """``_stage(frames(), "src")`` memoized per session under ``key``: the
+    staged dir is immutable input (every query still computes from it
+    with a fresh checkpoint), and ~10 keys stage the IDENTICAL events copy
+    — re-writing it per key cost 8.9 s cold / 2.1 s warm at sf1.0 (r16)."""
+    memo = session_memo(spark, "stream_src")
     got = memo.get(key)
     # guard against a tmp reaper having removed the dir
-    if got and glob.glob(os.path.join(got, "*.parquet")):
+    if got and _parquet_files(got):
         return got
-    return None
+    memo[key] = src = _stage(frames(), "src")
+    return src
 
 
 def _events_source_dir(spark, sf_dir, chunks: list | None = None) -> str:
-    """Write events (µs timestamps — streaming reader also rejects ns) into
-    a fresh dir as one file per chunk predicate, in order.  The default
-    (single catch-all chunk) staging is memoized per (session, sf_dir).
+    """Stage events (µs timestamps — streaming reader also rejects ns) as
+    one file per chunk predicate, in order.  The default (single
+    catch-all chunk) staging is memoized per (session, sf_dir).
 
     r17: the default staging is written at least CORE-WIDTH
-    (``spread_if_narrow``) instead of ``coalesce(1)`` — the staged
-    file set is the scan split plan for every downstream availableNow
-    drain, and a single file made each consumer's scan a 1-task stage
-    (sink_stream_memory's pass-through drain was 7.8-8.5 s at sf1.0 with
-    the whole read+project serialized on one core; 2.1-2.4 s at core
-    width; neutral on the join/agg consumers — A/B in
-    OPTIMIZATION_r17.md).  All files carry the same synthetic mtime, and
-    no default-staging consumer sets maxFilesPerTrigger, so it stays ONE
-    micro-batch with identical rows.  Chunked callers keep one file per
-    chunk — their file boundaries ARE the trigger boundaries."""
-    memo = None
+    (``spread_if_narrow``): the staged file set is the scan split plan of
+    every downstream drain, and one file made each consumer's scan a
+    1-task stage (sink_stream_memory's drain 7.8-8.5 → 2.1-2.4 s at sf1.0;
+    neutral on join/agg consumers — OPTIMIZATION_r17.md).  All its files
+    share trigger 0's mtime and no consumer sets maxFilesPerTrigger, so it
+    stays ONE micro-batch.  Chunked callers keep one file per chunk —
+    their file boundaries ARE the trigger boundaries."""
     if chunks is None:
-        memo = session_memo(spark, "stream_src")
-        got = _memo_lookup(memo, sf_dir)
-        if got:
-            return got
-    src = _fresh_dir("src")
+        return _staged_once(
+            spark, sf_dir, lambda: [spread_if_narrow(load(spark, sf_dir, "events"))]
+        )
     ev = load(spark, sf_dir, "events")
-    stamped: set = set()
-    if chunks is None:
-        spread_if_narrow(ev).write.mode("append").parquet(src)
-        stamp_mtimes(src, 0, stamped)
-    else:
-        for i, pred in enumerate(chunks):
-            ev.filter(pred).coalesce(1).write.mode("append").parquet(src)
-            stamp_mtimes(src, i, stamped)
-    if memo is not None:
-        memo[sf_dir] = src
-    return src
+    return _stage([ev.filter(pred).coalesce(1) for pred in chunks], "src")
 
 
 def _sentinel_events_source_dir(spark, sf_dir) -> str:
@@ -117,31 +115,23 @@ def _sentinel_events_source_dir(spark, sf_dir) -> str:
     full events table as file 1, then two single-row far-future sentinel
     files (2024-02-15 / 2024-02-16) as files 2-3 — the two-sentinel
     watermark-advance lifecycle both keys replay one file per trigger.
-    The two keys previously each wrote this IDENTICAL immutable staging
-    per call (~2-4 s warm at sf1.0); memoized per (session, sf_dir) like
-    the default staging (r17, guide §1.2 — every query still computes
-    from it with a fresh checkpoint).  The events chunk stays ONE file:
-    it must land in one trigger under maxFilesPerTrigger=1."""
-    memo = session_memo(spark, "stream_src")
-    key = (sf_dir, "__sentinel__")
-    got = _memo_lookup(memo, key)
-    if got:
-        return got
-    src = _fresh_dir("src")
-    ev = load(spark, sf_dir, "events")
-    ev.coalesce(1).write.mode("append").parquet(src)
-    stamped: set = set()
-    stamp_mtimes(src, 0, stamped)
-    for i, day in enumerate((15, 16)):
-        spark.sql(
-            f"SELECT CAST({10**9 + i} AS LONG) AS event_id,"
-            f" TIMESTAMP '2024-02-{day} 00:00:00' AS ts,"
-            " CAST(-1 AS LONG) AS user_id, 'sentinel' AS event_type,"
-            " CAST(0.0 AS DOUBLE) AS value, '{}' AS props"
-        ).coalesce(1).write.mode("append").parquet(src)
-        stamp_mtimes(src, i + 1, stamped)
-    memo[key] = src
-    return src
+    Memoized per (session, sf_dir) like the default staging (r17: ~2-4 s
+    warm per call at sf1.0).  The events chunk stays ONE file: it must
+    land in one trigger under maxFilesPerTrigger=1."""
+
+    def frames():
+        sentinels = [
+            spark.sql(
+                f"SELECT CAST({10**9 + i} AS LONG) AS event_id,"
+                f" TIMESTAMP '2024-02-{day} 00:00:00' AS ts,"
+                " CAST(-1 AS LONG) AS user_id, 'sentinel' AS event_type,"
+                " CAST(0.0 AS DOUBLE) AS value, '{}' AS props"
+            ).coalesce(1)
+            for i, day in enumerate((15, 16))
+        ]
+        return [load(spark, sf_dir, "events").coalesce(1), *sentinels]
+
+    return _staged_once(spark, (sf_dir, "__sentinel__"), frames)
 
 
 def _read_stream(spark: SparkSession, src: str, max_files: int | None = None):
@@ -152,13 +142,22 @@ def _read_stream(spark: SparkSession, src: str, max_files: int | None = None):
     return reader.parquet(src)
 
 
-def _drain_to_parquet(
-    sdf,
-    tag: str,
-    output_mode: str = "append",
-    chk: str | None = None,
-    progress: list | None = None,
-):
+def _run_stream(sdf, batch_fn, tag: str, output_mode: str = "append", chk=None):
+    """Start ``sdf`` as one foreachBatch ``availableNow`` query on a fresh
+    checkpoint (or the shared ``chk``), wait for it to drain what is
+    available, and return the finished query."""
+    q = (
+        sdf.writeStream.foreachBatch(batch_fn)
+        .outputMode(output_mode)
+        .option("checkpointLocation", chk or _fresh_dir(f"chk-{tag}"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def _drain_to_parquet(sdf, tag: str, output_mode: str = "append", chk=None, progress=None):
     """Drain an availableNow stream through a foreachBatch parquet sink and
     return the result read back as a static DataFrame — the one drain every
     availableNow key uses.  A memory sink collects every row into DRIVER
@@ -179,18 +178,11 @@ def _drain_to_parquet(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode(mode).parquet(out)
 
-    q = (
-        sdf.writeStream.foreachBatch(_write)
-        .outputMode(output_mode)
-        .option("checkpointLocation", chk or _fresh_dir(f"chk-{tag}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = _run_stream(sdf, _write, tag, output_mode, chk)
     if progress is not None:
         progress[:] = [json.loads(p.json) for p in q.recentProgress]
     spark = sdf.sparkSession
-    if not glob.glob(os.path.join(out, "*.parquet")):
+    if not _parquet_files(out):
         return spark.createDataFrame([], sdf.schema)
     return spark.read.schema(sdf.schema).parquet(out)
 
@@ -321,14 +313,11 @@ def stream_dedup(spark, sf_dir):
     COPY of chunk 1 instead of a second full Spark write of events —
     same rows in both triggers, one staged write instead of two
     (8.6 → ~4 s at sf1.0)."""
-    src = _fresh_dir("src")
-    ev = load(spark, sf_dir, "events")
-    ev.coalesce(1).write.mode("append").parquet(src)
-    stamped: set = set()
-    stamp_mtimes(src, 0, stamped)
-    f1 = glob.glob(os.path.join(src, "*.parquet"))[0]
-    shutil.copyfile(f1, os.path.join(src, "replay-" + os.path.basename(f1)))
-    stamp_mtimes(src, 1, stamped)
+    src = _stage([load(spark, sf_dir, "events").coalesce(1)], "src")
+    (f1,) = _parquet_files(src)
+    replay = os.path.join(src, "replay-" + os.path.basename(f1))
+    shutil.copyfile(f1, replay)
+    _stamp_trigger([replay], 1)
     sdf = (
         _read_stream(spark, src, max_files=1)
         .withWatermark("ts", "30 days")
@@ -771,22 +760,19 @@ def stream_curate_to_table(spark, sf_dir):
     hash set (at scale: a bloom/content-hash index partition-pruned by
     the manifest, not a full re-read); commits are manifest appends —
     metadata-sized."""
-    import uuid as _uuid
-
     from pyspark.sql import Window as _W
 
     from ..sources.io_ops import _tmp
     from ..sources.manifest_format import ManifestTable
 
     d = load(spark, sf_dir, "documents")
-    src = _fresh_dir("curate-src")
     replayed = (F.col("doc_id") % 2 == 1) | (F.col("doc_id") % 10 == 0)
-    stamped: set = set()
-    for i, pred in enumerate((F.col("doc_id") % 2 == 0, replayed)):
-        d.filter(pred).coalesce(1).write.mode("append").parquet(src)
-        stamp_mtimes(src, i, stamped)
+    src = _stage(
+        [d.filter(p).coalesce(1) for p in (F.col("doc_id") % 2 == 0, replayed)],
+        "curate-src",
+    )
 
-    path = _tmp(f"stream_curate_{_uuid.uuid4().hex[:8]}")
+    path = _tmp(f"stream_curate_{uuid.uuid4().hex[:8]}")
     t = ManifestTable(spark, path)
 
     def land(batch_df, batch_id):
@@ -803,14 +789,7 @@ def stream_curate_to_table(spark, sf_dir):
         if not fresh.isEmpty():
             t.append(fresh, n_files=2, name=f"curate-{batch_id}")
 
-    q = (
-        _read_stream(spark, src, max_files=1)
-        .writeStream.foreachBatch(land)
-        .option("checkpointLocation", _fresh_dir("chk-curate"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_stream(_read_stream(spark, src, max_files=1), land, "curate")
     return (
         t.read()
         .groupBy("source")
@@ -849,16 +828,15 @@ def stream_restart_checkpoint(spark, sf_dir):
     _drain_to_parquet(sdf, "restart", output_mode="complete", chk=chk)
 
     # the source grows AFTER the first query finished and stopped
-    ev.filter(F.col("event_id") > F.lit(cut)).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
+    grown = ev.filter(F.col("event_id") > F.lit(cut)).coalesce(1)
+    grown.write.mode("append").parquet(src)
 
     out = _drain_to_parquet(sdf, "restart", output_mode="complete", chk=chk)
     return out.orderBy("user_id")
 
 
-# _split stays in operators.curation — imported in-function at the three
-# admission call sites (the repo's cross-package pattern).
+# _split and _replica_plants stay in operators.curation — imported
+# in-function at the admission call sites (cross-package pattern).
 
 # ---------------------------------------------------------------------------
 # stream_index_admission — the streaming twin of the admission family
@@ -893,27 +871,21 @@ def stream_index_admission(spark, sf_dir):
     pins the state-store eviction as a runtime metric; the index side
     stays a plain batch relation re-read per micro-batch, i.e. the
     persisted-index shape."""
-    from ..operators.curation import _split
+    from ..operators.curation import _replica_plants, _split
 
     batch, corpus = _split(spark, sf_dir, augmented=False)
-    src = _fresh_dir("src-adm")
-    nat = batch.select("doc_id", "text")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # r17: repartition(1), not coalesce(1) — coalesce collapses the
     # parallel filter over the core-width _split cache back into ONE
     # task; the explicit 1-partition exchange keeps the filter parallel
     # and ships only the staged rows (wm staging A/B: 5.7-7.5 → 1.8-2.6 s)
-    nat.repartition(1).write.mode("append").parquet(src)
-    stamped: set = set()
-    stamp_mtimes(src, 0, stamped)  # explicit mtime order (ADVICE r12)
-    plants = nat.filter(F.col("doc_id") % 50 == 7).select(
-        (F.col("doc_id") + 1000010).alias("doc_id"), "text"
-    ).unionByName(
-        corpus.filter(F.col("doc_id") % 50 == 0).select(
-            (F.col("doc_id") + 1000007).alias("doc_id"), "text"
-        )
+    src = _stage(
+        [
+            batch.select("doc_id", "text").repartition(1),
+            _replica_plants(docs).repartition(1),
+        ],
+        "src-adm",
     )
-    plants.repartition(1).write.mode("append").parquet(src)
-    stamp_mtimes(src, 1, stamped)
 
     # r17: materialize the static index once instead of per micro-batch
     # (see _wm_admission_stream's note)
@@ -938,7 +910,7 @@ def stream_index_admission(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 # Event-time layout for the watermarked ledger: four source files drained
-# one per trigger, each stamped inside a distinct hour so the 30-minute
+# one per trigger, each dated inside a distinct hour so the 30-minute
 # watermark finalizes (emits + EVICTS) each admission window as the next
 # one arrives.  Listed here so the engine test can rebuild the expected
 # relation from the same constants.
@@ -957,49 +929,34 @@ _WM_LAST_PROGRESS: list = []
 
 
 def _wm_source_dir(spark, sf_dir) -> str:
-    """Write the four-trigger admission source (see the builder docstring
-    for the timeline) into a fresh dir, one file per trigger, with
-    explicit strictly-increasing mtimes (ADVICE r12: the 50 ms sleeps this
-    relied on can tie on coarse-mtime filesystems, letting the 03:10 file
-    process first and late-drop window 1 behind the 02:40 watermark).
-    Shared by the builder and the kill/restart recovery test so both
-    drive the identical source lifecycle."""
-    from ..operators.curation import _split
+    """Stage the four-trigger admission source (timeline in the builder
+    docstring), one file per trigger.  Shared by the builder and the
+    kill/restart recovery test so both drive the identical lifecycle."""
+    from ..operators.curation import _replica_plants, _split
 
-    batch, corpus = _split(spark, sf_dir, augmented=False)
-    src = _fresh_dir("src-admwm")
-    stamped: set = set()
+    batch, _ = _split(spark, sf_dir, augmented=False)
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
 
-    nat = batch.select("doc_id", "text").withColumn(
-        "event_ts", F.lit(_WM_BASE).cast("timestamp")
-    )
-    # r17: repartition(1) for the same reason as stream_index_admission
-    nat.repartition(1).write.mode("append").parquet(src)
-    stamp_mtimes(src, 1, stamped)
-    plants = (
-        batch.filter(F.col("doc_id") % 50 == 7)
-        .select((F.col("doc_id") + 1000010).alias("doc_id"), "text")
-        .unionByName(
-            corpus.filter(F.col("doc_id") % 50 == 0).select(
-                (F.col("doc_id") + 1000007).alias("doc_id"), "text"
-            )
-        )
-        .withColumn("event_ts", F.lit(_WM_PLANT_TS).cast("timestamp"))
-    )
-    plants.repartition(1).write.mode("append").parquet(src)
-    stamp_mtimes(src, 2, stamped)
+    def at(df, ts):
+        return df.withColumn("event_ts", F.lit(ts).cast("timestamp"))
+
     w2 = batch.select(
         (F.col("doc_id") + _WM_W2_SHIFT).alias("doc_id"),
         F.concat(F.col("text"), F.lit(_WM_W2_SUFFIX)).alias("text"),
-    ).withColumn("event_ts", F.lit(_WM_W2_TS).cast("timestamp"))
-    w2.repartition(1).write.mode("append").parquet(src)
-    stamp_mtimes(src, 3, stamped)
+    )
     sentinel = spark.createDataFrame(
         [(-1, "wm flush sentinel 5f2a")], "doc_id long, text string"
-    ).withColumn("event_ts", F.lit(_WM_FLUSH_TS).cast("timestamp"))
-    sentinel.coalesce(1).write.mode("append").parquet(src)
-    stamp_mtimes(src, 4, stamped)
-    return src
+    )
+    # r17: repartition(1) for the same reason as stream_index_admission
+    return _stage(
+        [
+            at(batch.select("doc_id", "text"), _WM_BASE).repartition(1),
+            at(_replica_plants(docs), _WM_PLANT_TS).repartition(1),
+            at(w2, _WM_W2_TS).repartition(1),
+            at(sentinel, _WM_FLUSH_TS).coalesce(1),
+        ],
+        "src-admwm",
+    )
 
 
 def _wm_admission_stream(spark, sf_dir, src):

@@ -9,6 +9,8 @@ the sweep stays cheap relative to the differential tests.
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 
 from bigdatawork_spark.plans.explain import plan_string
@@ -109,11 +111,9 @@ def test_bnlj_whitelist_keys_still_use_bnlj_or_better(key, spark, sf_dir):
 MEMORY_SINK_OK = {"sink_stream_memory", "source_stream_rate"}
 
 
-def test_memory_sink_only_where_it_is_the_contract():
-    """Static source sweep, no plans built: ``.format("memory")`` (or a
-    ``format="memory"`` keyword) may appear in package source only inside
-    the functions in MEMORY_SINK_OK."""
-    import ast
+def _package_calls(match):
+    """(file, top-level function) of every call in package source for
+    which ``match(call_node)`` holds — a static sweep, no plans built."""
     import pathlib
 
     import bigdatawork_spark
@@ -124,15 +124,54 @@ def test_memory_sink_only_where_it_is_the_contract():
     def visit(node, owner, rel):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             owner = node.name if owner is None else owner
-        if isinstance(node, ast.Call):
-            args = [kw.value for kw in node.keywords if kw.arg == "format"]
-            if isinstance(node.func, ast.Attribute) and node.func.attr == "format":
-                args += node.args[:1]
-            if any(isinstance(a, ast.Constant) and a.value == "memory" for a in args):
-                found.append((rel, owner or "<module>"))
+        if isinstance(node, ast.Call) and match(node):
+            found.append((rel, owner or "<module>"))
         for child in ast.iter_child_nodes(node):
             visit(child, owner, rel)
 
     for path in sorted(root.rglob("*.py")):
         visit(ast.parse(path.read_text()), None, str(path.relative_to(root)))
+    return found
+
+
+def _is_attr_call(node, attr):
+    return isinstance(node.func, ast.Attribute) and node.func.attr == attr
+
+
+def test_memory_sink_only_where_it_is_the_contract():
+    """Static source sweep, no plans built: ``.format("memory")`` (or a
+    ``format="memory"`` keyword) may appear in package source only inside
+    the functions in MEMORY_SINK_OK."""
+
+    def memory_sink(node):
+        args = [kw.value for kw in node.keywords if kw.arg == "format"]
+        if _is_attr_call(node, "format"):
+            args += node.args[:1]
+        return any(isinstance(a, ast.Constant) and a.value == "memory" for a in args)
+
+    found = _package_calls(memory_sink)
     assert {fn for _, fn in found} == MEMORY_SINK_OK, sorted(found)
+
+
+def test_stream_start_and_mtime_have_one_owner():
+    """Every file-source stream starts through ``stream_ops._run_stream``
+    (``sink_stream_memory``'s memory sink is its own contract), and one
+    function sets trigger order: ``trigger(availableNow=True)`` appears only
+    in those two functions, ``os.utime`` only in ``_stamp_trigger``."""
+
+    def available_now(node):
+        return _is_attr_call(node, "trigger") and any(
+            kw.arg == "availableNow" for kw in node.keywords
+        )
+
+    def utime(node):
+        return (
+            _is_attr_call(node, "utime")
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "os"
+        )
+
+    found = _package_calls(available_now)
+    assert {fn for _, fn in found} == {"_run_stream", "sink_stream_memory"}, found
+    found = _package_calls(utime)
+    assert {fn for _, fn in found} == {"_stamp_trigger"}, found

@@ -320,21 +320,14 @@ def test_stateful_tws_kill_restart_equals_batch_twin(spark, sf_dir):
     import pytest
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from bigdatawork_spark.streaming.stream_ops import stamp_mtimes
+    from bigdatawork_spark.streaming.stream_ops import _stage
 
     ev = load(spark, sf_dir, "events")
-    src = _fresh_dir("twsk-src")
-    stamped: set = set()
     # three files → three update-mode micro-batches (maxFilesPerTrigger=1)
-    for i, pred in enumerate(
-        (
-            F.col("event_id") % 3 == 0,
-            F.col("event_id") % 3 == 1,
-            F.col("event_id") % 3 == 2,
-        )
-    ):
-        ev.filter(pred).coalesce(1).write.mode("append").parquet(src)
-        stamp_mtimes(src, i, stamped)
+    src = _stage(
+        [ev.filter(F.col("event_id") % 3 == r).coalesce(1) for r in range(3)],
+        "twsk-src",
+    )
 
     def count_events(key, pdf_iter, state):
         n = state.get[0] if state.exists else 0

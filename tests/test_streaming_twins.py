@@ -305,3 +305,23 @@ def test_drain_to_parquet_modes_and_no_temp_views(spark):
 
     assert QUERIES["stream_tumbling"](spark, SF_SMALL).count() > 0
     assert len(spark.catalog.listTables()) == n_tables
+
+
+def test_stage_orders_triggers_by_frame(spark):
+    """``_stage`` owns trigger order: frames of 5, 1 and 3 rows, replayed
+    one file per trigger, arrive as micro-batches in frame order — not in
+    size or file-name order."""
+    from bigdatawork_spark.streaming.stream_ops import (
+        _drain_to_parquet,
+        _read_stream,
+        _stage,
+    )
+
+    sizes = [5, 1, 3]
+    src = _stage([spark.range(n).coalesce(1) for n in sizes], "t-stage")
+    progress: list = []
+    got = _drain_to_parquet(
+        _read_stream(spark, src, max_files=1), "t-stage", progress=progress
+    )
+    assert got.count() == sum(sizes)
+    assert [p["numInputRows"] for p in progress if p["numInputRows"]] == sizes

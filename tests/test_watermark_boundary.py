@@ -14,23 +14,22 @@ from pyspark.sql import functions as F
 
 from bigdatawork_spark.streaming.stream_ops import (
     _drain_to_parquet,
-    _fresh_dir,
     _read_stream,
-    stamp_mtimes,
+    _stage,
 )
 
 _TS = pd.Timestamp
 
 
-def _write_batch(spark, src, order, stamped, rows):
+def _batch(spark, rows):
+    """One trigger's file: ``rows`` as a one-partition frame."""
     pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id"])
     sdf = (
         spark.createDataFrame(pdf)
         if len(rows)
         else spark.createDataFrame([], "event_id long, ts timestamp, user_id long")
     )
-    sdf.coalesce(1).write.mode("append").parquet(src)
-    stamp_mtimes(src, order, stamped)
+    return sdf.coalesce(1)
 
 
 def test_watermark_window_end_boundary(spark):
@@ -46,23 +45,26 @@ def test_watermark_window_end_boundary(spark):
 
     Batch 4 (15:00) advances the watermark past 13:00 so the last window
     finalizes into the append-mode output."""
-    src = _fresh_dir("wm-boundary")
-    stamped: set = set()
-    _write_batch(
-        spark, src, 0, stamped,
-        [(1, _TS("2024-01-01 10:15:00"), 1),
-         (2, _TS("2024-01-01 11:15:00"), 1),
-         (3, _TS("2024-01-01 13:00:00"), 1)],
+    src = _stage(
+        [
+            _batch(
+                spark,
+                [(1, _TS("2024-01-01 10:15:00"), 1),
+                 (2, _TS("2024-01-01 11:15:00"), 1),
+                 (3, _TS("2024-01-01 13:00:00"), 1)],
+            ),
+            _batch(spark, []),  # watermark-application lag
+            _batch(
+                spark,
+                [(10, _TS("2024-01-01 10:30:00"), 2),
+                 (11, _TS("2024-01-01 11:30:00"), 2),
+                 (12, _TS("2024-01-01 12:05:00"), 2)],
+            ),
+            _batch(spark, [(20, _TS("2024-01-01 15:00:00"), 3)]),
+            _batch(spark, []),  # finalize lag
+        ],
+        "wm-boundary",
     )
-    _write_batch(spark, src, 1, stamped, [])  # watermark-application lag
-    _write_batch(
-        spark, src, 2, stamped,
-        [(10, _TS("2024-01-01 10:30:00"), 2),
-         (11, _TS("2024-01-01 11:30:00"), 2),
-         (12, _TS("2024-01-01 12:05:00"), 2)],
-    )
-    _write_batch(spark, src, 3, stamped, [(20, _TS("2024-01-01 15:00:00"), 3)])
-    _write_batch(spark, src, 4, stamped, [])  # finalize lag
 
     sdf = (
         _read_stream(spark, src, max_files=1)
