@@ -310,10 +310,10 @@ def dedup_ngram_jaccard(spark, sf_dir):
     operator."""
     d = load(spark, sf_dir, "documents")
     # Spread before the regexp gram pass, array_distinct and xxhash64
-    # transform, so the cache below keeps a core-wide layout for every
-    # downstream consumer.  Noop-sink A/B at sf1.0: 31.5-35.6 s →
+    # transform, so the staged cache below keeps a core-wide layout for
+    # every downstream consumer.  Noop-sink A/B at sf1.0: 31.5-35.6 s →
     # 24.2-27.0 s.
-    arrays = (
+    arrays = restage(spark, "dedup_ngram_jaccard", (
         spread_if_narrow(d)
         .select(
             "doc_id",
@@ -330,8 +330,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
         # and the oracle with DuckDB hash() — the md5 sampling draw below
         # is the one hash that must match cross-engine, and does.
         .withColumn("gi", F.expr("transform(gs, x -> xxhash64(x))"))
-        .cache()
-    )
+    ))
     grams = arrays.select("doc_id", F.explode("gs").alias("g"))
     dfg = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     # deterministic Bernoulli block budget: keep when the block is small,
@@ -481,10 +480,11 @@ def pandas_api_bridge(spark, sf_dir):
     ).orderBy("lang")
 
 
-@register(
-    "dedup_cluster_cc",
-    oracle="""
-WITH grams AS (
+# The connected-components oracle up to its final SELECT: grams of the
+# first 60 documents, Jaccard >= 0.45 edges, and ``reach`` — every
+# (node, reachable node) pair by a recursive CTE.  Shared by
+# dedup_cluster_cc and dedup_keep_representative.
+_CC_REACH_SQL = """grams AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
            generate_series(1, length(text) - 2),
@@ -511,7 +511,13 @@ reach AS (
     SELECT r.id, s.dst FROM r JOIN sym s ON r.v = s.src
   )
   SELECT * FROM r
-)
+)"""
+
+
+@register(
+    "dedup_cluster_cc",
+    oracle=f"""
+WITH {_CC_REACH_SQL}
 SELECT id AS doc_id, CAST(MIN(v) AS BIGINT) AS component
 FROM reach GROUP BY id ORDER BY doc_id
 """,
@@ -643,35 +649,8 @@ def fuzzy_match_levenshtein(spark, sf_dir):
 
 @register(
     "dedup_keep_representative",
-    oracle="""
-WITH grams AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, length(text) - 2),
-           i -> substr(text, i, 3)))) AS g
-  FROM documents WHERE doc_id < 60 AND length(text) >= 3
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_both
-  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-edges AS (
-  SELECT id_a AS src, id_b AS dst
-  FROM pairs JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-  WHERE CAST(n_both AS DOUBLE) / (sa.n + sb.n - n_both) >= 0.45
-),
-sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-nodes AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id < 60),
-reach AS (
-  WITH RECURSIVE r(id, v) AS (
-    SELECT id, id FROM nodes
-    UNION
-    SELECT r.id, s.dst FROM r JOIN sym s ON r.v = s.src
-  )
-  SELECT * FROM r
-)
+    oracle=f"""
+WITH {_CC_REACH_SQL}
 SELECT id AS doc_id
 FROM reach GROUP BY id HAVING id = MIN(v)
 ORDER BY doc_id
@@ -1167,17 +1146,13 @@ def dedup_repeated_spans(spark, sf_dir):
         .filter("text is not null and length(text) >= 20")
         .repartition("doc_id")
     )
-    # cache: g feeds both the repeat aggregation and the mark join —
+    # staged cache: g feeds both the repeat aggregation and the mark join —
     # uncached, the 27M-row explode+hash runs twice (sf1.0: 28.6 s -> 21.4 s)
-    g = (
-        d.selectExpr(
-            "doc_id",
-            "explode(sequence(1, length(text) - 19)) as pos",
-            "lower(text) as lt",
-        )
-        .selectExpr("doc_id", "pos", "xxhash64(substring(lt, pos, 20)) as h")
-        .cache()
-    )
+    g = restage(spark, "dedup_repeated_spans", d.selectExpr(
+        "doc_id",
+        "explode(sequence(1, length(text) - 19)) as pos",
+        "lower(text) as lt",
+    ).selectExpr("doc_id", "pos", "xxhash64(substring(lt, pos, 20)) as h"))
     rep = g.groupBy("h").agg(F.count(F.lit(1)).alias("cnt")).where("cnt >= 2")
     marked = g.join(rep.select("h"), "h").selectExpr(
         "doc_id",
@@ -2105,7 +2080,9 @@ def dedup_ladder_exact_stage(spark, sf_dir):
 def dedup_ladder(spark, sf_dir):
     """Production dedup order, composed: (1) exact-dup pre-pass collapses
     hash-identical documents to their min-doc_id representative, (2)
-    MinHash-LSH near-dup detection runs ONLY on the unique representatives.
+    MinHash-LSH near-dup detection (``minhash_pairs`` at its default
+    banding, the dedup_near_minhash pipeline) runs ONLY on the unique
+    representatives.
     SCALE.md §8 MEASURED this order at sf1.0: the pre-pass collapses 50k
     docs → 4992 uniques in 1.3 s and the identical MinHash pipeline then
     finishes in 8.3 s total, vs >45 s (budget timeout) without it — exact
@@ -2121,29 +2098,12 @@ def dedup_ladder(spark, sf_dir):
 
     100 TB: stage 1 shuffles constant-width sha256 keys; stage 2 inherits
     dedup_near_minhash's band-bucket shape on the collapsed corpus."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH, NGram, RegexTokenizer
+    from .llm_ops import minhash_pairs
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     exact_pairs, reps = _ladder_exact_stage(d)
-
-    tok = RegexTokenizer(inputCol="text", outputCol="words", pattern=r"\s+")
-    ngram = NGram(n=3, inputCol="words", outputCol="shingles")
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
-    )
-    staged = tf.transform(ngram.transform(tok.transform(reps)))
-    staged = staged.filter(F.size("shingles") >= 1).cache()
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=5, seed=42)
-    model = lsh.fit(staged)
-    near = model.approxSimilarityJoin(staged, staged, 0.2, distCol="jaccard_dist")
-    near_pairs = (
-        near.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            F.lit("near").alias("kind"),
-            F.round(F.col("jaccard_dist"), 6).alias("jaccard_dist"),
-        )
+    near_pairs = minhash_pairs(reps).select(
+        "doc_a", "doc_b", F.lit("near").alias("kind"), "jaccard_dist"
     )
     return exact_pairs.unionByName(near_pairs).orderBy("kind", "doc_a", "doc_b")
 

@@ -254,26 +254,92 @@ TWIN_CAPS_APPLIED: dict[str, tuple[int, int]] = {}
 #: for these twins, not just their quadratic-cost bound.
 SCORER_BCAST_MAX_BYTES = 64 << 20
 
-# Session-scoped memo for the vectorized twins' collected+broadcast
-# corpus (ADVICE r16: each invocation used to create a fresh ~26 MB
-# broadcast that was never destroyed, accumulating on driver and
-# executors for the session lifetime).  INPUT staging, not result
-# caching — the value is a deterministic projection of the immutable
-# per-sf_dir embeddings table (the events-staging-memo pattern); keyed
-# by (key, sf_dir, audit-cap env) so audit-capped and uncapped corpora
-# never alias.
-def _corpus_broadcast(spark, key: str, sf_dir: str, build):
-    """``build()`` returns (broadcast, pandas corpus); memoized as
-    (broadcast, pandas corpus or None).  The pandas copy only feeds the
-    audit-capped probe side, so uncapped sessions pin just the broadcast
-    handle."""
+def _cosine_corpus(spark, sf_dir: str, n: DataFrame):
+    """The guarded ``(vec_id, label, e, nrm)`` corpus ``n`` as one
+    broadcast of numpy arrays ``(ids, labels, B, nrm)``, rows sorted by
+    vec_id so a stable sort breaks rank ties by id positionally.
+
+    Memory bound: ``guard_twin_size`` bounds the rows (≤ TWIN_MAX_ROWS =
+    50k ≈ 26 MB of f64 at 64 dims), so the guard is also the driver and
+    executor memory bound of the all-pairs scorers; the assert states the
+    byte form.  Collected and broadcast once per ``(sf_dir, audit cap)``
+    in the session memo and shared by every scorer key, since a broadcast
+    per call would never be destroyed.  This is input staging, not result
+    caching — the value is a deterministic projection of the immutable
+    per-sf_dir embeddings table — and an audit-capped corpus never aliases
+    an uncapped one."""
+    import numpy as np
+
     memo = session_memo(spark, "scorer_corpus")
-    audit = os.environ.get(TWIN_AUDIT_ENV)
-    cache_key = (key, sf_dir, audit)
+    cache_key = (sf_dir, os.environ.get(TWIN_AUDIT_ENV))
     if cache_key not in memo:
-        bc, bpdf = build()
-        memo[cache_key] = (bc, bpdf if audit else None)
+        pdf = n.select("vec_id", "label", "e", "nrm").toPandas()
+        order = np.argsort(pdf["vec_id"].to_numpy(dtype=np.int64), kind="stable")
+        B = np.array(pdf["e"].tolist(), dtype=np.float64)[order]
+        if B.ndim != 2:  # empty corpus: keep a 2-D shape for the unpack
+            B = B.reshape((len(pdf), 0))
+        assert B.nbytes <= SCORER_BCAST_MAX_BYTES, (
+            f"scorer corpus broadcast {B.nbytes}B exceeds the "
+            f"{SCORER_BCAST_MAX_BYTES}B cap")
+        memo[cache_key] = spark.sparkContext.broadcast((
+            pdf["vec_id"].to_numpy(dtype=np.int64)[order],
+            pdf["label"].to_numpy(dtype=np.int64)[order],
+            B,
+            pdf["nrm"].to_numpy(dtype=np.float64)[order],
+        ))
     return memo[cache_key]
+
+
+def _cosine_blocks(spark, bc, select, schema: str) -> DataFrame:
+    """All-pairs cosine of the broadcast corpus ``bc`` against itself,
+    scored in row blocks: one ``spark.range`` start row per block, one
+    ``mapInPandas`` over them.  For the block of rows ``lo:lo+m`` it
+    calls ``select(ids, lo, cos, zden)`` — ``cos`` the (m, ncorp) score
+    matrix, ``zden`` its zero-divisor mask — and emits the frame it
+    returns.  The probe side is the corpus itself, so both sides are one
+    materialization by construction, even under the audit cap's
+    ``limit()``.
+
+    Blocks hold ``min(4_000_000 // ncorp, ceil(ncorp / cores))`` rows:
+    the score matrix stays under ~32 MB and every core gets a block.  The
+    layout cannot change a result: each row's scores depend on that row
+    and the corpus alone.
+
+    Bit parity with the crossJoin + ``aggregate(zip_with(...))`` expr
+    twins: their oracles rank or threshold the UN-ROUNDED cosine, so a
+    BLAS matmul (pairwise/FMA sum order, ±1 ulp) could flip near-ties.
+    The dot products accumulate dimension-at-a-time over a zeros init,
+    the same IEEE-754 operation sequence as the fold — ((0.0+p0)+p1)+…
+    with products formed first — so ``cos`` is bit-identical, not merely
+    close.  Spark's non-ANSI double division is replicated by the caller
+    from ``zden``: divisor == 0.0 is NULL, NaN operands with a nonzero
+    divisor give NaN."""
+    import math
+
+    ncorp = len(bc.value[0])
+    width = spark.sparkContext.defaultParallelism
+    rows = max(1, min(4_000_000 // max(ncorp, 1), math.ceil(ncorp / width)))
+    starts = spark.range(
+        0, ncorp, rows, numPartitions=max(1, min(width, math.ceil(ncorp / rows)))
+    )
+
+    def score(batches):
+        import numpy as np
+
+        ids, _, B, bn = bc.value
+        for pdf in batches:
+            for lo in pdf["id"].tolist():
+                hi = min(lo + rows, ncorp)
+                acc = np.zeros((hi - lo, ncorp))
+                for d in range(B.shape[1]):  # fold-order sum
+                    acc += B[lo:hi, d:d + 1] * B[:, d]
+                denom = bn[lo:hi, None] * bn[None, :]
+                zden = denom == 0.0
+                with np.errstate(all="ignore"):
+                    out = select(ids, lo, acc / denom, zden)
+                yield out
+
+    return starts.mapInPandas(score, schema)
 
 
 def guard_twin_size(df: DataFrame, key: str, production_key: str,
@@ -626,113 +692,48 @@ def knn_classify(spark, sf_dir):
     unit-norm corpora; SCALE.md §9.)  Guarded: raises above
     ``TWIN_MAX_ROWS`` input vectors (VERDICT r07 item 5).
 
-    r16 scorer (guide §4.1/§4.2): the all-pairs stage is a numpy
-    ``mapInPandas`` against the sc.broadcast guarded corpus instead of a
-    crossJoin + interpreted ``aggregate(zip_with(...))`` fold — the HOF
-    lambda ran outside codegen and allocated a 64-element array per pair
-    (sf1.0 audit: 51 s capped).  UNLIKE sim_cosine_topk, this key's oracle
-    ranks on the UN-ROUNDED cos_raw, so a BLAS matmul (pairwise/FMA sum
-    order, ±1 ulp) could flip near-ties; the scorer therefore accumulates
-    the dot products dimension-at-a-time (``acc += A[:,d]*B[:,d]`` over a
-    zeros init), which is the SAME IEEE-754 operation sequence as the fold
-    — ((0.0+p0)+p1)+… with products formed first — so cos_raw is
-    bit-identical, not merely close, and the top-5 SET (all the vote
-    consumes) cannot move.  Spark's non-ANSI double semantics are
-    replicated exactly (probed this round): divisor == 0.0 → NULL (ranks
-    LAST under desc), NaN operands with nonzero divisor → NaN (ranks
-    FIRST), ties by nb ASC via a stable (class, -cos) lexsort over the
-    nb-sorted corpus.  ``_knn_classify_expr`` keeps the crossJoin+fold
+    The all-pairs stage scores row blocks of the broadcast corpus
+    (``_cosine_corpus`` / ``_cosine_blocks``, which carry the bit-parity
+    and memory-bound reasoning) instead of a crossJoin + interpreted
+    ``aggregate(zip_with(...))`` fold — the HOF lambda ran outside codegen
+    and allocated a 64-element array per pair (sf1.0 audit: 51 s capped).
+    The oracle ranks on the UN-ROUNDED cos_raw, so the top-5 SET (all the
+    vote consumes) rests on the scorer's bit-identical cosines.  Spark's
+    non-ANSI double ranking is replicated exactly: divisor == 0.0 → NULL
+    (ranks LAST under desc), NaN operands with nonzero divisor → NaN
+    (ranks FIRST), ties by nb ASC via a stable (class, -cos) lexsort over
+    the nb-sorted corpus.  ``_knn_classify_expr`` keeps the crossJoin+fold
     formulation; tests assert frame identity on the edge corpora (zero
-    vector, NaN element, 1e±20 magnitudes, exact duplicate).
-
-    NOTE (VERDICT r16 item 7): ``guard_twin_size`` is load-bearing for
-    DRIVER/EXECUTOR MEMORY here, not just quadratic cost — the guarded
-    corpus is collected to the driver and broadcast (≤ 50k×64 f64 ≈
-    26 MB; byte-asserted against ``SCORER_BCAST_MAX_BYTES``)."""
+    vector, NaN element, 1e±20 magnitudes, exact duplicate)."""
     import numpy as np
     import pandas as pd
 
-    n = _normed_vectors(spark, sf_dir)
-    sel = n.select("vec_id", "label", "e", "nrm")
-    n = guard_twin_size(n, "knn_classify", "knn_classify_ivf")
+    n = guard_twin_size(
+        _normed_vectors(spark, sf_dir), "knn_classify", "knn_classify_ivf"
+    )
+    bc = _cosine_corpus(spark, sf_dir, n)
 
-    # Bounded by the guard — which is thereby also the DRIVER/EXECUTOR
-    # MEMORY bound for this key (≤ TWIN_MAX_ROWS = 50k rows ≈ 26 MB of
-    # f64; SCORER_BCAST_MAX_BYTES asserts the byte form): collect +
-    # broadcast the corpus once per (session, sf_dir, audit-cap), sorted
-    # by vec_id so stable sorting breaks rank ties by nb ASC positionally.
-    def _build():
-        bpdf = n.select("vec_id", "label", "e", "nrm").toPandas()
-        order = np.argsort(bpdf["vec_id"].to_numpy(dtype=np.int64), kind="stable")
-        nb_ids = bpdf["vec_id"].to_numpy(dtype=np.int64)[order]
-        nb_labels = bpdf["label"].to_numpy(dtype=np.int64)[order]
-        Bm = np.array(bpdf["e"].tolist(), dtype=np.float64)[order]
-        if Bm.ndim != 2:  # empty corpus: keep a 2-D shape for the unpack
-            Bm = Bm.reshape((len(bpdf), 0))
-        assert Bm.nbytes <= SCORER_BCAST_MAX_BYTES, (
-            f"knn_classify corpus broadcast {Bm.nbytes}B exceeds the "
-            f"{SCORER_BCAST_MAX_BYTES}B cap")
-        bnrm = bpdf["nrm"].to_numpy(dtype=np.float64)[order]
-        return (
-            spark.sparkContext.broadcast((nb_ids, nb_labels, Bm, bnrm)),
-            bpdf,
+    def top5(ids, lo, cos, zden):
+        m, ncorp = cos.shape
+        k = min(5, ncorp - 1)
+        sr = ids[lo:lo + m]
+        nan = np.isnan(cos) & ~zden
+        # rank classes under cos DESC: NaN(0) < real(1) < NULL(2);
+        # self-pairs (3) are excluded — ncorp-1 ≥ k real candidates
+        # remain, so class 3 never reaches the top k.
+        cls = np.ones((m, ncorp), dtype=np.int8)
+        cls[nan] = 0
+        cls[zden] = 2
+        pos = np.searchsorted(ids, sr)
+        ok = (pos < ncorp) & (ids[np.minimum(pos, ncorp - 1)] == sr)
+        cls[np.flatnonzero(ok), pos[ok]] = 3
+        rk = np.where(nan | zden, 0.0, -cos)
+        top = np.lexsort((rk, cls), axis=-1)[:, :k]
+        return pd.DataFrame(
+            {"src": np.repeat(sr, k), "nb_label": bc.value[1][top].ravel()}
         )
 
-    bc, bpdf = _corpus_broadcast(spark, "knn_classify", sf_dir, _build)
-    if bpdf is not None and "knn_classify" in TWIN_CAPS_APPLIED:
-        # audit mode capped the input with limit(): that plan's row
-        # selection is not guaranteed stable across jobs on multi-file
-        # input, so derive the probe side from the SAME materialization
-        # the broadcast corpus came from (ADVICE r16).
-        probe_src = spark.createDataFrame(bpdf, schema=sel.schema)
-    else:
-        probe_src = n
-    # spread: otherwise the whole quadratic scoring stage is one task
-    a = spread_if_narrow(probe_src).select(
-        F.col("vec_id").alias("src"), F.col("e").alias("ae"), F.col("nrm").alias("anrm")
-    )
-
-    def topk(batches):
-        ids, labels, B, bn = bc.value
-        ncorp, ndim = B.shape
-        k = min(5, ncorp - 1)
-        for pdf in batches:
-            if not len(pdf) or k <= 0:
-                continue
-            A = np.array(pdf["ae"].tolist(), dtype=np.float64)
-            anrm = pdf["anrm"].to_numpy(dtype=np.float64)
-            src = pdf["src"].to_numpy(dtype=np.int64)
-            step = max(1, 4_000_000 // ncorp)  # cap acc at ~32 MB
-            for s in range(0, len(src), step):
-                Ac, an, sr = A[s:s + step], anrm[s:s + step], src[s:s + step]
-                m = len(sr)
-                acc = np.zeros((m, ncorp))
-                for d in range(ndim):  # fold-order sum: bit-equal to the expr twin
-                    acc += Ac[:, d:d + 1] * B[:, d]
-                denom = an[:, None] * bn[None, :]
-                zden = denom == 0.0
-                with np.errstate(all="ignore"):
-                    cos = acc / denom
-                nan = np.isnan(cos) & ~zden
-                # rank classes under cos DESC: NaN(0) < real(1) < NULL(2);
-                # self-pairs (3) are excluded — ncorp-1 ≥ k real candidates
-                # remain, so class 3 never reaches the top k.
-                cls = np.ones((m, ncorp), dtype=np.int8)
-                cls[nan] = 0
-                cls[zden] = 2
-                pos = np.searchsorted(ids, sr)
-                ok = (pos < ncorp) & (ids[np.minimum(pos, ncorp - 1)] == sr)
-                cls[np.flatnonzero(ok), pos[ok]] = 3
-                rk = np.where(nan | zden, 0.0, -cos)
-                top = np.lexsort((rk, cls), axis=-1)[:, :k]
-                yield pd.DataFrame(
-                    {
-                        "src": np.repeat(sr, k),
-                        "nb_label": labels[top].ravel(),
-                    }
-                )
-
-    knn = a.mapInPandas(topk, "src bigint, nb_label int")
+    knn = _cosine_blocks(spark, bc, top5, "src bigint, nb_label int")
     votes = knn.groupBy("src", "nb_label").agg(F.count(F.lit(1)).alias("votes"))
     w_vote = Window.partitionBy("src").orderBy(
         F.col("votes").desc(), F.col("nb_label")

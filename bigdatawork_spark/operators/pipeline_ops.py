@@ -15,9 +15,8 @@ from ..io import load
 from ..registry import register
 from ..session import spread_if_narrow
 from .llm_ops import (
-    SCORER_BCAST_MAX_BYTES,
-    TWIN_CAPS_APPLIED,
-    _corpus_broadcast,
+    _cosine_blocks,
+    _cosine_corpus,
     _normed_vectors,
     guard_twin_size,
 )
@@ -291,87 +290,35 @@ def dedup_embedding_cosine(spark, sf_dir):
     recall measurement of the clustered path.  Guarded: raises above
     ``TWIN_MAX_ROWS`` input vectors (VERDICT r07 item 5).
 
-    r16 scorer (guide §4.1/§4.2, the knn_classify discipline): the
-    all-pairs stage is a numpy ``mapInPandas`` against the sc.broadcast
-    guarded corpus instead of a crossJoin + interpreted
-    ``aggregate(zip_with(...))`` fold (sf1.0 audit: 16.5 s).  The oracle
-    thresholds on the UN-ROUNDED cos_raw, so the scorer accumulates dots
-    dimension-at-a-time (same IEEE-754 op sequence as the fold →
-    bit-identical cos_raw); the ``>= 0.45`` decision replicates Spark's
-    semantics exactly — NULL on zero denominator drops the pair, NaN
-    compares GREATEST and keeps it (both probed this round) — and the
-    surviving cos_raw doubles cross Arrow bit-exact so the final
+    The all-pairs stage scores row blocks of the broadcast corpus
+    (``_cosine_corpus`` / ``_cosine_blocks``, shared with knn_classify)
+    instead of a crossJoin + interpreted ``aggregate(zip_with(...))`` fold
+    (sf1.0 audit: 16.5 s).  The oracle thresholds on the UN-ROUNDED
+    cos_raw, which the scorer reproduces bit for bit; the ``>= 0.45``
+    decision replicates Spark's semantics exactly — NULL on zero
+    denominator drops the pair, NaN compares GREATEST and keeps it — and
+    the surviving cos_raw doubles cross Arrow bit-exact so the final
     ``round(..., 6)`` stays Spark's half-up.  ``_dedup_embedding_cosine_expr``
     keeps the crossJoin+fold form; tests assert frame identity on the
-    edge corpora.
-
-    NOTE (VERDICT r16 item 7): ``guard_twin_size`` is load-bearing for
-    DRIVER/EXECUTOR MEMORY here, not just quadratic cost — the guarded
-    corpus is collected to the driver and broadcast (≤ 50k×64 f64 ≈
-    26 MB; byte-asserted against ``SCORER_BCAST_MAX_BYTES``)."""
+    edge corpora."""
     import numpy as np
     import pandas as pd
 
-    n = _normed_vectors(spark, sf_dir)
-    sel = n.select("vec_id", "e", "nrm")
-    n = guard_twin_size(n, "dedup_embedding_cosine", "semdedup_prune")
-
-    # Bounded by the guard — which is thereby also the DRIVER/EXECUTOR
-    # MEMORY bound for this key (≤ 50k rows ≈ 26 MB of f64; the assert
-    # states the byte cap); collected + broadcast once per (session,
-    # sf_dir, audit-cap) — see _corpus_broadcast (ADVICE r16).
-    def _build():
-        bpdf = n.select("vec_id", "e", "nrm").toPandas()
-        order = np.argsort(bpdf["vec_id"].to_numpy(dtype=np.int64), kind="stable")
-        ids = bpdf["vec_id"].to_numpy(dtype=np.int64)[order]
-        Bm = np.array(bpdf["e"].tolist(), dtype=np.float64)[order]
-        if Bm.ndim != 2:  # empty corpus: keep a 2-D shape for the unpack
-            Bm = Bm.reshape((len(bpdf), 0))
-        assert Bm.nbytes <= SCORER_BCAST_MAX_BYTES, (
-            f"dedup_embedding_cosine corpus broadcast {Bm.nbytes}B exceeds "
-            f"the {SCORER_BCAST_MAX_BYTES}B cap")
-        bnrm = bpdf["nrm"].to_numpy(dtype=np.float64)[order]
-        return spark.sparkContext.broadcast((ids, Bm, bnrm)), bpdf
-
-    bc, bpdf = _corpus_broadcast(spark, "dedup_embedding_cosine", sf_dir, _build)
-    if bpdf is not None and "dedup_embedding_cosine" in TWIN_CAPS_APPLIED:
-        # audit mode capped the input with limit(): derive the probe side
-        # from the same materialization as the broadcast (ADVICE r16)
-        probe_src = spark.createDataFrame(bpdf, schema=sel.schema)
-    else:
-        probe_src = n
-    a = spread_if_narrow(probe_src).select(
-        F.col("vec_id").alias("id_a"), F.col("e").alias("ae"), F.col("nrm").alias("anrm")
+    n = guard_twin_size(
+        _normed_vectors(spark, sf_dir), "dedup_embedding_cosine", "semdedup_prune"
     )
+    bc = _cosine_corpus(spark, sf_dir, n)
 
-    def pairs_over(batches):
-        bids, B, bn = bc.value
-        ncorp, ndim = B.shape
-        for pdf in batches:
-            if not len(pdf) or not ncorp:
-                continue
-            A = np.array(pdf["ae"].tolist(), dtype=np.float64)
-            an = pdf["anrm"].to_numpy(dtype=np.float64)
-            ia = pdf["id_a"].to_numpy(dtype=np.int64)
-            step = max(1, 4_000_000 // ncorp)
-            for s in range(0, len(ia), step):
-                Ac, anc, iac = A[s:s + step], an[s:s + step], ia[s:s + step]
-                acc = np.zeros((len(iac), ncorp))
-                for d in range(ndim):  # fold-order sum: bit-equal to the expr twin
-                    acc += Ac[:, d:d + 1] * B[:, d]
-                denom = anc[:, None] * bn[None, :]
-                zden = denom == 0.0  # Spark /0 → NULL → the >= filter drops it
-                with np.errstate(all="ignore"):
-                    cos = acc / denom
-                    keep = ((cos >= 0.45) | np.isnan(cos)) & ~zden
-                keep &= bids[None, :] > iac[:, None]
-                r, c = np.nonzero(keep)
-                if len(r):
-                    yield pd.DataFrame(
-                        {"id_a": iac[r], "id_b": bids[c], "cos_raw": cos[r, c]}
-                    )
+    def above(ids, lo, cos, zden):
+        ia = ids[lo:lo + len(cos)]
+        keep = ((cos >= 0.45) | np.isnan(cos)) & ~zden
+        keep &= ids[None, :] > ia[:, None]
+        r, c = np.nonzero(keep)
+        return pd.DataFrame({"id_a": ia[r], "id_b": ids[c], "cos_raw": cos[r, c]})
 
-    cand = a.mapInPandas(pairs_over, "id_a bigint, id_b bigint, cos_raw double")
+    cand = _cosine_blocks(
+        spark, bc, above, "id_a bigint, id_b bigint, cos_raw double"
+    )
     return cand.select(
         "id_a", "id_b", F.round("cos_raw", 6).alias("cos_sim")
     ).orderBy("id_a", "id_b")

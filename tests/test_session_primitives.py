@@ -3,7 +3,9 @@ and ``spread_if_narrow`` — and the properties every builder built on them
 must keep: a spread launches no Spark job, is skipped on an input that is
 already wide, and never changes a result (the order-insensitive canonical
 hash of ``tests/compare.py`` is identical with the spread removed or
-forced to an unrelated width).  Also the Python-worker daemon every
+forced to an unrelated width).  The all-pairs cosine scorers cut their
+work into row blocks of one shared corpus broadcast instead: their rows
+do not depend on the block count.  Also the Python-worker daemon every
 ``get_spark`` session starts its workers from: it re-reads a zip archive
 only when the archive changed, and the workers find it from any cwd.
 """
@@ -42,14 +44,12 @@ _SPREAD_MODULES = (corpus_ops, curation, llm_ops, pipeline_ops, training_ops,
 
 #: One builder per spread call site.
 SPREAD_BUILDERS = {
-    "knn_classify": QUERIES["knn_classify"],
     "_knn_classify_expr": llm_ops._knn_classify_expr,
     "tfidf_keywords": QUERIES["tfidf_keywords"],
     "dedup_ngram_jaccard": QUERIES["dedup_ngram_jaccard"],
     "dedup_incremental_exact": QUERIES["dedup_incremental_exact"],
     "contamination_ngram": QUERIES["contamination_ngram"],
     "dsir_importance_resample": QUERIES["dsir_importance_resample"],
-    "dedup_embedding_cosine": QUERIES["dedup_embedding_cosine"],
     "kmeans_iterative": QUERIES["kmeans_iterative"],
     "multimodal_png_decode": QUERIES["multimodal_png_decode"],
     "nearest_centroid_classify": QUERIES["nearest_centroid_classify"],
@@ -149,6 +149,20 @@ def test_restage_same_plan_twice_stays_cached(spark):
     again.unpersist()
 
 
+@pytest.mark.parametrize("key", ["dedup_ngram_jaccard", "dedup_repeated_spans"])
+def test_builder_staging_does_not_accumulate(spark, sf_dir, key):
+    """A builder that stages its input through ``restage`` keeps at most one
+    cached relation alive however many corpora it runs over (a bare cache
+    keeps one per distinct plan)."""
+    from .conftest import SF_SMALL
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for d in (sf_dir, SF_SMALL):
+        QUERIES[key](spark, d).collect()
+    assert jsc.getPersistentRDDs().size() - before <= 1
+
+
 # ---------------------------------------------------------------------------
 # spread_if_narrow
 
@@ -243,6 +257,45 @@ def test_builder_result_is_layout_invariant(spark, sf_dir, monkeypatch, key):
     _forget_stagings(spark)
     assert {"identity", "forced"} <= set(used), f"{key} never spread"
     assert rows[0] == rows[1], f"{key}: result depends on partition layout"
+
+
+#: The all-pairs cosine scorers: row blocks of one shared corpus broadcast
+#: (``llm_ops._cosine_corpus`` / ``_cosine_blocks``), no spread.
+SCORER_KEYS = ("knn_classify", "dedup_embedding_cosine")
+
+
+@pytest.mark.parametrize("key", SCORER_KEYS)
+def test_scorer_result_is_block_layout_invariant(spark, sf_dir, monkeypatch, key):
+    """Same canonical rows when the scorer's blocks are cut for 1 or 7
+    cores instead of this session's."""
+    from pyspark import SparkContext
+
+    base = canon_rows(QUERIES[key](spark, sf_dir).toPandas())
+    for width in (1, 7):
+        monkeypatch.setattr(
+            SparkContext, "defaultParallelism", property(lambda sc, w=width: w)
+        )
+        df = QUERIES[key](spark, sf_dir)
+        assert f"splits={width})" in plan_string(df), width
+        assert canon_rows(df.toPandas()) == base, width
+
+
+def test_scorers_share_one_corpus_broadcast(spark, sf_dir, monkeypatch):
+    """Both scorers read one corpus broadcast per (sf_dir, audit cap), and
+    under the audit cap they score the same capped rows."""
+    memo = session_memo(spark, "scorer_corpus")
+    for key in SCORER_KEYS:
+        QUERIES[key](spark, sf_dir).collect()
+    assert sum(sf_dir in k for k in memo) == 1, list(memo)
+
+    monkeypatch.setenv(llm_ops.TWIN_AUDIT_ENV, "7")
+    monkeypatch.setattr(llm_ops, "TWIN_CAPS_APPLIED", {})
+    knn = QUERIES["knn_classify"](spark, sf_dir).toPandas()
+    pairs = QUERIES["dedup_embedding_cosine"](spark, sf_dir).toPandas()
+    assert len(knn) == 7
+    assert set(pairs.id_a) | set(pairs.id_b) <= set(knn.vec_id)
+    assert set(SCORER_KEYS) <= set(llm_ops.TWIN_CAPS_APPLIED)
+    assert sum(sf_dir in k for k in memo) == 2, list(memo)
 
 
 @pytest.fixture(scope="module")
