@@ -11,7 +11,7 @@ sampling is not reproducible across engines or across re-partitions — at
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..io import load
@@ -526,21 +526,30 @@ def dedup_cluster_cc(spark, sf_dir):
     """Connected-components clustering of near-dup pairs — the step that
     turns pairwise similarity (dedup_ngram_jaccard et al.) into dedup
     groups ("keep one doc per component").  Distributed min-label
-    propagation: each iteration joins labels across edges and keeps the
-    per-node minimum; converges in O(diameter) rounds (here ≤ a handful).
-    localCheckpoint() truncates lineage each round so the plan stays flat.
-    The oracle computes the same components with a recursive CTE.
+    propagation by message passing over a carried node state
+    ``(id, comp, nbrs, moved)``.  A round is ONE aggregate: the nodes'
+    own rows (which carry the old label) and the round's messages,
+    grouped by ``id`` to the minimum label.  Round 1 sends every edge and
+    collects each node's adjacency list ``nbrs`` (empty for a gram-less
+    doc) in the same aggregate; after it only a node whose label moved
+    sends, along ``nbrs``, so the round's shuffle shrinks as labels
+    settle.  The round's count of moved nodes is an ``Observation`` on
+    the same ``localCheckpoint`` job that truncates the lineage, so a
+    round costs no separate count job; the loop stops when it reads 0,
+    after O(diameter) rounds (here ≤ a handful).  The oracle computes the
+    same components with a recursive CTE.
 
-    At 100 TB: same loop with the alternating large-star/small-star
-    optimization (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) to bound per-round shuffle; the driver-side loop is
-    control flow only — all data movement stays distributed."""
+    At 100 TB: the same rounds, with the alternating large-star/small-star
+    schedule (Kiveris et al., "Connected Components in MapReduce and
+    Beyond", SoCC'14) as the option that bounds the number of rounds on a
+    long-diameter graph; the driver-side loop is control flow only — all
+    data movement stays distributed."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
     # length >= 3 guard (r14 edge-corpus campaign): Spark's
     # sequence(1, 0) is the DESCENDING [1, 0] while DuckDB's
     # generate_series(1, 0) is empty — a <3-char doc would fabricate
     # grams here and none in the oracle.  Gram-less docs still get a
-    # component (their own) via `labels`, which is built from d, and the
+    # component (their own) via `state`, which is built from d, and the
     # oracle's nodes CTE now matches (all docs, not just grammed ones).
     grams = d.filter(F.length("text") >= 3).select(
         "doc_id",
@@ -574,35 +583,65 @@ def dedup_cluster_cc(spark, sf_dir):
     )
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = d.select(F.col("doc_id").alias("id"), F.col("doc_id").alias("comp"))
-    while True:
-        # neighbor minimum, then fold in the node's own label
-        nbr = (
-            sym.join(labels, sym.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new_labels = (
-            labels.join(nbr, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
-                ).alias("comp"),
-            )
+    )
+    is_moved = (F.col("comp") != F.col("old")).alias("moved")
+    n_moved = F.sum(F.col("moved").cast("long")).alias("n")
+
+    def settle(rows, nbrs):
+        """One round: each node's minimum label, whether it moved, and
+        how many nodes moved, observed on the checkpoint job."""
+        moved = Observation()
+        state = (
+            rows.groupBy("id")
+            .agg(F.min("comp").alias("comp"), F.max("old").alias("old"), nbrs)
+            .select("id", "comp", "nbrs", is_moved)
+            .observe(moved, n_moved)
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
+        return state, moved.get["n"]
+
+    # Round 1 builds the state: every node's own row, which carries its
+    # old label, and each edge as a message from its far end, which also
+    # collects the node's adjacency list (empty for a gram-less doc).
+    own = d.select(
+        F.col("doc_id").alias("id"),
+        F.col("doc_id").alias("comp"),
+        F.col("doc_id").alias("old"),
+        F.lit(None).cast("long").alias("nbr"),
+    )
+    hops = sym.select(
+        F.col("src").alias("id"),
+        F.col("dst").alias("comp"),
+        F.lit(None).cast("long").alias("old"),
+        F.col("dst").alias("nbr"),
+    )
+    state, n = settle(
+        own.unionByName(hops), F.collect_list("nbr").alias("nbrs")
+    )
+    # Later rounds: every node's own row, and one message per neighbour
+    # from each node whose label moved last round — one generator, so a
+    # round reads the state once.
+    sent = F.when(F.col("moved"), F.col("nbrs")).otherwise(
+        F.array().cast("array<long>")
+    )
+    rows = F.inline(
+        F.concat(
+            F.array(F.struct("id", "comp", F.col("comp").alias("old"), "nbrs")),
+            F.transform(
+                sent,
+                lambda v: F.struct(
+                    v.alias("id"),
+                    "comp",
+                    F.lit(None).cast("long").alias("old"),
+                    F.lit(None).cast("array<long>").alias("nbrs"),
+                ),
+            ),
         )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select(
+    )
+    kept = F.first("nbrs", ignorenulls=True).alias("nbrs")
+    while n:
+        state, n = settle(state.select(rows), kept)
+    return state.select(
         F.col("id").alias("doc_id"), F.col("comp").cast("long").alias("component")
     ).orderBy("doc_id")
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..io import load
@@ -955,8 +955,12 @@ def tfidf_keywords(spark, sf_dir):
     dd = restage(
         spark, "tfidf_keywords", spread_if_narrow(d.select("doc_id", "text"))
     )
+    # the df aggregate consumes every document below its limit, so the
+    # document count rides on the vocabulary job
+    docs = Observation()
     df_rows = (
-        dd.select(
+        dd.observe(docs, F.count(F.lit(1)).alias("n"))
+        .select(
             F.explode(
                 F.expr("array_distinct(filter(split(text, ' '), w -> w != ''))")
             ).alias("word")
@@ -966,7 +970,7 @@ def tfidf_keywords(spark, sf_dir):
         .limit(TFIDF_VOCAB_CAP + 1)
         .collect()
     )
-    n_docs = float(d.count())
+    n_docs = float(docs.get["n"])
     if len(df_rows) > TFIDF_VOCAB_CAP:
         # Open-vocabulary corpus: no driver-side dict can hold the df
         # table, so degrade to the fully-distributed plan — token-level

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
-from ..session import spread_if_narrow
+from ..session import restage, spread_if_narrow
 from .llm_ops import (
     _cosine_blocks,
     _cosine_corpus,
@@ -606,8 +606,9 @@ def _kmeans(spark, sf_dir, k: int = 8, iters: int = 5):
         for r in e.filter(F.col("vec_id") <= k).collect()
     }
     # spread the slim (id, vector) relation (~10 MB at sf1.0) so the
-    # per-round argmin map + partial aggregation are not one task
-    e = spread_if_narrow(e)
+    # per-round argmin map + partial aggregation are not one task, and
+    # stage it so the round-robin exchange runs once, not once per round
+    e = restage(spark, "kmeans_iterative", spread_if_narrow(e))
     sse_trace = []
     assign = None
     for _ in range(iters):

@@ -3,7 +3,8 @@ item 5): PageRank / triangle count / BFS over a crafted trade micro-graph
 with DISCONNECTED components, a SELF-LOOP, an ISOLATED nation, and
 DANGLING nodes — and connected-components clustering over a documents
 corpus with disconnected dup clusters, a transitivity chain, singletons,
-and sub-3-gram/NULL texts.
+and sub-3-gram/NULL texts, and over a 20-doc path whose minimum label has
+to cross every hop.
 
 The r14 catch this file pinned: a <3-char document fabricated 3-grams on
 the Spark side only — Spark's sequence(1, 0) is the DESCENDING [1, 0]
@@ -185,3 +186,65 @@ def test_edge_cc_components(spark, cc_dir):
     assert 61 not in comp                   # window filter held
     kept = {r["doc_id"] for r in QUERIES["dedup_keep_representative"](spark, cc_dir).collect()}
     assert kept == {0, 2, 5, 6, 7, 8}
+
+
+# A 20-doc path in the shifted-letter pattern: doc p is four runs of four
+# letters starting at letter p, so path neighbours share 7 of 13 trigrams
+# (Jaccard 0.54) and docs two apart 4 of 16 (0.25, no edge).  Ids run in
+# REVERSE along the path, so the minimum label starts at one end and has to
+# cross all 19 hops, one round per hop, carried by moved-only messages.
+CHAIN_LEN = 20
+CHAIN_ROWS = [
+    (40 - p, "".join(chr(ord("a") + p + j) * 4 for j in range(4)))
+    for p in range(CHAIN_LEN)
+] + [
+    (5, "completely unrelated text about astronomy and telescopes"),  # isolated
+    (7, None),  # NULL text
+]
+
+
+@pytest.fixture(scope="module")
+def chain_dir(tmp_path_factory) -> str:
+    d = tmp_path_factory.mktemp("edge_cc_chain")
+    pd.DataFrame(
+        [
+            (i, t, "en", "src0", len(t) if t is not None else 0)
+            for i, t in CHAIN_ROWS
+        ],
+        columns=["doc_id", "text", "lang", "source", "n_chars"],
+    ).to_parquet(f"{d}/documents.parquet")
+    return str(d)
+
+
+@pytest.fixture(scope="module")
+def chain_duck(chain_dir):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{chain_dir}/documents.parquet')"
+    )
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("key", ["dedup_cluster_cc", "dedup_keep_representative"])
+def test_long_chain_cc_engines_agree(key, spark, chain_dir, chain_duck):
+    spark_pd = QUERIES[key](spark, chain_dir).toPandas()
+    oracle_pd = chain_duck.execute(ORACLES[key]).df()
+    assert len(spark_pd) > 0
+    assert_frames_match(spark_pd, oracle_pd, f"chain:{key}")
+
+
+def test_long_chain_cc_matches_union_find(spark, chain_dir):
+    from .test_invariants import union_find_components
+
+    comp = {
+        r["doc_id"]: r["component"]
+        for r in QUERIES["dedup_cluster_cc"](spark, chain_dir).collect()
+    }
+    assert comp == union_find_components(dict(CHAIN_ROWS))
+    chain_min = 40 - (CHAIN_LEN - 1)
+    assert {comp[40 - p] for p in range(CHAIN_LEN)} == {chain_min}
+    assert comp[5] == 5 and comp[7] == 7

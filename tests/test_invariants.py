@@ -457,24 +457,14 @@ def test_shortest_path_matches_python_bfs(spark, sf_dir):
     assert got == want
 
 
-def test_cluster_cc_matches_union_find(spark, sf_dir):
-    """dedup_cluster_cc vs an independent union-find: trigram-Jaccard
-    edges (>= 0.45, doc_id < 60) recomputed in plain Python, components
-    via union-find with min-label output — independent of both the
-    Spark min-label propagation loop and the oracle's recursive CTE."""
-    import pyarrow.parquet as pq
-
-    from bigdatawork_spark.registry import QUERIES
-
-    got = {
-        r.doc_id: r.component
-        for r in QUERIES["dedup_cluster_cc"](spark, sf_dir).collect()
-    }
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
+def union_find_components(texts):
+    """``{doc_id: component}`` for ``{doc_id: text}``: trigram-Jaccard
+    edges (>= 0.45) in plain Python, components via union-find with
+    min-label output.  A NULL or sub-3-char text has no trigrams and stays
+    its own component."""
     docs = {
-        d: {t[i : i + 3] for i in range(len(t) - 2)}
-        for d, t in zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist())
-        if d < 60 and t is not None
+        d: {t[i : i + 3] for i in range(len(t) - 2)} if t is not None else set()
+        for d, t in texts.items()
     }
     parent = {d: d for d in docs}
 
@@ -492,7 +482,27 @@ def test_cluster_cc_matches_union_find(spark, sf_dir):
                 ra, rb = find(a), find(b)
                 if ra != rb:
                     parent[max(ra, rb)] = min(ra, rb)
-    want = {d: find(d) for d in ids}
+    return {d: find(d) for d in ids}
+
+
+def test_cluster_cc_matches_union_find(spark, sf_dir):
+    """dedup_cluster_cc vs an independent union-find over the documents
+    with doc_id < 60 (``union_find_components``) — independent of both the
+    Spark min-label propagation loop and the oracle's recursive CTE."""
+    import pyarrow.parquet as pq
+
+    from bigdatawork_spark.registry import QUERIES
+
+    got = {
+        r.doc_id: r.component
+        for r in QUERIES["dedup_cluster_cc"](spark, sf_dir).collect()
+    }
+    tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
+    want = union_find_components({
+        d: t
+        for d, t in zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist())
+        if d < 60
+    })
     assert got == want
 
 

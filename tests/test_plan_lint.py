@@ -200,3 +200,35 @@ def test_cache_has_its_owners():
     named CACHE_PENDING sites; a builder stages through ``restage``."""
     found = _package_calls(lambda node: _is_attr_call(node, "cache"))
     assert set(found) == CACHE_OWNERS | CACHE_PENDING, sorted(found)
+
+
+#: The builder-side eager ``.count()`` sites left in package source.
+COUNT_OWNERS = {
+    # the io table cache fills its cache once per table
+    ("io.py", "load"),
+    # the support threshold of the heavy-hitter filter
+    ("operators/aggregations.py", "agg_heavy_hitters"),
+    # the four-phase audit counts admissions and the index size
+    ("operators/curation.py", "dedup_index_update_idempotent"),
+    # the node count is the initial rank's divisor
+    ("operators/graph_ops.py", "graph_pagerank"),
+    # the size guard of every all-pairs twin
+    ("operators/llm_ops.py", "guard_twin_size"),
+    # the IVF list count is chosen from the corpus size
+    ("operators/llm_ops.py", "_ivf_assign"),
+    # the rate source's wait for its first sink rows
+    ("streaming/stream_ops.py", "source_stream_rate"),
+}
+
+
+def test_eager_count_has_its_owners():
+    """A zero-argument ``.count()`` in package source is an eager Spark job
+    while the DataFrame is being built; it appears only at the named
+    COUNT_OWNERS sites.  A loop's change count rides on the round's own
+    job through ``observe`` (``dedup_cluster_cc``, ``tfidf_keywords``)."""
+
+    def eager_count(node):
+        return _is_attr_call(node, "count") and not node.args and not node.keywords
+
+    found = _package_calls(eager_count)
+    assert set(found) == COUNT_OWNERS, sorted(found)

@@ -149,7 +149,9 @@ def test_restage_same_plan_twice_stays_cached(spark):
     again.unpersist()
 
 
-@pytest.mark.parametrize("key", ["dedup_ngram_jaccard", "dedup_repeated_spans"])
+@pytest.mark.parametrize(
+    "key", ["dedup_ngram_jaccard", "dedup_repeated_spans", "kmeans_iterative"]
+)
 def test_builder_staging_does_not_accumulate(spark, sf_dir, key):
     """A builder that stages its input through ``restage`` keeps at most one
     cached relation alive however many corpora it runs over (a bare cache
@@ -161,6 +163,40 @@ def test_builder_staging_does_not_accumulate(spark, sf_dir, key):
     for d in (sf_dir, SF_SMALL):
         QUERIES[key](spark, d).collect()
     assert jsc.getPersistentRDDs().size() - before <= 1
+
+
+#: Most Spark jobs a warm build (``QUERIES[key](...)``, no action on the
+#: result) may run at sf0.01.
+#: - ``dedup_cluster_cc``: the edge build, then two jobs per
+#:   message-passing round (its shuffle and its ``localCheckpoint``, which
+#:   also carries the round's moved-node count); 12 measured, against 46
+#:   when each round joined the edge list and counted its changes in a
+#:   separate job.
+#: - ``tfidf_keywords``: the document count rides on the vocabulary
+#:   collect; 4 measured, against 6 with a separate ``count()``.
+#: - ``kmeans_iterative``: one centroid collect, the staged spread's
+#:   exchange and cache fill once, then two jobs per Lloyd round (5
+#:   rounds); 13 measured, against 16 when every round re-ran the spread's
+#:   exchange as a third job.
+BUILD_JOB_PINS = {
+    "dedup_cluster_cc": 20,
+    "tfidf_keywords": 4,
+    "kmeans_iterative": 2 * 5 + 3,
+}
+
+
+@pytest.mark.parametrize("key", sorted(BUILD_JOB_PINS))
+def test_builder_job_count_is_pinned(spark, sf_dir, key):
+    QUERIES[key](spark, sf_dir).collect()  # warm: io, codegen, stagings
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"{key} build")
+    try:
+        QUERIES[key](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= BUILD_JOB_PINS[key], f"{key}: {jobs} build jobs"
 
 
 # ---------------------------------------------------------------------------
