@@ -601,10 +601,6 @@ def agg_bitmap_distinct(spark, sf_dir):
     )
 
 
-# --- folded from the round-8 module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change;
-# driver re-verification forced via source-hash staleness. ---
-
 @register(
     "topk_heavy_hitters",
     oracle="""

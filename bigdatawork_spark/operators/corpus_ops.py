@@ -892,10 +892,6 @@ def sample_negative_pairs(spark, sf_dir):
     )
 
 
-# --- folded from the round-8 module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change;
-# driver re-verification forced via source-hash staleness. ---
-
 @register(
     "lm_perplexity_score",
     oracle="""
@@ -1002,9 +998,6 @@ def bigram_nll_scores(d, id_col: str = "doc_id", col: str = "text"):
         )
     )
 
-
-# --- folded from the round-11b module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
 
 # ---------------------------------------------------------------------------
 

@@ -1023,10 +1023,6 @@ def quality_classifier_nb(spark, sf_dir):
     )
 
 
-# --- folded from the round-8 module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change;
-# driver re-verification forced via source-hash staleness. ---
-
 @register(
     "dedup_segments_crossdoc",
     oracle="""
@@ -1353,9 +1349,6 @@ def excise_repeated_spans(df, id_col: str = "doc_id", col: str = "text"):
     )
 
 
-# --- folded from the round-10 module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
-
 # exercises every normalization rule: scheme case, www + host case,
 # default port, path trailing slash, tracking params, param order,
 # fragments.
@@ -1600,9 +1593,6 @@ def url_filter_blocklist(spark, sf_dir):
     )
 
 
-# --- folded from the round-11c module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
-
 _BATCH_MOD = 10
 _BATCH_REM = 7
 
@@ -1700,16 +1690,26 @@ def _split(spark, sf_dir, *, augmented: bool = True, cache: bool = True):
     )
 
 
-def _admitted(batch, idx):
-    """The admission survivor relation: the batch collapsed per content
-    hash (min doc_id, copy count), minus every hash in the index ``idx``."""
-    grp = batch.groupBy("h").agg(
-        F.min("doc_id").alias("doc_id"),
-        F.count(F.lit(1)).cast("bigint").alias("n_batch_copies"),
-    )
+def _ledger(rows, idx, *by):
+    """Every admission key's ledger: ``rows`` minus the hashes in ``idx``,
+    collapsed per (``by``, hash) to (min doc_id, copy count).  Anti-join
+    before group is the order a stream allows; it keeps the same rows as
+    group-then-anti-join, as both key on ``h``."""
     return (
-        grp.join(idx, "h", "left_anti")
-        .select("doc_id", F.col("h").alias("text_hash"), "n_batch_copies")
+        rows.join(idx, "h", "left_anti")
+        .groupBy(*by, F.col("h").alias("text_hash"))
+        .agg(
+            F.min("doc_id").alias("doc_id"),
+            F.count(F.lit(1)).cast("bigint").alias("n_batch_copies"),
+        )
+    )
+
+
+def _admitted(batch, idx):
+    """The admission survivor relation (doc_id, text_hash, copy count)."""
+    return (
+        _ledger(batch, idx)
+        .select("doc_id", "text_hash", "n_batch_copies")
         .orderBy("doc_id")
     )
 
@@ -1878,7 +1878,7 @@ def dedup_incremental_minhash(spark, sf_dir):
 
     Output (batch_doc, index_doc, jaccard_dist): the admission decisions
     a near-dup policy consumes.  Recall is pinned against a hand-built
-    cross-split near-dup corpus (tests/test_round11c.py) — the sf corpus
+    cross-split near-dup corpus (tests/test_admission.py) — the sf corpus
     is not guaranteed to carry near-dups straddling the %10 split.
     Splits the NATURAL corpus (augmented=False): planted exact replicas
     would be collapsed before LSH anyway and verify nothing here."""
@@ -1887,11 +1887,8 @@ def dedup_incremental_minhash(spark, sf_dir):
         corpus.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
         .join(corpus.select("doc_id", "text"), "doc_id")
     )
-    idx_hashes = corpus.select("h").distinct()
-    batch_residue = (
-        batch.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
-        .join(idx_hashes, "h", "left_anti")
-        .join(batch.select("doc_id", "text"), "doc_id")
+    batch_residue = _ledger(batch, corpus.select("h").distinct()).join(
+        batch.select("doc_id", "text"), "doc_id"
     )
     return incremental_minhash_hits(
         corpus_reps.select("doc_id", "text"),
@@ -1960,24 +1957,20 @@ def dedup_index_update_idempotent(spark, sf_dir):
     idx_path = _fresh_dir("hashidx-upd")
     corpus.select("h").distinct().write.mode("overwrite").parquet(idx_path)
 
-    grp = batch.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
-
     # localCheckpoint: the survivor relation feeds both the count and the
     # append write, and the append targets the SAME path its plan reads —
     # materializing it evaluates the anti-join once and severs the
     # self-read-while-appending lineage (code-review r12) instead of
     # leaning on the read-time file-listing snapshot.
-    surv = grp.join(
-        spark.read.parquet(idx_path), "h", "left_anti"
-    ).localCheckpoint()
+    surv = _ledger(batch, spark.read.parquet(idx_path)).localCheckpoint()
     n_before = spark.read.parquet(idx_path).count()
     n_first = surv.count()
     # the UPDATE: append only the survivors' hashes — new files, no rewrite
-    surv.select("h").write.mode("append").parquet(idx_path)
+    surv.select(F.col("text_hash").alias("h")).write.mode("append").parquet(idx_path)
 
     idx1 = spark.read.parquet(idx_path)
     n_after = idx1.distinct().count()
-    n_re = grp.join(idx1, "h", "left_anti").count()
+    n_re = _ledger(batch, idx1).count()
 
     return spark.createDataFrame(
         [
@@ -2019,7 +2012,7 @@ def dedup_index_persisted(spark, sf_dir):
     reads the BATCH slice of `documents` plus the index FILES — the
     admission query's executed plan contains exactly ONE scan of
     documents.parquet and one of the index path (pinned in
-    tests/test_round11c.py), i.e. corpus text is provably not rescanned
+    tests/test_admission.py), i.e. corpus text is provably not rescanned
     per batch.  Natural split (no replica plants): the plants' union
     would add corpus-slice scans to the admission plan and break the
     very property this key pins; the rejection VALUES are verified by
@@ -2034,12 +2027,6 @@ def dedup_index_persisted(spark, sf_dir):
     idx = spark.read.parquet(idx_path)
     return _admitted(batch, idx)
 
-
-# --- folded from the staged round-6 module (r15 module-hygiene
-# fold, VERDICT r14 item 5): moved VERBATIM apart from the
-# @_staged -> @register decorator (the module's own documented
-# endgame: 'delete this module and inline the @register
-# decorators'). Zero behavior change. ---
 
 # ---------------------------------------------------------------------------
 # dedup_ladder — the measured production order (SCALE.md §8) as one operator

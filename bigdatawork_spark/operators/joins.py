@@ -597,9 +597,6 @@ def join_lateral_topn(spark, sf_dir):
     return sql(spark, sf_dir, _LATERAL_TOPN_SQL)
 
 
-# --- folded from the round-13 module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
-
 _BLOOM_BITS = 8192   # position domain per hash function (m)
 _BLOOM_DIM_NATION = "NATION_7"
 
@@ -696,10 +693,6 @@ def bloom_prefilter_pass_count(spark, sf_dir):
     pruned, _dim = _bloom_pruned_facts(spark, sf_dir, ["l_suppkey"])
     return pruned.select("l_suppkey")
 
-
-# --- folded from the round-11 module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
-# (uses this module's existing os/load/register imports plus _tmp)
 
 def _sf_tag(sf_dir: str) -> str:
     """Collision-free tmp-layout tag for a corpus directory: basename for

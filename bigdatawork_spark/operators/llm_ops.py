@@ -1406,12 +1406,6 @@ def sim_ann_hyperplane(spark, sf_dir):
     )
 
 
-# --- folded from the staged round-6 module (r15 module-hygiene
-# fold, VERDICT r14 item 5): moved VERBATIM apart from the
-# @_staged -> @register decorator (the module's own documented
-# endgame: 'delete this module and inline the @register
-# decorators'). Zero behavior change. ---
-
 # ---------------------------------------------------------------------------
 # knn_classify_ivf — the declared scale path of knn_classify
 

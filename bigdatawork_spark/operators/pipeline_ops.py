@@ -1557,10 +1557,6 @@ def nearest_centroid_classify(spark, sf_dir):
     )
 
 
-# --- folded from the round-8 module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change;
-# driver re-verification forced via source-hash staleness. ---
-
 @register(
     "winnow_fingerprint",
     oracle="""

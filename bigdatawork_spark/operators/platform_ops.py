@@ -842,9 +842,6 @@ def parquet_layout_audit(spark, sf_dir):
     ).orderBy("file_name", "row_group_id")
 
 
-# --- folded from the round-10 module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
-
 def _zvalue_terms(xcol: str, ycol: str, bits: int = 12) -> str:
     """Morton/Z-order bit interleave of two ``bits``-wide ints — the SAME
     SQL text runs on Spark and DuckDB (both parse >> & << identically;
@@ -920,12 +917,6 @@ def layout_zorder_stats(spark, sf_dir):
         .orderBy("tile")
     )
 
-
-# --- folded from the staged round-6 module (r15 module-hygiene
-# fold, VERDICT r14 item 5): moved VERBATIM apart from the
-# @_staged -> @register decorator (the module's own documented
-# endgame: 'delete this module and inline the @register
-# decorators'). Zero behavior change. ---
 
 # ---------------------------------------------------------------------------
 # privacy_dp_count — deterministic-noise DP counts (hash-green)

@@ -177,11 +177,6 @@ def ngram_topk(spark, sf_dir):
     )
 
 
-# --- folded from the round-13 module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
-
-# (_K1/_B are this module's existing BM25 constants —
-# the round-13 module re-declared the same values)
 _RRF_K = 60          # the SIGIR-2009 constant; dampens top-rank dominance
 _RRF_TERMS = ("join", "merge", "scan")   # lexical query (bm25_rank's)
 _RRF_QVEC = 0        # semantic query = this vec_id's embedding

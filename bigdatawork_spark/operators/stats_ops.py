@@ -467,9 +467,6 @@ def ts_outlier_mad(spark, sf_dir):
     )
 
 
-# --- folded from the round-11b module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
-
 # ---------------------------------------------------------------------------
 # quantile_bin_assign
 # ---------------------------------------------------------------------------
@@ -627,12 +624,6 @@ def corr_matrix(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # ngram_pmi
 
-
-# --- folded from the staged round-6 module (r15 module-hygiene
-# fold, VERDICT r14 item 5): moved VERBATIM apart from the
-# @_staged -> @register decorator (the module's own documented
-# endgame: 'delete this module and inline the @register
-# decorators'). Zero behavior change. ---
 
 # ---------------------------------------------------------------------------
 # ts_downsample_lttb — parallel LTTB-mean downsampling (hash-green)

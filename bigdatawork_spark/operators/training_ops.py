@@ -479,9 +479,6 @@ def mixture_epoch_plan(spark, sf_dir):
     )
 
 
-# --- folded from the round-10 module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
-
 @register(
     "decontaminate_ngram",
     oracle=f"""
@@ -581,9 +578,6 @@ def ngram_contamination(docs, n: int = 8):
         .orderBy("source")
     )
 
-
-# --- folded from the round-11b module (r15 module-hygiene fold,
-# VERDICT r14 item 5): moved VERBATIM — zero behavior change. ---
 
 # ---------------------------------------------------------------------------
 # global_row_index
@@ -758,12 +752,6 @@ def kfold_hash_assign(spark, sf_dir, k: int = _KFOLD_K):
 # ---------------------------------------------------------------------------
 # stream_restart_checkpoint
 
-
-# --- folded from the staged round-6 module (r15 module-hygiene
-# fold, VERDICT r14 item 5): moved VERBATIM apart from the
-# @_staged -> @register decorator (the module's own documented
-# endgame: 'delete this module and inline the @register
-# decorators'). Zero behavior change. ---
 
 # ---------------------------------------------------------------------------
 # embedding_pca_gram — distributed Gramian + driver eigensolve

@@ -660,12 +660,6 @@ def win_moving_zscore(spark, sf_dir):
     )
 
 
-# --- folded from the staged round-6 module (r15 module-hygiene
-# fold, VERDICT r14 item 5): moved VERBATIM apart from the
-# @_staged -> @register decorator (the module's own documented
-# endgame: 'delete this module and inline the @register
-# decorators'). Zero behavior change. ---
-
 # ---------------------------------------------------------------------------
 # win_rolling_median — exact median over a moving row frame (hash-green)
 

@@ -699,12 +699,6 @@ def table_format_stream_sink(spark, sf_dir):
     )
 
 
-# --- folded from the staged round-6 module (r15 module-hygiene
-# fold, VERDICT r14 item 5): moved VERBATIM apart from the
-# @_staged -> @register decorator (the module's own documented
-# endgame: 'delete this module and inline the @register
-# decorators'). Zero behavior change. ---
-
 # ---------------------------------------------------------------------------
 # table_format_vacuum — snapshot expiration for the manifest table format
 

@@ -9,21 +9,22 @@ writes a key's frames into a fresh dir in trigger order; ``_read_stream``
 replays it as a file source; ``_run_stream`` starts the one foreachBatch
 ``trigger(availableNow=True)`` query, and ``_drain_to_parquet`` (its
 parquet-writing caller) reads the result back as the final static table.
-Checkpoints live in fresh /tmp dirs so reruns never resume stale state.
+Shared shapes: ``_window_totals``, ``_interval_join``, ``_query_conf`` and
+``curation._ledger``.  Every dir is a fresh ``_fresh_dir`` under the io
+scratch root, so reruns never resume stale state.
 At scale: same code with a real source (Kafka/files), RocksDB state store,
 and a durable checkpoint dir.
 """
 
 from __future__ import annotations
 
-import atexit
 import glob
 import json
 import os
 import shutil
-import tempfile
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,16 +32,12 @@ from pyspark.sql import functions as F
 from ..io import load
 from ..registry import register
 from ..session import session_memo, spread_if_narrow
-
-# Scratch root for staged sources, checkpoints and drained results: private
-# to this process, and removed at interpreter exit so runs do not pile up
-# trees under the temp dir.
-_STREAM_ROOT = os.path.join(tempfile.gettempdir(), f"bdw_stream-{os.getpid()}")
-atexit.register(shutil.rmtree, _STREAM_ROOT, ignore_errors=True)
+from ..sources.io_ops import _tmp
 
 
 def _fresh_dir(tag: str) -> str:
-    path = os.path.join(_STREAM_ROOT, f"{tag}-{uuid.uuid4().hex[:8]}")
+    """A new, existing directory under the per-process io scratch root."""
+    path = _tmp(f"{tag}-{uuid.uuid4().hex[:8]}")
     os.makedirs(path, exist_ok=True)
     return path
 
@@ -187,6 +184,17 @@ def _drain_to_parquet(sdf, tag: str, output_mode: str = "append", chk=None, prog
     return spark.read.schema(sdf.schema).parquet(out)
 
 
+@contextmanager
+def _query_conf(spark, key: str, value: str):
+    """Conf ``key`` = ``value`` for the queries started in the block."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 @register("source_stream_file")
 def source_stream_file(spark, sf_dir):
     """File-based streaming source over an events parquet dir → parquet."""
@@ -249,22 +257,21 @@ def sink_stream_foreachbatch(spark, sf_dir):
     return _drain_to_parquet(sdf, "fb").orderBy("event_id")
 
 
-@register("stream_tumbling")
-def stream_tumbling(spark, sf_dir):
-    """Streaming twin of win_time_tumbling: 1-hour windows, update mode.
-    Single source file → single micro-batch → final table equals the batch
-    twin (asserted in tests/test_streaming.py)."""
+def _window_totals(spark, sf_dir, tag: str, *window):
+    """Event count and value total per (``F.window("ts", *window)``,
+    event_type), update mode, over the default staging: one micro-batch,
+    so the final table equals the batch twin."""
     src = _events_source_dir(spark, sf_dir)
     sdf = (
         _read_stream(spark, src)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .groupBy(F.window("ts", *window).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 6).alias("total_value"),
         )
     )
     return (
-        _drain_to_parquet(sdf, "tumbling", output_mode="update")
+        _drain_to_parquet(sdf, tag, output_mode="update")
         .select(
             F.col("w.start").alias("window_start"),
             "event_type",
@@ -273,6 +280,13 @@ def stream_tumbling(spark, sf_dir):
         )
         .orderBy("window_start", "event_type")
     )
+
+
+@register("stream_tumbling")
+def stream_tumbling(spark, sf_dir):
+    """Streaming twin of win_time_tumbling: 1-hour windows, update mode
+    (asserted in tests/test_streaming_twins.py)."""
+    return _window_totals(spark, sf_dir, "tumbling", "1 hour")
 
 
 @register("stream_watermark_late")
@@ -372,15 +386,9 @@ def stream_stateful_count(spark, sf_dir):
     # for THIS query only (shuffle partitions are read at query start;
     # restored after).  State stays bounded: one long per user either
     # way, just spread over more stores.  Measured 14 s → ~5 s at sf1.0.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(spark.sparkContext.defaultParallelism),
-    )
-    try:
+    width = str(spark.sparkContext.defaultParallelism)
+    with _query_conf(spark, "spark.sql.shuffle.partitions", width):
         out = _drain_to_parquet(sdf, "stateful", output_mode="update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return out.orderBy("user_id")
 
 
@@ -402,6 +410,37 @@ def stream_static_join(spark, sf_dir):
     return _drain_to_parquet(sdf, "staticjoin").orderBy("event_id")
 
 
+def _interval_join(spark, src, watermark: str, how: str, right_rows=None):
+    """``src`` joined with itself, one file per trigger per side: left
+    (first_id, user_id, ts_a) to the same user's right (second_id, uid_b,
+    ts_b) with ts_a < ts_b <= ts_a + 10 min, both sides under
+    ``watermark``; ``right_rows`` filters the right side."""
+    left = (
+        _read_stream(spark, src, max_files=1)
+        .select(
+            F.col("event_id").alias("first_id"),
+            F.col("user_id").alias("user_id"),
+            F.col("ts").alias("ts_a"),
+        )
+        .withWatermark("ts_a", watermark)
+    )
+    right = _read_stream(spark, src, max_files=1)
+    if right_rows is not None:
+        right = right.filter(right_rows)
+    right = right.select(
+        F.col("event_id").alias("second_id"),
+        F.col("user_id").alias("uid_b"),
+        F.col("ts").alias("ts_b"),
+    ).withWatermark("ts_b", watermark)
+    return left.join(
+        right,
+        (F.col("user_id") == F.col("uid_b"))
+        & (F.col("ts_b") > F.col("ts_a"))
+        & (F.col("ts_b") <= F.col("ts_a") + F.expr("INTERVAL 10 MINUTES")),
+        how,
+    )
+
+
 @register("stream_stream_join")
 def stream_stream_join(spark, sf_dir):
     """Watermarked stream-stream inner join — both sides are unbounded, so
@@ -420,30 +459,9 @@ def stream_stream_join(spark, sf_dir):
     src = _events_source_dir(
         spark, sf_dir, chunks=[F.col("ts") < mid, F.col("ts") >= mid]
     )
-    left = (
-        _read_stream(spark, src, max_files=1)
-        .select(
-            F.col("event_id").alias("first_id"),
-            F.col("user_id").alias("user_id"),
-            F.col("ts").alias("ts_a"),
-        )
-        .withWatermark("ts_a", "30 minutes")
+    joined = _interval_join(spark, src, "30 minutes", "inner").select(
+        "first_id", "second_id", "user_id"
     )
-    right = (
-        _read_stream(spark, src, max_files=1)
-        .select(
-            F.col("event_id").alias("second_id"),
-            F.col("user_id").alias("uid_b"),
-            F.col("ts").alias("ts_b"),
-        )
-        .withWatermark("ts_b", "30 minutes")
-    )
-    joined = left.join(
-        right,
-        (F.col("user_id") == F.col("uid_b"))
-        & (F.col("ts_b") > F.col("ts_a"))
-        & (F.col("ts_b") <= F.col("ts_a") + F.expr("INTERVAL 10 MINUTES")),
-    ).select("first_id", "second_id", "user_id")
     return _drain_to_parquet(joined, "ssjoin").orderBy("first_id", "second_id")
 
 
@@ -461,31 +479,12 @@ def stream_stream_left_join(spark, sf_dir):
     to the DuckDB-verified batch join_interval_left.  Source staging is
     the memoized sentinel layout shared with stream_session (r17)."""
     src = _sentinel_events_source_dir(spark, sf_dir)
-    left = (
-        _read_stream(spark, src, max_files=1)
-        .select(
-            F.col("event_id").alias("first_id"),
-            F.col("user_id").alias("user_id"),
-            F.col("ts").alias("ts_a"),
-        )
-        .withWatermark("ts_a", "10 minutes")
-    )
-    right = (
-        _read_stream(spark, src, max_files=1)
-        .filter(F.col("event_type").isin("purchase", "sentinel"))
-        .select(
-            F.col("event_id").alias("second_id"),
-            F.col("user_id").alias("uid_b"),
-            F.col("ts").alias("ts_b"),
-        )
-        .withWatermark("ts_b", "10 minutes")
-    )
-    joined = left.join(
-        right,
-        (F.col("user_id") == F.col("uid_b"))
-        & (F.col("ts_b") > F.col("ts_a"))
-        & (F.col("ts_b") <= F.col("ts_a") + F.expr("INTERVAL 10 MINUTES")),
+    joined = _interval_join(
+        spark,
+        src,
+        "10 minutes",
         "leftOuter",
+        F.col("event_type").isin("purchase", "sentinel"),
     ).select("first_id", "user_id", "second_id")
     return (
         _drain_to_parquet(joined, "ssleft")
@@ -548,14 +547,12 @@ def stream_stateful_tws(spark, sf_dir):
         # the r16 provider A/B measured 3.6× SLOWER for the stream-stream
         # join state op locally (14.0 s vs 49.9 s warm at sf1.0;
         # OPTIMIZATION_r16.md §11).
-        prov_key = "spark.sql.streaming.stateStore.providerClass"
-        prev_provider = spark.conf.get(prov_key)
-        spark.conf.set(
-            prov_key,
+        with _query_conf(
+            spark,
+            "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
-        )
-        try:
+        ):
             # same §4.1 projection as stream_stateful_count: only the
             # grouping key crosses the stateful exchange + Arrow boundary
             sdf = (
@@ -570,9 +567,7 @@ def stream_stateful_tws(spark, sf_dir):
                 )
             )
             out = _drain_to_parquet(sdf, "tws", output_mode="update")
-            return out.orderBy("user_id")
-        finally:
-            spark.conf.set(prov_key, prev_provider)
+        return out.orderBy("user_id")
     except Exception:
         # fallback: classic arbitrary-state API, same semantics
         return stream_stateful_count(spark, sf_dir)
@@ -581,27 +576,8 @@ def stream_stateful_tws(spark, sf_dir):
 @register("stream_sliding")
 def stream_sliding(spark, sf_dir):
     """Streaming twin of win_time_sliding: 1-hour windows every 15 min,
-    update mode, single micro-batch → final table equals the batch twin
-    (asserted in tests/test_streaming_twins.py)."""
-    src = _events_source_dir(spark, sf_dir)
-    sdf = (
-        _read_stream(spark, src)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("total_value"),
-        )
-    )
-    return (
-        _drain_to_parquet(sdf, "sliding", output_mode="update")
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-        .orderBy("window_start", "event_type")
-    )
+    update mode (asserted in tests/test_streaming_twins.py)."""
+    return _window_totals(spark, sf_dir, "sliding", "1 hour", "15 minutes")
 
 
 @register("stream_session")
@@ -762,7 +738,6 @@ def stream_curate_to_table(spark, sf_dir):
     metadata-sized."""
     from pyspark.sql import Window as _W
 
-    from ..sources.io_ops import _tmp
     from ..sources.manifest_format import ManifestTable
 
     d = load(spark, sf_dir, "documents")
@@ -811,7 +786,7 @@ def stream_restart_checkpoint(spark, sf_dir):
     double-counting of batch 1.  This is the durability property that
     lets a 100 TB continuous-curation job survive deploys and
     preemptions; rows-only at the driver (wall-clock source lifecycle),
-    value-pinned by tests/test_round11b.py::
+    value-pinned by tests/test_streaming_recovery.py::
     test_stream_restart_checkpoint_exactly_once."""
     ev = load(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     cut = ev.agg(F.percentile_approx("event_id", 0.5)).collect()[0][0]
@@ -835,12 +810,19 @@ def stream_restart_checkpoint(spark, sf_dir):
     return out.orderBy("user_id")
 
 
-# _split and _replica_plants stay in operators.curation — imported
-# in-function at the admission call sites (cross-package pattern).
-
 # ---------------------------------------------------------------------------
 # stream_index_admission — the streaming twin of the admission family
 # ---------------------------------------------------------------------------
+
+
+def _corpus_index(spark, sf_dir):
+    """The corpus hash index of both streaming admission keys, materialized
+    once: every micro-batch re-evaluates a stream-static join's static
+    side (r17 drain A/B at sf1.0: 4.2-4.4 → 3.1-3.2 s)."""
+    from ..operators.curation import _split
+
+    _, corpus = _split(spark, sf_dir, augmented=False)
+    return corpus.select("h").distinct().localCheckpoint()
 
 
 @register("stream_index_admission", streaming=True)  # rows-only: wall-clock source lifecycle
@@ -865,15 +847,15 @@ def stream_index_admission(spark, sf_dir):
 
     The final ledger therefore equals ``dedup_incremental_exact``'s
     full (doc_id, text_hash, n_batch_copies) survivor relation (pinned
-    in tests/test_round11c.py).  Production note: unbounded per-hash
+    in tests/test_admission.py).  Production note: unbounded per-hash
     state wants a watermark once a re-arrival horizon exists — that
     bounded-state variant is ``stream_index_admission_wm`` (r12), which
     pins the state-store eviction as a runtime metric; the index side
-    stays a plain batch relation re-read per micro-batch, i.e. the
-    persisted-index shape."""
-    from ..operators.curation import _replica_plants, _split
+    stays a static relation, materialized once, i.e. the persisted-index
+    shape."""
+    from ..operators.curation import _ledger, _replica_plants, _split
 
-    batch, corpus = _split(spark, sf_dir, augmented=False)
+    batch, _ = _split(spark, sf_dir, augmented=False)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # r17: repartition(1), not coalesce(1) — coalesce collapses the
     # parallel filter over the core-width _split cache back into ONE
@@ -887,20 +869,10 @@ def stream_index_admission(spark, sf_dir):
         "src-adm",
     )
 
-    # r17: materialize the static index once instead of per micro-batch
-    # (see _wm_admission_stream's note)
-    idx = corpus.select("h").distinct().localCheckpoint()
-    sdf = (
-        _read_stream(spark, src, max_files=1)
-        .withColumn("h", F.sha2("text", 256))
-        .join(idx, "h", "left_anti")
-        .groupBy(F.col("h").alias("text_hash"))
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_batch_copies"),
-        )
-        .select("doc_id", "text_hash", "n_batch_copies")
-    )
+    sdf = _ledger(
+        _read_stream(spark, src, max_files=1).withColumn("h", F.sha2("text", 256)),
+        _corpus_index(spark, sf_dir),
+    ).select("doc_id", "text_hash", "n_batch_copies")
     out = _drain_to_parquet(sdf, "adm", output_mode="complete")
     return out.orderBy("doc_id")
 
@@ -920,12 +892,6 @@ _WM_W2_TS = "2024-03-01 03:10:00"  # advances watermark past window 1
 _WM_FLUSH_TS = "2024-03-01 06:10:00"  # advances watermark past window 2
 _WM_W2_SHIFT = 2000000
 _WM_W2_SUFFIX = " w2marker"
-
-# q.recentProgress of the last stream_index_admission_wm run — the engine
-# test reads the per-micro-batch state-store numRowsTotal trace from here
-# to pin EVICTION (the metric drops after the horizon passes), the same
-# runtime-evidence pattern as join_dpp_partitioned's partitions-read pin.
-_WM_LAST_PROGRESS: list = []
 
 
 def _wm_source_dir(spark, sf_dir) -> str:
@@ -964,35 +930,21 @@ def _wm_admission_stream(spark, sf_dir, src):
     one-file-per-trigger read, anti-join against the corpus hash index,
     1-hour admission windows under a 30-minute watermark, append-mode
     finalized output.  Extracted so the checkpoint kill/restart test
-    runs the EXACT pipeline the registered key runs."""
-    from ..operators.curation import _split
+    runs the EXACT pipeline the registered key runs (and the engine test
+    reads the state-store trace from its own drain of it)."""
+    from ..operators.curation import _ledger
 
-    _, corpus = _split(spark, sf_dir, augmented=False)
-    # r17 (guide §5 caching + §1.2): the static index side is re-evaluated
-    # by EVERY micro-batch (five triggers here) — localCheckpoint it once,
-    # which is also truer to the persisted-index shape the docstring
-    # claims (a production index is materialized, not recomputed per
-    # batch).  Drain A/B at sf1.0: 4.2-4.4 → 3.1-3.2 s.
-    idx = corpus.select("h").distinct().localCheckpoint()
-    return (
+    return _ledger(
         _read_stream(spark, src, max_files=1)
         .withColumn("h", F.sha2("text", 256))
-        .withWatermark("event_ts", "30 minutes")
-        .join(idx, "h", "left_anti")
-        .groupBy(
-            F.window("event_ts", "1 hour").alias("win"),
-            F.col("h").alias("text_hash"),
-        )
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_batch_copies"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "doc_id",
-            "text_hash",
-            "n_batch_copies",
-        )
+        .withWatermark("event_ts", "30 minutes"),
+        _corpus_index(spark, sf_dir),
+        F.window("event_ts", "1 hour").alias("win"),
+    ).select(
+        F.col("win.start").alias("window_start"),
+        "doc_id",
+        "text_hash",
+        "n_batch_copies",
     )
 
 
@@ -1024,9 +976,9 @@ def stream_index_admission_wm(spark, sf_dir):
     performs the final emit).  The engine test pins both the emitted
     survivor relations AND the state-store ``numRowsTotal`` trace
     (rises, then DROPS after each horizon passes — bounded state as a
-    runtime metric, not prose) from ``_WM_LAST_PROGRESS``."""
+    runtime metric, not prose) of a drain of ``_wm_admission_stream``."""
     src = _wm_source_dir(spark, sf_dir)
     sdf = _wm_admission_stream(spark, sf_dir, src)
     # append emits a window only once finalized
-    out = _drain_to_parquet(sdf, "admwm", progress=_WM_LAST_PROGRESS)
+    out = _drain_to_parquet(sdf, "admwm")
     return out.orderBy("window_start", "doc_id")

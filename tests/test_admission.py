@@ -1,9 +1,9 @@
-"""Round-11c incremental-dedup invariants beyond the driver's hash
-check: cross-op consistency of the exact admission and its audit, and
-the rows-only MinHash admission key's recall/exclusion contract on a
-hand-built corpus with KNOWN near-dups straddling the batch split (the
-sf corpus carries no guaranteed cross-split near-dups, so recall there
-would be vacuous)."""
+"""Admission-family invariants beyond the driver's hash check: cross-op
+consistency of the exact admission and its audit, the streaming ledgers
+against the batch survivors, and the rows-only MinHash admission key's
+recall/exclusion contract on a hand-built corpus with KNOWN near-dups
+straddling the batch split (the sf corpus carries no guaranteed
+cross-split near-dups, so recall there would be vacuous)."""
 
 from __future__ import annotations
 
@@ -196,12 +196,23 @@ def test_stream_index_admission_wm_bounded_state_and_survivors(spark, sf_dir):
     dropped), (b) emit window 2's new-document admissions, and (c) show
     state-store EVICTION as a runtime metric: numRowsTotal RISES while
     windows accumulate, then DROPS after each horizon passes — bounded
-    state pinned the way join_dpp_partitioned pins partitions-read."""
-    from bigdatawork_spark.streaming import stream_ops as r11c
+    state pinned the way join_dpp_partitioned pins partitions-read.  The
+    trace comes from the test's own drain of the key's pipeline, whose
+    rows must equal the key's."""
+    from bigdatawork_spark.streaming import stream_ops
 
     rows = QUERIES["stream_index_admission_wm"](spark, sf_dir).collect()
-    w1_start = r11c._WM_BASE[:13]  # "2024-03-01 00"
-    w2_start = r11c._WM_W2_TS[:13]  # "2024-03-01 03"
+    progress: list = []
+    traced = stream_ops._drain_to_parquet(
+        stream_ops._wm_admission_stream(
+            spark, sf_dir, stream_ops._wm_source_dir(spark, sf_dir)
+        ),
+        "admwm-trace",
+        progress=progress,
+    )
+    assert {tuple(r) for r in traced.collect()} == {tuple(r) for r in rows}
+    w1_start = stream_ops._WM_BASE[:13]  # "2024-03-01 00"
+    w2_start = stream_ops._WM_W2_TS[:13]  # "2024-03-01 03"
     got_w1 = {
         (r.doc_id, r.text_hash, r.n_batch_copies)
         for r in rows
@@ -226,8 +237,8 @@ def test_stream_index_admission_wm_bounded_state_and_survivors(spark, sf_dir):
 
     batch, corpus = _split(spark, sf_dir, augmented=False)
     w2 = batch.select(
-        (F.col("doc_id") + r11c._WM_W2_SHIFT).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(r11c._WM_W2_SUFFIX)).alias("text"),
+        (F.col("doc_id") + stream_ops._WM_W2_SHIFT).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(stream_ops._WM_W2_SUFFIX)).alias("text"),
     ).withColumn("h", F.sha2("text", 256))
     idx = corpus.select("h").distinct()
     want_w2 = {
@@ -249,7 +260,7 @@ def test_stream_index_admission_wm_bounded_state_and_survivors(spark, sf_dir):
     # below the peak, so eviction provably happened.
     trace = [
         p["stateOperators"][0]["numRowsTotal"]
-        for p in r11c._WM_LAST_PROGRESS
+        for p in progress
         if p.get("stateOperators")
     ]
     assert trace, "no state-operator progress recorded"

@@ -202,6 +202,22 @@ def test_cache_has_its_owners():
     assert set(found) == CACHE_OWNERS | CACHE_PENDING, sorted(found)
 
 
+#: The one owner of ``tempfile.gettempdir()``: ``io_ops._TMP_ROOT``, the
+#: per-process scratch root that ``_tmp`` and ``stream_ops._fresh_dir``
+#: dirs live under and that is removed at exit.
+TEMPDIR_OWNERS = {("sources/io_ops.py", "<module>")}
+
+#: Roots still to move under it; each leaves its tree behind per process.
+TEMPDIR_PENDING = {("operators/reshape.py", "join_bucketed_colocated")}
+
+
+def test_scratch_root_has_one_owner():
+    """``tempfile.gettempdir()`` appears in package source only in
+    TEMPDIR_OWNERS and the named TEMPDIR_PENDING sites."""
+    found = _package_calls(lambda node: _is_attr_call(node, "gettempdir"))
+    assert set(found) == TEMPDIR_OWNERS | TEMPDIR_PENDING, sorted(found)
+
+
 #: The builder-side eager ``.count()`` sites left in package source.
 COUNT_OWNERS = {
     # the io table cache fills its cache once per table

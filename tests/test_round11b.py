@@ -1,7 +1,7 @@
 """Round-11 (cont.) operator invariants beyond the driver's hash check:
 the scale-path twins (approx-quantile bins, hash k-fold dealer) pinned
-against their exact oracle-checkable forms, the global-index numbering
-invariants, and the checkpoint-restart exactly-once twin."""
+against their exact oracle-checkable forms and the global-index numbering
+invariants."""
 
 from __future__ import annotations
 
@@ -95,22 +95,3 @@ def test_ngram_pmi_scores_rank_collocations_over_chance(spark, sf_dir):
     # the MLE denominators are wrong
     assert pmis[0] > 0
 
-
-def test_stream_restart_checkpoint_exactly_once(spark, sf_dir):
-    """COVERAGE.md rows-only compensating test: counts after the
-    stop/append/restart cycle equal the batch groupBy over the full
-    source — batch 1 counted exactly once despite two query lifetimes
-    over the same checkpoint."""
-    got = {
-        r.user_id: r.n_purchases
-        for r in QUERIES["stream_restart_checkpoint"](spark, sf_dir).collect()
-    }
-    exp = {
-        r.user_id: r.n
-        for r in load(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .collect()
-    }
-    assert got == exp

@@ -10,6 +10,7 @@ import time
 from pyspark.sql import functions as F
 
 from bigdatawork_spark.io import load
+from bigdatawork_spark.registry import QUERIES
 from bigdatawork_spark.streaming.stream_ops import _fresh_dir, _read_stream
 
 
@@ -59,6 +60,26 @@ def test_checkpoint_restart_without_new_data_is_noop(spark, sf_dir):
     n = spark.read.parquet(out).count()
     _drain_to_parquet(spark, src, chk, out)  # restart, nothing new
     assert spark.read.parquet(out).count() == n
+
+
+def test_stream_restart_checkpoint_exactly_once(spark, sf_dir):
+    """COVERAGE.md rows-only compensating test: counts after the
+    stop/append/restart cycle equal the batch groupBy over the full
+    source — batch 1 counted exactly once despite two query lifetimes
+    over the same checkpoint."""
+    got = {
+        r.user_id: r.n_purchases
+        for r in QUERIES["stream_restart_checkpoint"](spark, sf_dir).collect()
+    }
+    exp = {
+        r.user_id: r.n
+        for r in load(spark, sf_dir, "events")
+        .filter(F.col("event_type") == "purchase")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+        .collect()
+    }
+    assert got == exp
 
 
 _ROCKSDB_PROVIDER = (
@@ -385,19 +406,21 @@ sys.path.insert(0, {root!r})
 from bigdatawork_spark.sources import io_ops
 from bigdatawork_spark.streaming import stream_ops
 
-with open(os.path.join(stream_ops._fresh_dir("t"), "f"), "w") as f:
+fresh = stream_ops._fresh_dir("t")
+with open(os.path.join(fresh, "f"), "w") as f:
     f.write("x")
 with open(io_ops._tmp("t"), "w") as f:
     f.write("x")
-print(os.getpid(), stream_ops._STREAM_ROOT, io_ops._TMP_ROOT)
+print(os.getpid(), fresh, io_ops._TMP_ROOT)
 """
 
 
 def test_scratch_roots_are_per_process_and_removed_at_exit(tmp_path):
-    """The stream and io scratch roots are private to the process that
-    made them and gone once it exits, so runs do not pile up sources,
-    checkpoints and drained results.  The probe process imports the
-    package without starting Spark."""
+    """One scratch root: a stream dir from ``_fresh_dir`` lies under the io
+    root, which is private to the process that made it and gone once it
+    exits, so runs do not pile up sources, checkpoints and drained
+    results.  The probe process imports the package without starting
+    Spark."""
     import os
     import subprocess
     import sys
@@ -409,8 +432,8 @@ def test_scratch_roots_are_per_process_and_removed_at_exit(tmp_path):
         capture_output=True, text=True, timeout=300,
     )
     assert done.returncode == 0, done.stderr[-3000:]
-    pid, *roots = done.stdout.split()[-3:]
-    for scratch in roots:
-        assert scratch.startswith(str(tmp_path)), scratch
-        assert scratch.endswith(f"-{pid}"), scratch
-        assert not os.path.exists(scratch), f"{scratch} left behind"
+    pid, fresh, scratch = done.stdout.split()[-3:]
+    assert os.path.dirname(fresh) == scratch, (fresh, scratch)
+    assert scratch.startswith(str(tmp_path)), scratch
+    assert scratch.endswith(f"-{pid}"), scratch
+    assert not os.path.exists(scratch), f"{scratch} left behind"
