@@ -263,15 +263,15 @@ def char_ngram_profile(spark, sf_dir):
     """Language-ID model TRAINING: per-language top-20 character trigram
     profiles from the labeled corpus — the table ``text_langid``'s
     classifier heuristic would be fit from.  One narrow projection
-    generates the trigram array per document (``transform(sequence)`` —
-    no Python), one explode, one (lang, gram) keyed aggregation, then a
+    generates the trigram array per document (``curation.char_trigrams``
+    — no Python), one explode, one (lang, gram) keyed aggregation, then a
     per-lang top-k window.  The wordcount shape: the shuffle carries
     3-char grams + counts, never documents; partial aggregation absorbs
     the heavy duplication map-side.  Deterministic tiebreak (cnt desc,
     gram) keeps the profile stable across engines and partitionings."""
-    d = load(spark, sf_dir, "documents").where(
-        "text is not null and length(text) >= 3"
-    )
+    from .curation import char_trigrams
+
+    d = load(spark, sf_dir, "documents")
     # round-7 rewrite: the original transform() lambda recomputed
     # lower(text) for EVERY trigram index (no common-subexpression
     # elimination inside SQL lambdas — O(L²) lowercasing per document)
@@ -280,19 +280,13 @@ def char_ngram_profile(spark, sf_dir):
     # post-explode got 33-40 s → 13.7 s at synthetic sf1.0.
     # Spread the slim (lang, lowered-text) relation (documents ≈ 50 MB
     # decoded at sf1.0 — one cheap exchange), then generate grams with the
-    # one-pass codegen regexp_extract_all lookahead dedup_ngram_jaccard
-    # adopted in r08, which also avoids duplicating the ~290-char lt
-    # across every exploded position.  Interleaved A/B at sf1.0 (noop
-    # sink, 3 rounds): posexplode 13.6-14.3 s; posexplode+spread
+    # one-pass codegen char_trigrams, which also avoids duplicating the
+    # ~290-char lt across every exploded position.  Interleaved A/B at
+    # sf1.0 (noop sink, 3 rounds): posexplode 13.6-14.3 s; posexplode+spread
     # 1.2-2.3 s; regex unspread 2.6-3.9 s; regex+spread 0.76-1.5 s.
-    grams = (
-        spread_if_narrow(d.selectExpr("lang", "lower(text) as lt"))
-        .select(
-            "lang",
-            F.explode(
-                F.expr("regexp_extract_all(lt, '(?s)(?=(.{3}))', 1)")
-            ).alias("gram"),
-        )
+    # NULL, empty and sub-3-char texts yield no grams.
+    grams = spread_if_narrow(d.selectExpr("lang", "lower(text) as lt")).select(
+        "lang", F.explode(char_trigrams("lt")).alias("gram")
     )
     counts = grams.groupBy("lang", "gram").agg(F.expr("count(1) as cnt"))
     return (
@@ -543,6 +537,18 @@ def bpe_first_k_merges(spark, sf_dir):
     ).orderBy("merge_idx")
 
 
+def char_entropy_sql(cs: str, n: str) -> str:
+    """Character Shannon entropy in nats, unrounded: ``-Σ p·ln p`` over the
+    distinct characters of the char array ``cs``, each ``p`` its count
+    over the text length ``n``.  Shared by text_entropy_filter and
+    CurationPipeline.entropy_gate."""
+    p = f"cast(size(filter({cs}, x -> x = u)) as double) / {n}"
+    return (
+        f"-aggregate(transform(array_distinct({cs}), u -> ({p}) * ln({p})),"
+        " cast(0.0 as double), (a, x) -> a + x)"
+    )
+
+
 @register(
     "text_entropy_filter",
     oracle="""
@@ -590,10 +596,7 @@ def text_entropy_filter(spark, sf_dir):
         .selectExpr(
             "doc_id",
             "n_chars",
-            "round(-aggregate(transform(array_distinct(cs), u ->"
-            " (cast(size(filter(cs, x -> x = u)) as double) / n_chars)"
-            " * ln(cast(size(filter(cs, x -> x = u)) as double) / n_chars)),"
-            " cast(0.0 as double), (a, x) -> a + x), 6) as char_entropy",
+            f"round({char_entropy_sql('cs', 'n_chars')}, 6) as char_entropy",
         )
         .selectExpr(
             "doc_id",

@@ -171,6 +171,30 @@ def split_label_sql(key: str) -> str:
     )
 
 
+def char_trigrams(col):
+    """Every character 3-gram of ``col``, one per code point, in order —
+    the oracles' ``substr(text, i, 3)`` over ``1..length(text) - 2``.  One
+    codegen ``regexp_extract_all`` lookahead pass (r08 A/B at sf1.0: 4.8 s
+    vs 16.7 s for ``transform(sequence)``).  The regex runs over UTF-16, so
+    a gram may not start on a low surrogate: that position is the second
+    half of a supplementary code point (an emoji), not a character.  (?s)
+    lets '.' cross newlines.  Empty and sub-3-char text give no grams, NULL
+    text NULL."""
+    return F.regexp_extract_all(col, F.lit(r"(?s)(?=([^\x{DC00}-\x{DFFF}].{2}))"), 1)
+
+
+def word_grams(ws, n: int):
+    """The space-joined ``n``-word grams of the word array ``ws``, in
+    order; an empty array when ``ws`` has fewer than ``n`` words (Spark's
+    ``sequence(1, 0)`` is the descending ``[1, 0]``, DuckDB's
+    ``generate_series(1, 0)`` is empty)."""
+    grams = F.transform(
+        F.sequence(F.lit(1), F.size(ws) - (n - 1)),
+        lambda i: F.array_join(F.slice(ws, i, n), " "),
+    )
+    return F.when(F.size(ws) >= n, grams).otherwise(F.array())
+
+
 @register(
     "text_pii_scrub",
     oracle="""
@@ -297,10 +321,9 @@ def dedup_ngram_jaccard(spark, sf_dir):
       result, never silent; it is 0 whenever the corpus is small enough
       that the plan was exhaustive.
 
-    Gram construction uses one codegen ``regexp_extract_all`` lookahead
-    pass per document (r08 A/B at sf1.0: 4.8 s vs 25.3 s for the r07
-    posexplode form, which duplicated the ~290-char text across every
-    exploded position, and 16.7 s for the interpreted transform() form).
+    Grams come from ``char_trigrams``, one codegen pass per document
+    (r08 A/B at sf1.0: 4.8 s vs 25.3 s for the r07 posexplode form, which
+    duplicated the ~290-char text across every exploded position).
 
     At 100 TB: generation is a keyed equi-join with expected-bounded
     blocks (no per-block sort anywhere), verification is a map-side
@@ -317,11 +340,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
         spread_if_narrow(d)
         .select(
             "doc_id",
-            # (?s) so '.' crosses newlines — parity with the oracle's
-            # substr() grams on any corpus, not just newline-free ones
-            F.expr(
-                "array_distinct(regexp_extract_all(text, '(?s)(?=(.{3}))', 1))"
-            ).alias("gs"),
+            F.array_distinct(char_trigrams("text")).alias("gs"),
         )
         .withColumn("n", F.size("gs"))
         # engine-INTERNAL int64 gram ids for the verify intersection (r08
@@ -525,8 +544,10 @@ FROM reach GROUP BY id ORDER BY doc_id
 def dedup_cluster_cc(spark, sf_dir):
     """Connected-components clustering of near-dup pairs — the step that
     turns pairwise similarity (dedup_ngram_jaccard et al.) into dedup
-    groups ("keep one doc per component").  Distributed min-label
-    propagation by message passing over a carried node state
+    groups ("keep one doc per component").  Docs are linked by the
+    Jaccard of their ``char_trigrams`` sets; a doc shorter than 3
+    characters has no grams and stays its own component.  Distributed
+    min-label propagation by message passing over a carried node state
     ``(id, comp, nbrs, moved)``.  A round is ONE aggregate: the nodes'
     own rows (which carry the old label) and the round's messages,
     grouped by ``id`` to the minimum label.  Round 1 sends every edge and
@@ -545,22 +566,11 @@ def dedup_cluster_cc(spark, sf_dir):
     long-diameter graph; the driver-side loop is control flow only — all
     data movement stays distributed."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    # length >= 3 guard (r14 edge-corpus campaign): Spark's
-    # sequence(1, 0) is the DESCENDING [1, 0] while DuckDB's
-    # generate_series(1, 0) is empty — a <3-char doc would fabricate
-    # grams here and none in the oracle.  Gram-less docs still get a
-    # component (their own) via `state`, which is built from d, and the
-    # oracle's nodes CTE now matches (all docs, not just grammed ones).
-    grams = d.filter(F.length("text") >= 3).select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, length(text) - 2),"
-                    " i -> substring(text, i, 3))"
-                )
-            )
-        ).alias("g"),
+    # A <3-char or NULL doc has no grams (the oracle's length >= 3 guard);
+    # it still gets a component (its own) via `own`, which is built from
+    # d, as the oracle's all-docs nodes CTE does.
+    grams = d.select(
+        "doc_id", F.explode(F.array_distinct(char_trigrams("text"))).alias("g")
     )
     sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = grams.withColumnRenamed("doc_id", "id_a")

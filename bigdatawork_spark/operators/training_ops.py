@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..io import load
 from ..registry import register
 from ..session import restage, spread_if_narrow
-from .curation import split_label_sql
+from .curation import split_label_sql, word_grams
 
 
 @register(
@@ -55,23 +55,12 @@ def contamination_ngram(spark, sf_dir):
     against eval suites before pretraining (shingles of the benchmark fit
     in memory by construction)."""
     d = load(spark, sf_dir, "documents")
-    words = d.select("doc_id", F.split("text", " ").alias("ws")).filter(
-        F.size("ws") >= 5
-    )
     # `grams` feeds BOTH the bench and train branches: spread the compact
     # word arrays before the shingle explodes, 5.1-6.0 s → 2.2-2.5 s at
     # sf1.0 (counts are keyed, fold-order-free).
-    words = spread_if_narrow(words)
+    words = spread_if_narrow(d.select("doc_id", F.split("text", " ").alias("ws")))
     grams = words.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, size(ws) - 4),"
-                    " i -> concat_ws(' ', slice(ws, i, 5)))"
-                )
-            )
-        ).alias("g"),
+        "doc_id", F.explode(F.array_distinct(word_grams("ws", 5))).alias("g")
     )
     bench = grams.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
     train = grams.filter(F.col("doc_id") % 97 != 0)
@@ -320,19 +309,23 @@ def decontaminate_exact(spark, sf_dir):
         d.filter(F.col("split").isin("val", "test")).select("fp").distinct()
     )
     train = d.filter("split = 'train'")
-    flagged = train.join(
-        F.broadcast(bench.withColumn("__hit", F.lit(1))), "fp", "left"
+    return _contamination_report(
+        train.join(F.broadcast(bench.withColumn("__hit", F.lit(1))), "fp", "left")
     )
+
+
+def _contamination_report(flagged):
+    """Per-source ``n_train``, ``n_contaminated`` and ``n_clean`` of the
+    train rows ``flagged``, whose ``__hit`` column a left join against the
+    benchmark set non-NULL on contaminated rows — the report both
+    decontamination keys return."""
+    hit = F.col("__hit").isNotNull()
     return (
         flagged.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_train"),
-            F.sum(F.when(F.col("__hit").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_contaminated"),
-            F.sum(F.when(F.col("__hit").isNotNull(), 0).otherwise(1))
-            .cast("bigint")
-            .alias("n_clean"),
+            F.sum(F.when(hit, 1).otherwise(0)).cast("bigint").alias("n_contaminated"),
+            F.sum(F.when(hit, 0).otherwise(1)).cast("bigint").alias("n_clean"),
         )
         .orderBy("source")
     )
@@ -548,13 +541,11 @@ def ngram_contamination(docs, n: int = 8):
         "filter(split(lower(text), ' '), x -> x != '') as ws",
         f"{split_label_sql('doc_id')} as split",
     )
-    g = w.filter(F.size("ws") >= n).selectExpr(
-        "doc_id",
-        "split",
-        f"explode(transform(sequence(1, size(ws) - {n - 1}), "
-        f"i -> cast(conv(substring(md5(array_join(slice(ws, i, {n}), ' ')), "
-        "1, 15), 16, 10) as bigint))) as gh",
+    gh = F.transform(
+        word_grams("ws", n),
+        lambda x: F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("bigint"),
     )
+    g = w.select("doc_id", "split", F.explode(gh).alias("gh"))
     bench = g.filter("split in ('val', 'test')").select("gh").distinct()
     hit = (
         g.filter("split = 'train'")
@@ -562,20 +553,10 @@ def ngram_contamination(docs, n: int = 8):
         .select("doc_id")
         .distinct()
     )
-    return (
-        w.filter("split = 'train'")
-        .join(hit.withColumn("__hit", F.lit(1)), "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_train"),
-            F.sum(F.when(F.col("__hit").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_contaminated"),
-            F.sum(F.when(F.col("__hit").isNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_clean"),
+    return _contamination_report(
+        w.filter("split = 'train'").join(
+            hit.withColumn("__hit", F.lit(1)), "doc_id", "left"
         )
-        .orderBy("source")
     )
 
 

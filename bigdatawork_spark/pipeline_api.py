@@ -140,14 +140,11 @@ class CurationPipeline:
         (single-char floods, binary spill) — the ``text_entropy_filter``
         signal as a chainable stage.  Narrow, zero-shuffle."""
 
+        from .operators.corpus_ops import char_entropy_sql
+
         def gate(df: DataFrame) -> DataFrame:
             cs = f"filter(split(lower({col}), ''), c -> c != '')"
-            ent = (
-                f"-aggregate(transform(array_distinct({cs}), u ->"
-                f" (cast(size(filter({cs}, x -> x = u)) as double) / length({col}))"
-                f" * ln(cast(size(filter({cs}, x -> x = u)) as double) / length({col}))),"
-                " cast(0.0 as double), (a, x) -> a + x)"
-            )
+            ent = char_entropy_sql(cs, f"length({col})")
             return df.filter(F.expr(f"length({col}) > 0 and {ent} >= {min_nats}"))
 
         return self.stage(f"entropy_gate(>={min_nats})", gate)
@@ -196,22 +193,19 @@ class CurationPipeline:
         Gopher boilerplate/spam gate as a stage.  Per-row array exprs only:
         narrow, zero-shuffle."""
 
+        from .operators.curation import word_grams
+
         def gate(df: DataFrame) -> DataFrame:
-            ws = f"filter(split({col}, ' '), w -> w != '')"
-            grams = (
-                f"transform(sequence(1, greatest(size({ws}) - 2, 0)),"
-                f" i -> concat_ws(' ', slice({ws}, i, 3)))"
-            )
+            ws = F.filter(F.split(col, " "), lambda w: w != "")
+            grams = word_grams(ws, 3)
             # coalesce: NULL text makes size(ws) NULL, which would fall
             # into the ELSE branch and score an accidental 0.5 (r05
             # review); NULL rows take the short-text path (rep3=0) like
             # repetition_ngram_ratio's empty-array convention.
-            rep3 = (
-                f"case when coalesce(size({ws}), 0) < 3 then 0.0 else"
-                f" 1.0 - cast(size(array_distinct({grams})) as double)"
-                f" / size({grams}) end"
+            rep3 = F.when(F.coalesce(F.size(ws), F.lit(0)) < 3, 0.0).otherwise(
+                1.0 - F.size(F.array_distinct(grams)).cast("double") / F.size(grams)
             )
-            return df.filter(F.expr(f"{rep3} <= {max_rep3}"))
+            return df.filter(rep3 <= max_rep3)
 
         return self.stage(f"repetition_gate(<={max_rep3})", gate)
 

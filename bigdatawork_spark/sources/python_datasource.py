@@ -146,8 +146,9 @@ def source_python_stream(spark, sf_dir):
     oracle-checked.  This is the same contract Delta's streaming source
     implements natively; version-as-offset makes replay idempotent
     (checkpointed offsets re-plan the same file lists)."""
-    path = _tmp("pyds_stream")
-    shutil.rmtree(path, ignore_errors=True)
+    from ..streaming.stream_ops import _fresh_dir
+
+    path = _fresh_dir("pyds-stream")
     t = ManifestTable(spark, path)
     ev = _events_cols(spark, sf_dir)
     t.append(ev.filter(F.col("event_id") % 2 == 0))
@@ -225,8 +226,6 @@ def source_python_stream(spark, sf_dir):
             return ManifestStreamReader(self.options)
 
     spark.dataSource.register(ManifestStreamSource)
-
-    from ..streaming.stream_ops import _fresh_dir
 
     # r17 (guide §5 "the driver should do almost no data work"): the drain
     # used to go through a memory sink, collecting ~1M rows into DRIVER

@@ -747,8 +747,7 @@ def stream_curate_to_table(spark, sf_dir):
         "curate-src",
     )
 
-    path = _tmp(f"stream_curate_{uuid.uuid4().hex[:8]}")
-    t = ManifestTable(spark, path)
+    t = ManifestTable(spark, _fresh_dir("stream-curate"))
 
     def land(batch_df, batch_id):
         gated = batch_df.filter(F.col("n_chars") >= 100)

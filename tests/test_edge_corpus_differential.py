@@ -9,7 +9,12 @@ The sf0.01 corpus contains none of these shapes, so the per-round
 driver gate can never exercise them; this is where engine-edge
 divergence hides (r12's z-score NaN-ordering bug, and this file's
 first catch: DuckDB's array_to_string([]) returning NULL lumped
-empty-text docs with NULL-text docs in doc_fingerprint's oracle)."""
+empty-text docs with NULL-text docs in doc_fingerprint's oracle).
+
+A second corpus is dense in supplementary-plane characters (emoji, math
+letters), which no fixture scale contains: it pins the character-trigram
+keys to DuckDB's one-gram-per-code-point rule (the plain regexp lookahead
+once yielded an extra gram per emoji)."""
 
 from __future__ import annotations
 
@@ -56,6 +61,7 @@ EDGE_KEYS = [
     "text_stats",
     "text_entropy_filter",
     "char_ngram_profile",
+    "dedup_ngram_jaccard",
     "wordcount",
     "text_unigram_logprob",
     "lm_perplexity_score",
@@ -67,33 +73,90 @@ EDGE_KEYS = [
     "html_strip_tags",
     "quality_filter_gopher",
     "decontaminate_exact",
+    "decontaminate_ngram",
     "inverted_index",
     "ngram_pmi",
 ]
 
 
-@pytest.fixture(scope="module")
-def edge_dir(tmp_path_factory) -> str:
-    d = tmp_path_factory.mktemp("edge_corpus")
+# Supplementary-plane text: every emoji and math letter below is ONE code
+# point but TWO UTF-16 units, the unit Java's regex engine walks.  A
+# character-gram rule that starts a gram at each UTF-16 position yields an
+# extra gram from each emoji's low surrogate; DuckDB's substr() counts code
+# points and does not.  Docs 0-9 are dedup_ngram_jaccard's probes; 10-19
+# are their near-duplicates and short or NULL texts.
+PLANE_ROWS = [
+    (0, "good morning 😀 have a nice day 🌞", "en", "src0"),
+    (1, "🔥🔥🔥 fire sale 🔥🔥🔥 today only", "en", "src0"),
+    (2, "𝐀𝐁𝐂 math letters 𝐀𝐁𝐂 and more", "en", "src1"),
+    (3, "😀", "en", "src1"),                    # 1 code point, 2 units
+    (4, "a😀", "en", "src2"),                   # 2 code points, 3 units
+    (5, "中文 😀 emoji 混合 文本", "zz", "src2"),
+    (6, "👍🏽 ok 👨‍👩‍👧 family photo 👍🏽", "en", "src3"),
+    (7, "line one 😀\nline two 😀", "en", "src3"),
+    (8, "😀😀😀😀😀😀😀😀", "zz", "src4"),
+    (9, None, "en", "src4"),
+    (10, "good morning 😀😀 have a nice day 🌞🌞", "en", "src5"),
+    (11, "🔥🔥🔥 fire sale 🔥🔥 today only!", "en", "src5"),
+    (12, "𝐀𝐁𝐂 math letters 𝐀𝐁𝐂 and less", "en", "src6"),
+    (13, "ab😀", "zz", "src6"),                 # exactly one gram
+    (14, "中文 😀 emoji 混合 文本 😀", "zz", "src7"),
+    (15, "👍🏽 ok 👨‍👩‍👧 family photo", "en", "src7"),
+    (16, "line one 😀\nline two 😀😀", "en", "src8"),
+    (17, "😀😀😀😀😀😀😀", "zz", "src8"),
+    (18, "", "en", "src9"),
+    (19, "plain ascii text with no emoji", "en", "src9"),
+]
+
+# the character-gram keys, each against its DuckDB oracle
+PLANE_KEYS = [
+    "dedup_ngram_jaccard",
+    "char_ngram_profile",
+    "dedup_cluster_cc",
+    "dedup_keep_representative",
+]
+
+
+def _corpus_dir(tmp_path_factory, name: str, rows) -> str:
+    d = tmp_path_factory.mktemp(name)
     pd.DataFrame(
-        [
-            (i, t, l, s, len(t) if t is not None else 0)
-            for i, t, l, s in EDGE_ROWS
-        ],
+        [(i, t, l, s, len(t) if t is not None else 0) for i, t, l, s in rows],
         columns=["doc_id", "text", "lang", "source", "n_chars"],
     ).to_parquet(f"{d}/documents.parquet")
     return str(d)
 
 
-@pytest.fixture(scope="module")
-def edge_duck(edge_dir):
+def _corpus_duck(corpus_dir: str):
     import duckdb
 
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{edge_dir}/documents.parquet')"
+        f"read_parquet('{corpus_dir}/documents.parquet')"
     )
+    return con
+
+
+@pytest.fixture(scope="module")
+def edge_dir(tmp_path_factory) -> str:
+    return _corpus_dir(tmp_path_factory, "edge_corpus", EDGE_ROWS)
+
+
+@pytest.fixture(scope="module")
+def edge_duck(edge_dir):
+    con = _corpus_duck(edge_dir)
+    yield con
+    con.close()
+
+
+@pytest.fixture(scope="module")
+def plane_dir(tmp_path_factory) -> str:
+    return _corpus_dir(tmp_path_factory, "plane_corpus", PLANE_ROWS)
+
+
+@pytest.fixture(scope="module")
+def plane_duck(plane_dir):
+    con = _corpus_duck(plane_dir)
     yield con
     con.close()
 
@@ -103,6 +166,14 @@ def test_edge_corpus_engines_agree(key, spark, edge_dir, edge_duck):
     spark_pd = QUERIES[key](spark, edge_dir).toPandas()
     oracle_pd = edge_duck.execute(ORACLES[key]).df()
     assert_frames_match(spark_pd, oracle_pd, f"edge:{key}")
+
+
+@pytest.mark.parametrize("key", PLANE_KEYS)
+def test_supplementary_plane_engines_agree(key, spark, plane_dir, plane_duck):
+    spark_pd = QUERIES[key](spark, plane_dir).toPandas()
+    oracle_pd = plane_duck.execute(ORACLES[key]).df()
+    assert len(oracle_pd) > 0, f"plane:{key} is vacuous on this corpus"
+    assert_frames_match(spark_pd, oracle_pd, f"plane:{key}")
 
 
 def test_edge_corpus_fingerprint_semantics(spark, edge_dir):

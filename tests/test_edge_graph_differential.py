@@ -10,8 +10,10 @@ The r14 catch this file pinned: a <3-char document fabricated 3-grams on
 the Spark side only — Spark's sequence(1, 0) is the DESCENDING [1, 0]
 while DuckDB's generate_series(1, 0) is empty — and gram-less docs were
 component nodes for Spark's label propagation but absent from the
-oracle's nodes CTE.  Both sides now share a length>=3 gram guard and an
-all-docs node set (dedup_cluster_cc / dedup_keep_representative)."""
+oracle's nodes CTE.  The Spark side now takes its grams from
+``curation.char_trigrams``, which gives a <3-char or NULL doc none, so
+only the oracle keeps its length>=3 guard; both sides share an all-docs
+node set (dedup_cluster_cc / dedup_keep_representative)."""
 
 from __future__ import annotations
 

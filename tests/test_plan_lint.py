@@ -10,6 +10,7 @@ the sweep stays cheap relative to the differential tests.
 from __future__ import annotations
 
 import ast
+import re
 
 import pytest
 
@@ -111,9 +112,10 @@ def test_bnlj_whitelist_keys_still_use_bnlj_or_better(key, spark, sf_dir):
 MEMORY_SINK_OK = {"sink_stream_memory", "source_stream_rate"}
 
 
-def _package_calls(match):
-    """(file, top-level function) of every call in package source for
-    which ``match(call_node)`` holds — a static sweep, no plans built."""
+def _package_nodes(match, prune=lambda node: ()):
+    """(file, top-level function) of every AST node in package source for
+    which ``match(node)`` holds — a static sweep, no plans built.  The
+    children of a node that ``prune(node)`` returns are not visited."""
     import pathlib
 
     import bigdatawork_spark
@@ -124,14 +126,22 @@ def _package_calls(match):
     def visit(node, owner, rel):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             owner = node.name if owner is None else owner
-        if isinstance(node, ast.Call) and match(node):
+        if match(node):
             found.append((rel, owner or "<module>"))
+        skip = prune(node)
         for child in ast.iter_child_nodes(node):
-            visit(child, owner, rel)
+            if not any(child is n for n in skip):
+                visit(child, owner, rel)
 
     for path in sorted(root.rglob("*.py")):
         visit(ast.parse(path.read_text()), None, str(path.relative_to(root)))
     return found
+
+
+def _package_calls(match):
+    """(file, top-level function) of every call for which
+    ``match(call_node)`` holds."""
+    return _package_nodes(lambda node: isinstance(node, ast.Call) and match(node))
 
 
 def _is_attr_call(node, attr):
@@ -248,3 +258,40 @@ def test_eager_count_has_its_owners():
 
     found = _package_calls(eager_count)
     assert set(found) == COUNT_OWNERS, sorted(found)
+
+
+#: Character-trigram spellings: the regexp lookahead and the
+#: ``transform(sequence(1, length(t) - 2), i -> substring(t, i, 3))`` form.
+_TRIGRAM_SPELLINGS = re.compile(
+    r"\(\?=\(|substring\([^()]*,\s*i,\s*3\)|sequence\(1,\s*length\(.*\)\s*-\s*2\)"
+)
+
+
+def _oracle_sql(node):
+    """The DuckDB side: ``@register`` decorator arguments and the shared
+    connected-components oracle CTE ``_CC_REACH_SQL``."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        return node.decorator_list
+    if isinstance(node, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "_CC_REACH_SQL" for t in node.targets
+    ):
+        return [node.value]
+    return ()
+
+
+def test_trigram_rule_has_one_owner():
+    """Package code spells the character-trigram rule only in
+    ``curation.char_trigrams``: a string constant outside the oracle SQL
+    holds neither the lookahead pattern nor the substring/sequence form.
+    A second spelling drifts — the plain ``(?=(.{3}))`` lookahead started a
+    gram on each emoji's low surrogate, which DuckDB's substr() never does."""
+
+    def spelling(node):
+        return (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and _TRIGRAM_SPELLINGS.search(node.value) is not None
+        )
+
+    found = _package_nodes(spelling, prune=_oracle_sql)
+    assert set(found) == {("operators/curation.py", "char_trigrams")}, sorted(found)
