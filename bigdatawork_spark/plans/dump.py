@@ -32,7 +32,7 @@ HEADLINE_NOTES = {
 
 EXTRA_NOTES = {
     "rank_fusion_rrf": "hybrid retrieval fusion: BM25 posting slice IN-filtered before its shuffle, cosine side one scan with a broadcast 1-row query vector; BOTH lists rank partition-local-top-k → candidate global window (no corpus-sized single-partition window), fusion full-outer join over ≤2k candidate rows",
-    "join_bloom_prefilter": "Bloom pre-shuffle semi-filter: dim keys hashed into a fixed 8192-position domain, occupied positions broadcast, two LEFT SEMI BroadcastHashJoin probes prune the facts before the exact broadcast join — no SortMergeJoin, no fact shuffle before the final agg exchange (tests/test_round13.py pins the shape; lives in operators/joins.py since the r15 fold)",
+    "join_bloom_prefilter": "Bloom pre-shuffle semi-filter: dim keys hashed into a fixed 8192-position domain, occupied positions broadcast, two LEFT SEMI BroadcastHashJoin probes prune the facts before the exact broadcast join — no SortMergeJoin, no fact shuffle before the final agg exchange (tests/test_joins.py pins the shape)",
     "join_dpp_partitioned": "dynamic partition pruning over the Hive-partitioned events layout: dynamicpruningexpression on the fact scan's PartitionFilters (NO static date predicate — the dim attribute is a materialized scan column), executed partitions-read metric 4 of 30 (tests/test_plans.py)",
     "join_skew_aqe": "70%-hot-key fact⋈dim; registered path is UNHINTED (AQE broadcasts at this scale, skew-handled SMJ at cluster scale) — the skew=true runtime pin runs under SPARK_GRAFT_SKEW_FORCE_SMJ with corpus-scaled thresholds (tests/test_plans.py)",
     "bpe_first_merge": "BPE round 0: vocab aggregate (shuffle carries distinct words + freqs, never documents), zip_with adjacent pairs exploded off the VOCAB not the corpus, single argmax row to the driver",

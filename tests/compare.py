@@ -1,5 +1,7 @@
-"""Order-insensitive differential compare mirroring the driver's
-row-count + schema + value-hash check (__spark_entry__.py docstring).
+"""The cross-engine differential step of the tests, in one place: an
+oracle connection over a fixture dir, and the order-insensitive compare
+mirroring the driver's row-count + schema + value-hash check
+(__spark_entry__.py docstring).
 
 Values are canonicalized to strings (floats exactly — queries are required
 to round/exact-sum on both sides per SURVEY.md §5.3), rows sorted, then
@@ -9,10 +11,39 @@ compared.  On mismatch the first differing rows are shown.
 from __future__ import annotations
 
 import math
+import os
+from contextlib import contextmanager
 from datetime import date, datetime
+from pathlib import Path
 
+import duckdb
 import numpy as np
 import pandas as pd
+
+from bigdatawork_spark.registry import ORACLES, QUERIES
+
+
+@contextmanager
+def oracle_con(d):
+    """A DuckDB connection with one view per ``<t>.parquet`` in fixture dir
+    ``d``, named ``<t>`` — the tables an oracle SQL reads.  Closed on exit."""
+    con = duckdb.connect()
+    try:
+        for p in sorted(Path(d).glob("*.parquet")):
+            con.execute(
+                f"CREATE VIEW {p.stem} AS SELECT * FROM read_parquet('{p}')"
+            )
+        yield con
+    finally:
+        con.close()
+
+
+def assert_key_matches(spark, con, key: str, d, label: str | None = None):
+    """Key ``key`` run by Spark over fixture dir ``d`` equals its oracle SQL
+    run on ``con``; returns the Spark frame."""
+    spark_pd = QUERIES[key](spark, os.fspath(d)).toPandas()
+    assert_frames_match(spark_pd, con.execute(ORACLES[key]).df(), label or key)
+    return spark_pd
 
 
 def _canon_value(v) -> str:

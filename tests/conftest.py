@@ -6,13 +6,13 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bigdatawork_spark.schemas import TABLES  # noqa: E402
 from bigdatawork_spark.session import get_spark  # noqa: E402
+
+from .compare import oracle_con  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
 SF_SMALL = "/root/testdata/sf0.001"
@@ -31,10 +31,5 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle_con(SF_DIR) as con:
+        yield con

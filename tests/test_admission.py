@@ -289,12 +289,9 @@ _fuzz_docs = st.lists(
     max_size=55,  # >50 so the %50 plant rules fire on more than doc 0/7
 )
 
-_fuzz_seq = [0]
-
 
 def _write_docs(tmp_path_factory, rows):
-    _fuzz_seq[0] += 1
-    d = tmp_path_factory.mktemp(f"fz{_fuzz_seq[0]}")
+    d = tmp_path_factory.mktemp("fz")
     pq.write_table(
         pa.table({
             "doc_id": pa.array(range(len(rows)), pa.int64()),

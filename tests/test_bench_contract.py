@@ -102,22 +102,14 @@ def test_duckdb_q1_warm_layout_is_row_identical():
     the helper itself enforces this with an untimed hash-fold check and
     returns None on mismatch, so a non-None return IS the proof.  Run it
     against real sf0.01 parquet."""
-    import duckdb
-
+    from tests.compare import oracle_con
     from tests.conftest import SF_DIR
 
-    con = duckdb.connect()
-    try:
-        con.execute(
-            "CREATE VIEW lineitem AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/lineitem.parquet')"
-        )
+    with oracle_con(SF_DIR) as con:
         sym, reason = bench._duckdb_q1_warm_layout(con, data_dir=SF_DIR)
         assert sym is not None, f"symmetric Q1 downgraded: {reason}"
         assert reason is None
         assert "lineitem_bench" in sym and "__q1_qty" in sym
-    finally:
-        con.close()
 
 
 def test_duckdb_q1_warm_layout_records_downgrade_reason():

@@ -3,16 +3,28 @@
 The five oracled keys get row-for-row DuckDB hashes from the driver; these
 tests cover the algorithmic guarantees the hashes can't: the iterative BPE
 trainer against an independent pure-Python reference, chunk reconstruction,
-and normalization idempotency.
+normalization idempotency, and the bigram-LM perplexity and PMI scores
+against from-scratch Python counts.
 """
 
 from __future__ import annotations
 
 import collections
+import math
 
+import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from bigdatawork_spark.registry import QUERIES
+
+_SETTINGS = dict(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
 
 
 def _reference_bpe(texts, n_merges=4):
@@ -365,3 +377,189 @@ def test_bpe_fuzz_vs_python(spark):
         assert got == want, f"docs={docs!r} n_merges={n_merges}"
 
     run()
+
+
+def _bigram_lm(docs):
+    """The add-0.5 bigram LM trained on ``docs`` ((doc_id, text) pairs;
+    NULL texts skipped): per-doc bigram count and average negative
+    log-likelihood, for every doc with at least one bigram."""
+    bi, ctx, vocab, per_doc = collections.Counter(), collections.Counter(), set(), {}
+    for doc_id, text in docs:
+        if text is None:
+            continue
+        ws = [w for w in text.lower().split(" ") if w]
+        vocab.update(ws)
+        pairs = list(zip(ws, ws[1:]))
+        if pairs:
+            per_doc[doc_id] = pairs
+            bi.update(pairs)
+            for w1, _ in pairs:
+                ctx[w1] += 1
+    v = len(vocab)
+    return {
+        doc_id: (
+            len(pairs),
+            -sum(math.log((bi[p] + 0.5) / (ctx[p[0]] + 0.5 * v)) for p in pairs)
+            / len(pairs),
+        )
+        for doc_id, pairs in per_doc.items()
+    }
+
+
+def test_lm_perplexity_matches_python_reference(spark, sf_dir):
+    """Per-doc bigram count, NLL and perplexity ≡ the from-scratch Python
+    LM (same smoothing, same in-corpus training set)."""
+    docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
+    want = _bigram_lm(zip(docs["doc_id"], docs["text"]))
+    rows = QUERIES["lm_perplexity_score"](spark, sf_dir).collect()
+    assert {r["doc_id"] for r in rows} == set(want)
+    assert len(rows) == len(want)
+    for r in rows:
+        n, nll = want[r["doc_id"]]
+        assert r["n_bigrams"] == n, r
+        assert abs(r["avg_nll"] - nll) < 2e-6, (r, nll)
+        assert abs(r["ppl"] - math.exp(round(nll, 6))) < min(
+            1e-3, 2e-4 * max(1.0, r["ppl"])
+        ), r
+
+
+def test_perplexity_vs_python_bigram_lm(spark, sf_dir):
+    """Per-doc bigram NLL and perplexity ≡ the from-scratch Python LM
+    (same smoothing, same in-corpus training set)."""
+    docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
+    want = _bigram_lm(zip(docs["doc_id"], docs["text"]))
+    rows = QUERIES["lm_perplexity_score"](spark, sf_dir).collect()
+    assert len(rows) == len(want)
+    for r in rows:
+        n, nll = want[r["doc_id"]]
+        assert r["n_bigrams"] == n, r
+        assert abs(r["avg_nll"] - nll) < 2e-6, (r, nll)
+        assert abs(r["ppl"] - math.exp(round(nll, 6))) < 2e-4 * max(
+            1.0, r["ppl"]
+        ), r
+
+
+def test_lm_perplexity_bounds(spark, sf_dir):
+    got = QUERIES["lm_perplexity_score"](spark, sf_dir).toPandas()
+    # Perplexity of any smoothed distribution over V outcomes is >= 1 and
+    # (for add-k) bounded by the worst single-event probability bound.
+    assert (got.ppl >= 1.0).all()
+    assert got.avg_nll.between(0, 50).all()
+
+
+@given(
+    texts=st.lists(
+        st.one_of(
+            st.none(),
+            st.lists(
+                st.sampled_from(["aa", "bb", "cc", "dd"]),
+                min_size=0,
+                max_size=20,
+            ).map(" ".join),
+        ),
+        min_size=1,
+        max_size=10,
+    )
+)
+@settings(**_SETTINGS)
+def test_perplexity_fuzz_vs_python(spark, texts):
+    """Hypothesis fuzz of the bigram-LM scorer on random tiny-vocab
+    corpora incl. NULL texts, empty texts, and single-word docs (no
+    bigrams → absent from the output by contract)."""
+    import bigdatawork_spark.operators.corpus_ops as ops
+
+    rows = list(enumerate(texts))
+    sdf = spark.createDataFrame(rows, "doc_id long, text string")
+    orig = ops.load
+    try:
+        ops.load = lambda sp, sf, name: sdf
+        got = ops.lm_perplexity_score(spark, "x").toPandas().set_index("doc_id")
+    finally:
+        ops.load = orig
+
+    want = _bigram_lm(rows)
+    assert set(want) == set(got.index)
+    for i, (_, nll) in want.items():
+        assert abs(got.loc[i, "avg_nll"] - nll) < 1e-5, (i, texts[i])
+
+
+def test_ngram_pmi_scores_rank_collocations_over_chance(spark, sf_dir):
+    rows = QUERIES["ngram_pmi"](spark, sf_dir).collect()
+    assert len(rows) == 20
+    assert all(r.c_xy >= 5 for r in rows)
+    pmis = [r.pmi for r in rows]
+    assert pmis == sorted(pmis, reverse=True)
+    # the top collocations must beat independence (PMI > 0) — on a corpus
+    # with any non-uniform phrase structure a top-20 all <= 0 would mean
+    # the MLE denominators are wrong
+    assert pmis[0] > 0
+
+
+_VOCAB = ["aa", "bb", "cc", "dd"]
+
+_pmi_docs = st.lists(
+    st.lists(st.sampled_from(_VOCAB), min_size=0, max_size=6).map(" ".join),
+    min_size=1,
+    max_size=40,
+)
+
+
+@given(texts=_pmi_docs)
+@settings(**_SETTINGS)
+def test_random_ngram_pmi_vs_python(spark, tmp_path_factory, texts):
+    """PMI selection and scores vs a pure-Python bigram walk.  A 4-word
+    vocabulary caps bigram types at 16, so LIMIT 20 never truncates and
+    the comparison is the FULL surviving set; empty docs and one-token
+    docs exercise the len>=2 guard."""
+    d = tmp_path_factory.mktemp("pmi")
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "text": pa.array(texts, pa.string()),
+            "lang": pa.array(["en"] * len(texts), pa.string()),
+            "source": pa.array(["s"] * len(texts), pa.string()),
+            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+        }),
+        str(d / "documents.parquet"),
+    )
+    got = [
+        (r.w1, r.w2, r.c_xy, r.pmi)
+        for r in QUERIES["ngram_pmi"](spark, str(d)).collect()
+    ]
+
+    uni: dict[str, int] = {}
+    big: dict[tuple[str, str], int] = {}
+    bt = 0
+    for t in texts:
+        ws = [w for w in t.split(" ") if w]
+        for w in ws:
+            uni[w] = uni.get(w, 0) + 1
+        for a, b in zip(ws, ws[1:]):
+            big[(a, b)] = big.get((a, b), 0) + 1
+            bt += 1
+    tot = sum(uni.values())
+    want = sorted(
+        (
+            (
+                w1,
+                w2,
+                c,
+                round(
+                    math.log(
+                        (c / bt) / ((uni[w1] / tot) * (uni[w2] / tot))
+                    ),
+                    6,
+                ),
+            )
+            for (w1, w2), c in big.items()
+            if c >= 5
+        ),
+        key=lambda r: (-r[3], r[0], r[1]),
+    )
+    # scores compare with ulp slack (ln rounding may differ in the last
+    # fuzz digit); selection, counts and ORDER compare exactly
+    assert [(r[0], r[1], r[2]) for r in got] == [
+        (r[0], r[1], r[2]) for r in want
+    ], f"texts={texts!r}"
+    for g, w in zip(got, want):
+        assert abs(g[3] - w[3]) <= 2e-6, (g, w)

@@ -7,7 +7,7 @@ import pytest
 
 from bigdatawork_spark.registry import ORACLES, QUERIES
 
-from .compare import assert_frames_match
+from .compare import assert_key_matches
 
 
 def _sql_keys():
@@ -20,9 +20,7 @@ def _rows_only_keys():
 
 @pytest.mark.parametrize("key", _sql_keys())
 def test_oracle_match(key, spark, duck, sf_dir):
-    spark_pd = QUERIES[key](spark, sf_dir).toPandas()
-    oracle_pd = duck.execute(ORACLES[key]).df()
-    assert_frames_match(spark_pd, oracle_pd, key)
+    assert_key_matches(spark, duck, key, sf_dir)
 
 
 @pytest.mark.parametrize("key", _rows_only_keys())

@@ -80,6 +80,38 @@ def test_oracled_output_is_scalar_only(key, spark, sf_dir):
         )
 
 
+# Keys whose builders moved between modules once, each pinned to its home:
+# a key silently re-registered from a different module fails here.
+_EXPECTED_HOME = {
+    "coreset_sample_kcenter": "bigdatawork_spark.operators.training_ops",
+    "dedup_containment": "bigdatawork_spark.operators.curation",
+    "dedup_ladder": "bigdatawork_spark.operators.curation",
+    "dedup_ladder_exact_stage": "bigdatawork_spark.operators.curation",
+    "dsir_importance_resample": "bigdatawork_spark.operators.training_ops",
+    "embedding_pca_gram": "bigdatawork_spark.operators.training_ops",
+    "knn_classify_ivf": "bigdatawork_spark.operators.llm_ops",
+    "privacy_dp_count": "bigdatawork_spark.operators.platform_ops",
+    "semdedup_prune": "bigdatawork_spark.operators.llm_ops",
+    "table_format_vacuum": "bigdatawork_spark.sources.manifest_format",
+    "ts_downsample_lttb": "bigdatawork_spark.operators.stats_ops",
+    "ts_seasonal_decompose": "bigdatawork_spark.operators.stats_ops",
+    "win_rolling_median": "bigdatawork_spark.operators.windows",
+}
+
+
+def test_staged_keys_promoted_verbatim():
+    """Every formerly staged key is live in the registry, callable,
+    registered from its documented home module, and (where declared)
+    carries a non-empty oracle."""
+    for key, home in _EXPECTED_HOME.items():
+        fn = QUERIES[key]
+        assert callable(fn), key
+        assert fn.__module__ == home, (key, fn.__module__, home)
+        assert getattr(fn, "query_key", None) == key
+        if key in ORACLES:
+            assert ORACLES[key].strip(), key
+
+
 def test_survey2_keys_all_registered():
     missing = SURVEY2_KEYS - set(QUERIES)
     assert not missing, f"SURVEY §2 keys absent from registry: {sorted(missing)}"

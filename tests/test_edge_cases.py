@@ -7,6 +7,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .compare import oracle_con
+
 
 @pytest.fixture(scope="module")
 def empty_df(spark):
@@ -504,18 +506,9 @@ def test_heavy_hitters_null_group_kept(spark, tmp_path):
     # NULL (25%), click (40%), view (20%) all exceed 15%; x (15%) does not
     assert got == {None: 5, "click": 8, "view": 4}
     # and the DuckDB oracle agrees on the same corpus
-    import duckdb
-
-    con = duckdb.connect()
-    try:
-        con.execute(
-            f"CREATE VIEW events AS SELECT * FROM "
-            f"read_parquet('{d}/events.parquet')"
-        )
+    with oracle_con(d) as con:
         oracle = {
             r[0]: r[1]
             for r in con.execute(ORACLES["agg_heavy_hitters"]).fetchall()
         }
-    finally:
-        con.close()
     assert oracle == got

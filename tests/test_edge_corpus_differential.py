@@ -21,9 +21,9 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from bigdatawork_spark.registry import ORACLES, QUERIES
+from bigdatawork_spark.registry import QUERIES
 
-from .compare import assert_frames_match
+from .compare import assert_key_matches, oracle_con
 
 EDGE_ROWS = [
     (0, "the quick brown fox jumps over the lazy dog", "en", "src0"),
@@ -126,17 +126,6 @@ def _corpus_dir(tmp_path_factory, name: str, rows) -> str:
     return str(d)
 
 
-def _corpus_duck(corpus_dir: str):
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{corpus_dir}/documents.parquet')"
-    )
-    return con
-
-
 @pytest.fixture(scope="module")
 def edge_dir(tmp_path_factory) -> str:
     return _corpus_dir(tmp_path_factory, "edge_corpus", EDGE_ROWS)
@@ -144,9 +133,8 @@ def edge_dir(tmp_path_factory) -> str:
 
 @pytest.fixture(scope="module")
 def edge_duck(edge_dir):
-    con = _corpus_duck(edge_dir)
-    yield con
-    con.close()
+    with oracle_con(edge_dir) as con:
+        yield con
 
 
 @pytest.fixture(scope="module")
@@ -156,24 +144,19 @@ def plane_dir(tmp_path_factory) -> str:
 
 @pytest.fixture(scope="module")
 def plane_duck(plane_dir):
-    con = _corpus_duck(plane_dir)
-    yield con
-    con.close()
+    with oracle_con(plane_dir) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", EDGE_KEYS)
 def test_edge_corpus_engines_agree(key, spark, edge_dir, edge_duck):
-    spark_pd = QUERIES[key](spark, edge_dir).toPandas()
-    oracle_pd = edge_duck.execute(ORACLES[key]).df()
-    assert_frames_match(spark_pd, oracle_pd, f"edge:{key}")
+    assert_key_matches(spark, edge_duck, key, edge_dir, f"edge:{key}")
 
 
 @pytest.mark.parametrize("key", PLANE_KEYS)
 def test_supplementary_plane_engines_agree(key, spark, plane_dir, plane_duck):
-    spark_pd = QUERIES[key](spark, plane_dir).toPandas()
-    oracle_pd = plane_duck.execute(ORACLES[key]).df()
-    assert len(oracle_pd) > 0, f"plane:{key} is vacuous on this corpus"
-    assert_frames_match(spark_pd, oracle_pd, f"plane:{key}")
+    spark_pd = assert_key_matches(spark, plane_duck, key, plane_dir, f"plane:{key}")
+    assert len(spark_pd) > 0, f"plane:{key} is vacuous on this corpus"
 
 
 def test_edge_corpus_fingerprint_semantics(spark, edge_dir):

@@ -23,9 +23,9 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from bigdatawork_spark.registry import ORACLES, QUERIES
+from bigdatawork_spark.registry import ORACLES
 
-from .compare import assert_frames_match
+from .compare import assert_key_matches, oracle_con
 
 _TS0 = pd.Timestamp("2024-03-01 00:00:00")
 
@@ -144,42 +144,26 @@ def finite_dir(tmp_path_factory):
     return _write(tmp_path_factory, finite=True)
 
 
-def _duck_for(d):
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{d}/events.parquet')"
-    )
-    return con
-
-
 @pytest.fixture(scope="module")
 def full_duck(full_dir):
-    con = _duck_for(full_dir)
-    yield con
-    con.close()
+    with oracle_con(full_dir) as con:
+        yield con
 
 
 @pytest.fixture(scope="module")
 def finite_duck(finite_dir):
-    con = _duck_for(finite_dir)
-    yield con
-    con.close()
+    with oracle_con(finite_dir) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", FULL_KEYS)
 def test_full_adversarial_agree(key, spark, full_dir, full_duck):
-    spark_pd = QUERIES[key](spark, full_dir).toPandas()
-    oracle_pd = full_duck.execute(ORACLES[key]).df()
-    assert_frames_match(spark_pd, oracle_pd, f"edge-events:{key}")
+    assert_key_matches(spark, full_duck, key, full_dir, f"edge-events:{key}")
 
 
 @pytest.mark.parametrize("key", FINITE_KEYS)
 def test_finite_contract_agree(key, spark, finite_dir, finite_duck):
-    spark_pd = QUERIES[key](spark, finite_dir).toPandas()
-    oracle_pd = finite_duck.execute(ORACLES[key]).df()
-    assert_frames_match(spark_pd, oracle_pd, f"edge-events-finite:{key}")
+    assert_key_matches(spark, finite_duck, key, finite_dir, f"edge-events-finite:{key}")
 
 
 @pytest.mark.parametrize("key", CANARY_KEYS)

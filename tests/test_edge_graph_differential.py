@@ -20,9 +20,9 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from bigdatawork_spark.registry import ORACLES, QUERIES
+from bigdatawork_spark.registry import QUERIES
 
-from .compare import assert_frames_match
+from .compare import assert_key_matches, oracle_con
 
 GRAPH_KEYS = ["graph_pagerank", "graph_triangle_count", "graph_shortest_path"]
 
@@ -82,24 +82,14 @@ def graph_dir(tmp_path_factory) -> str:
 
 @pytest.fixture(scope="module")
 def graph_duck(graph_dir):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ("nation", "supplier", "customer", "orders", "lineitem"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{graph_dir}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle_con(graph_dir) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", GRAPH_KEYS)
 def test_edge_graph_engines_agree(key, spark, graph_dir, graph_duck):
-    spark_pd = QUERIES[key](spark, graph_dir).toPandas()
-    oracle_pd = graph_duck.execute(ORACLES[key]).df()
+    spark_pd = assert_key_matches(spark, graph_duck, key, graph_dir, f"edge:{key}")
     assert len(spark_pd) > 0, f"edge:{key} returned 0 rows — vacuous"
-    assert_frames_match(spark_pd, oracle_pd, f"edge:{key}")
 
 
 def test_edge_graph_semantics(spark, graph_dir):
@@ -158,23 +148,14 @@ def cc_dir(tmp_path_factory) -> str:
 
 @pytest.fixture(scope="module")
 def cc_duck(cc_dir):
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{cc_dir}/documents.parquet')"
-    )
-    yield con
-    con.close()
+    with oracle_con(cc_dir) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", ["dedup_cluster_cc", "dedup_keep_representative"])
 def test_edge_cc_engines_agree(key, spark, cc_dir, cc_duck):
-    spark_pd = QUERIES[key](spark, cc_dir).toPandas()
-    oracle_pd = cc_duck.execute(ORACLES[key]).df()
+    spark_pd = assert_key_matches(spark, cc_duck, key, cc_dir, f"edge:{key}")
     assert len(spark_pd) > 0
-    assert_frames_match(spark_pd, oracle_pd, f"edge:{key}")
 
 
 def test_edge_cc_components(spark, cc_dir):
@@ -220,23 +201,14 @@ def chain_dir(tmp_path_factory) -> str:
 
 @pytest.fixture(scope="module")
 def chain_duck(chain_dir):
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{chain_dir}/documents.parquet')"
-    )
-    yield con
-    con.close()
+    with oracle_con(chain_dir) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", ["dedup_cluster_cc", "dedup_keep_representative"])
 def test_long_chain_cc_engines_agree(key, spark, chain_dir, chain_duck):
-    spark_pd = QUERIES[key](spark, chain_dir).toPandas()
-    oracle_pd = chain_duck.execute(ORACLES[key]).df()
+    spark_pd = assert_key_matches(spark, chain_duck, key, chain_dir, f"chain:{key}")
     assert len(spark_pd) > 0
-    assert_frames_match(spark_pd, oracle_pd, f"chain:{key}")
 
 
 def test_long_chain_cc_matches_union_find(spark, chain_dir):

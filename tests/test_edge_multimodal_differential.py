@@ -17,9 +17,9 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from bigdatawork_spark.registry import ORACLES, QUERIES
+from bigdatawork_spark.registry import QUERIES
 
-from .compare import assert_frames_match
+from .compare import assert_key_matches, oracle_con
 
 # doc_ids chosen to stress the geometry arithmetic:
 #   0            smallest dims / smallest sample count
@@ -68,23 +68,14 @@ def mm_dir(tmp_path_factory) -> str:
 
 @pytest.fixture(scope="module")
 def mm_duck(mm_dir):
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{mm_dir}/documents.parquet')"
-    )
-    yield con
-    con.close()
+    with oracle_con(mm_dir) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", EDGE_KEYS)
 def test_edge_multimodal_engines_agree(key, spark, mm_dir, mm_duck):
-    spark_pd = QUERIES[key](spark, mm_dir).toPandas()
-    oracle_pd = mm_duck.execute(ORACLES[key]).df()
+    spark_pd = assert_key_matches(spark, mm_duck, key, mm_dir, f"edge:{key}")
     assert len(spark_pd) > 0, f"edge:{key} returned 0 rows — vacuous"
-    assert_frames_match(spark_pd, oracle_pd, f"edge:{key}")
 
 
 def test_edge_multimodal_negative_ids_decode(spark, mm_dir):

@@ -12,9 +12,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from bigdatawork_spark.registry import ORACLES, QUERIES
-
-from .compare import assert_frames_match
+from .compare import assert_key_matches, oracle_con
 
 EDGE_KEYS = [
     "agg_groupby_q1",
@@ -85,20 +83,10 @@ def tpch_dir(tmp_path_factory) -> str:
 
 @pytest.fixture(scope="module")
 def tpch_duck(tpch_dir):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ("lineitem", "orders"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{tpch_dir}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle_con(tpch_dir) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", EDGE_KEYS)
 def test_edge_tpch_engines_agree(key, spark, tpch_dir, tpch_duck):
-    spark_pd = QUERIES[key](spark, tpch_dir).toPandas()
-    oracle_pd = tpch_duck.execute(ORACLES[key]).df()
-    assert_frames_match(spark_pd, oracle_pd, f"edge-tpch:{key}")
+    assert_key_matches(spark, tpch_duck, key, tpch_dir, f"edge-tpch:{key}")

@@ -1,4 +1,6 @@
-"""Registry-wide plan lint — scale guards over EVERY oracled key.
+"""Registry-wide plan lint — scale guards over EVERY oracled key — and the
+owner lints that keep each concern in one place, in package source and in
+the test suite's layout.
 
 Complements tests/test_plans.py (deep assertions on headline shapes) with a
 broad sweep: no operator may regress into a cartesian product, and the slow
@@ -75,9 +77,14 @@ def _has_global_window(plan: str) -> bool:
     return False
 
 
+# Rows-only keys whose plans are linted with the oracled ones: builders that
+# plan without running jobs, so the sweep stays cheap.
+LINTED_ROWS_ONLY = {"embedding_pca_gram"}
+
+
 def test_no_cartesian_and_bounded_python_eval(spark, sf_dir):
     offenders: list[str] = []
-    for key in sorted(ORACLES):
+    for key in sorted(set(ORACLES) | LINTED_ROWS_ONLY):
         plan = plan_string(QUERIES[key](spark, sf_dir))
         if "CartesianProduct" in plan:
             offenders.append(f"{key}: CartesianProduct")
@@ -295,3 +302,36 @@ def test_trigram_rule_has_one_owner():
 
     found = _package_nodes(spelling, prune=_oracle_sql)
     assert set(found) == {("operators/curation.py", "char_trigrams")}, sorted(found)
+
+
+def _test_sources():
+    import pathlib
+
+    return sorted(pathlib.Path(__file__).parent.glob("*.py"))
+
+
+def test_test_modules_are_named_by_domain():
+    """A test module is named after what it tests, never after the round
+    that added it: no ``round``, no ``_rNN`` and no trailing digit.  Tests
+    of a key live in ``test_<m>.py``, ``<m>`` the module registering it."""
+    bad = [
+        p.name
+        for p in _test_sources()
+        if re.search(r"round|_r\d\d|\d$", p.stem)
+    ]
+    assert not bad, bad
+
+
+#: A DuckDB view over a fixture parquet file, spelled out.
+_ORACLE_VIEW = re.compile(r"CREATE\s+VIEW\b.{0,160}?read_parquet\(", re.S)
+
+
+def test_oracle_views_have_one_owner():
+    """Only ``compare.oracle_con`` builds the DuckDB views an oracle SQL
+    reads: no other test source spells a view over ``read_parquet``."""
+    found = [
+        p.name
+        for p in _test_sources()
+        if p.name != "compare.py" and _ORACLE_VIEW.search(p.read_text())
+    ]
+    assert not found, found

@@ -26,9 +26,7 @@ import random
 import pandas as pd
 import pytest
 
-from bigdatawork_spark.registry import ORACLES, QUERIES
-
-from .compare import assert_frames_match
+from .compare import assert_key_matches, oracle_con
 
 KEYS = [
     "agg_heavy_hitters",
@@ -119,21 +117,9 @@ def _random_fixture(seed: int, d) -> None:
 
 @pytest.mark.parametrize("seed", [3, 17, 41, 59, 73, 101])
 def test_random_approx_conversions_engines_agree(seed, spark, tmp_path):
-    import duckdb
-
     d = tmp_path / f"ax{seed}"
     d.mkdir()
     _random_fixture(seed, str(d))
-    con = duckdb.connect()
-    try:
-        for t in ("events", "lineitem"):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{d}/{t}.parquet')"
-            )
+    with oracle_con(d) as con:
         for key in KEYS:
-            spark_pd = QUERIES[key](spark, str(d)).toPandas()
-            oracle_pd = con.execute(ORACLES[key]).df()
-            assert_frames_match(spark_pd, oracle_pd, f"rand{seed}:{key}")
-    finally:
-        con.close()
+            assert_key_matches(spark, con, key, d, f"rand{seed}:{key}")

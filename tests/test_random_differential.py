@@ -869,9 +869,6 @@ _asof_rows = st.lists(
     max_size=20,
 )
 
-_asof_dir_seq = [0]
-
-
 @settings(**_SETTINGS)
 @given(rows=_asof_rows)
 def test_random_asof_join_vs_walk(spark, tmp_path_factory, rows):
@@ -891,10 +888,9 @@ def test_random_asof_join_vs_walk(spark, tmp_path_factory, rows):
         (i, uid, base + datetime.timedelta(seconds=off), et)
         for i, (uid, off, et) in enumerate(rows)
     ]
-    # unique dir per example: io.load memoizes the DataFrame handle per
-    # (sf_dir, table) and a rewritten file under a memoized handle is stale
-    _asof_dir_seq[0] += 1
-    d = tmp_path_factory.mktemp(f"asof{_asof_dir_seq[0]}")
+    # mktemp numbers a fresh dir per example: io.load memoizes the
+    # DataFrame handle per (sf_dir, table), so a reused dir would be stale
+    d = tmp_path_factory.mktemp("asof")
     pq.write_table(
         pa.table({
             "event_id": pa.array([e[0] for e in events], pa.int64()),
@@ -958,8 +954,7 @@ def test_random_session_window_vs_walk(spark, tmp_path_factory, rows):
         (i, uid, base + datetime.timedelta(minutes=off))
         for i, (uid, off) in enumerate(rows)
     ]
-    _asof_dir_seq[0] += 1
-    d = tmp_path_factory.mktemp(f"sess{_asof_dir_seq[0]}")
+    d = tmp_path_factory.mktemp("sess")
     pq.write_table(
         pa.table({
             "event_id": pa.array([e[0] for e in events], pa.int64()),
@@ -1032,8 +1027,7 @@ def test_random_sliding_window_vs_expansion(spark, tmp_path_factory, rows):
         (i, et, base + datetime.timedelta(minutes=off, seconds=sec))
         for i, (et, off, sec) in enumerate(rows)
     ]
-    _asof_dir_seq[0] += 1
-    d = tmp_path_factory.mktemp(f"slide{_asof_dir_seq[0]}")
+    d = tmp_path_factory.mktemp("slide")
     pq.write_table(
         pa.table({
             "event_id": pa.array([e[0] for e in events], pa.int64()),
@@ -1097,8 +1091,7 @@ def test_random_range_frame_vs_scan(spark, tmp_path_factory, vals):
     import pyarrow.parquet as pq
 
     base = datetime.datetime(1996, 6, 1)
-    _asof_dir_seq[0] += 1
-    d = tmp_path_factory.mktemp(f"range{_asof_dir_seq[0]}")
+    d = tmp_path_factory.mktemp("range")
     n = len(vals)
     pq.write_table(
         pa.table({
@@ -1137,9 +1130,6 @@ _cust_rows = st.lists(
     unique_by=lambda r: r[0],  # custkey is a key
 )
 
-_mu_seq = [0]
-
-
 @given(rows=_cust_rows)
 @settings(**_SETTINGS)
 def test_random_merge_upsert_vs_dict_merge(spark, tmp_path_factory, rows):
@@ -1153,8 +1143,7 @@ def test_random_merge_upsert_vs_dict_merge(spark, tmp_path_factory, rows):
 
     from bigdatawork_spark.registry import QUERIES
 
-    _mu_seq[0] += 1
-    d = tmp_path_factory.mktemp(f"mu{_mu_seq[0]}")
+    d = tmp_path_factory.mktemp("mu")
     pq.write_table(
         pa.table({
             "c_custkey": pa.array([r[0] for r in rows], pa.int64()),

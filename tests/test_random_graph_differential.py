@@ -16,9 +16,7 @@ import random
 import pandas as pd
 import pytest
 
-from bigdatawork_spark.registry import ORACLES, QUERIES
-
-from .compare import assert_frames_match
+from .compare import assert_key_matches, oracle_con
 
 GRAPH_KEYS = ["graph_pagerank", "graph_triangle_count", "graph_shortest_path"]
 
@@ -66,24 +64,12 @@ def _random_trade_fixture(seed: int, d) -> None:
 
 @pytest.mark.parametrize("seed", [11, 29, 47, 83])
 def test_random_trade_graph_engines_agree(seed, spark, tmp_path):
-    import duckdb
-
     d = tmp_path / f"g{seed}"
     d.mkdir()
     _random_trade_fixture(seed, str(d))
-    con = duckdb.connect()
-    try:
-        for t in ("nation", "supplier", "customer", "orders", "lineitem"):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{d}/{t}.parquet')"
-            )
+    with oracle_con(d) as con:
         for key in GRAPH_KEYS:
-            spark_pd = QUERIES[key](spark, str(d)).toPandas()
-            oracle_pd = con.execute(ORACLES[key]).df()
-            assert_frames_match(spark_pd, oracle_pd, f"rand{seed}:{key}")
-    finally:
-        con.close()
+            assert_key_matches(spark, con, key, d, f"rand{seed}:{key}")
 
 
 _WORDS = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf"]
@@ -123,21 +109,10 @@ def _random_docs_fixture(seed: int, d) -> None:
 
 @pytest.mark.parametrize("seed", [5, 19, 31, 67])
 def test_random_cc_corpus_engines_agree(seed, spark, tmp_path):
-    import duckdb
-
     d = tmp_path / f"cc{seed}"
     d.mkdir()
     _random_docs_fixture(seed, str(d))
-    con = duckdb.connect()
-    try:
-        con.execute(
-            f"CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{d}/documents.parquet')"
-        )
+    with oracle_con(d) as con:
         for key in ("dedup_cluster_cc", "dedup_keep_representative"):
-            spark_pd = QUERIES[key](spark, str(d)).toPandas()
-            oracle_pd = con.execute(ORACLES[key]).df()
+            spark_pd = assert_key_matches(spark, con, key, d, f"rand{seed}:{key}")
             assert len(spark_pd) > 0
-            assert_frames_match(spark_pd, oracle_pd, f"rand{seed}:{key}")
-    finally:
-        con.close()

@@ -16,9 +16,7 @@ import tempfile
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from bigdatawork_spark.registry import ORACLES, QUERIES
-
-from .compare import assert_frames_match
+from .compare import assert_key_matches, oracle_con
 
 _WORDS = ["the", "fox", "dup", "a", "é", "中文", "x1", "...", "Mixed"]
 
@@ -51,8 +49,6 @@ _SETTINGS = dict(
 @settings(**_SETTINGS)
 @given(texts=_corpus)
 def test_random_corpora_engines_agree(spark, texts):
-    import duckdb
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -76,15 +72,6 @@ def test_random_corpora_engines_agree(spark, texts):
         ),
         os.path.join(d, "documents.parquet"),
     )
-    con = duckdb.connect()
-    try:
-        con.execute(
-            f"CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{d}/documents.parquet')"
-        )
+    with oracle_con(d) as con:
         for key in _KEYS:
-            spark_pd = QUERIES[key](spark, d).toPandas()
-            oracle_pd = con.execute(ORACLES[key]).df()
-            assert_frames_match(spark_pd, oracle_pd, f"rand-text:{key}")
-    finally:
-        con.close()
+            assert_key_matches(spark, con, key, d, f"rand-text:{key}")

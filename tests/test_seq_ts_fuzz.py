@@ -43,12 +43,9 @@ _events = st.lists(
     max_size=40,
 )
 
-_dir_seq = [0]
-
 
 def _events_dir(tmp_path_factory, rows):
-    _dir_seq[0] += 1
-    d = tmp_path_factory.mktemp(f"seq{_dir_seq[0]}")
+    d = tmp_path_factory.mktemp("seq")
     evs = [
         (i, u, _BASE + datetime.timedelta(minutes=m), et, c / 100.0)
         for i, (u, m, et, c) in enumerate(rows)

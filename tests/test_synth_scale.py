@@ -11,8 +11,10 @@ from __future__ import annotations
 import importlib.util
 import sys
 
-import duckdb
 import pytest
+
+from .compare import oracle_con
+from .conftest import SF_SMALL
 
 
 @pytest.fixture(scope="module")
@@ -34,32 +36,21 @@ def synth_dir(tmp_path_factory):
     return str(dst)
 
 
-def _con(d):
-    con = duckdb.connect()
-    for t in ["customer", "orders", "lineitem", "events", "documents", "embeddings"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet')"
-        )
-    return con
-
-
 def test_row_counts_scale_exactly(synth_dir):
-    base = _con("/root/testdata/sf0.001")
-    synth = _con(synth_dir)
-    for t in ["customer", "orders", "lineitem", "events", "documents", "embeddings"]:
-        nb = base.execute(f"SELECT COUNT(*) FROM {t}").fetchone()[0]
-        ns = synth.execute(f"SELECT COUNT(*) FROM {t}").fetchone()[0]
-        assert ns == 2 * nb, f"{t}: {ns} != 2×{nb}"
+    with oracle_con(SF_SMALL) as base, oracle_con(synth_dir) as synth:
+        for t in ["customer", "orders", "lineitem", "events", "documents", "embeddings"]:
+            nb = base.execute(f"SELECT COUNT(*) FROM {t}").fetchone()[0]
+            ns = synth.execute(f"SELECT COUNT(*) FROM {t}").fetchone()[0]
+            assert ns == 2 * nb, f"{t}: {ns} != 2×{nb}"
 
 
 def test_join_cardinality_scales_exactly(synth_dir):
-    base = _con("/root/testdata/sf0.001")
-    synth = _con(synth_dir)
     q = """SELECT COUNT(*) FROM orders
            JOIN lineitem ON o_orderkey = l_orderkey
            JOIN customer ON o_custkey = c_custkey"""
-    nb = base.execute(q).fetchone()[0]
-    ns = synth.execute(q).fetchone()[0]
+    with oracle_con(SF_SMALL) as base, oracle_con(synth_dir) as synth:
+        nb = base.execute(q).fetchone()[0]
+        ns = synth.execute(q).fetchone()[0]
     assert ns == 2 * nb, (
         f"3-way join produced {ns}, expected exactly 2×{nb} — replica keys "
         "are colliding or dangling"
@@ -67,10 +58,10 @@ def test_join_cardinality_scales_exactly(synth_dir):
 
 
 def test_no_dangling_foreign_keys(synth_dir):
-    synth = _con(synth_dir)
-    dangling = synth.execute(
-        """SELECT COUNT(*) FROM lineitem
-           LEFT JOIN orders ON l_orderkey = o_orderkey
-           WHERE o_orderkey IS NULL"""
-    ).fetchone()[0]
+    with oracle_con(synth_dir) as synth:
+        dangling = synth.execute(
+            """SELECT COUNT(*) FROM lineitem
+               LEFT JOIN orders ON l_orderkey = o_orderkey
+               WHERE o_orderkey IS NULL"""
+        ).fetchone()[0]
     assert dangling == 0

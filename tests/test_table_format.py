@@ -6,11 +6,12 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdatawork_spark.io import load
 from bigdatawork_spark.sources.io_ops import _tmp
-from bigdatawork_spark.sources.manifest_format import ManifestTable
+from bigdatawork_spark.sources.manifest_format import ManifestTable, _events_cols
 
 
 def _fresh(spark, name):
@@ -421,3 +422,61 @@ def test_dot_dir_and_traversal_names_rejected(spark, sf_dir):
     assert t.versions() == [1]
     assert t.read().count() == 10
     assert t.append(ev.limit(3), name="batch.b-ok_2") == 2
+
+
+def test_vacuum_deletes_only_dead_files_and_truncates_history(spark, sf_dir):
+    """Filesystem-level invariants behind the oracle constants: after
+    vacuum(keep_last=1) the on-disk parquet set equals exactly the latest
+    manifest's file list, expired versions raise on time travel, and the
+    surviving read matches the pre-vacuum content row-for-row."""
+    t, path = _fresh(spark, "manifest_vacuum_invariants")
+    ev = _events_cols(spark, sf_dir)
+    for r in range(3):
+        t.append(ev.filter(f"event_id % 3 = {r}"))
+    t.compact()
+    before_rows = sorted(map(tuple, t.read().collect()))
+    versions_before = t.versions()
+
+    stats = t.vacuum(keep_last=1)
+    assert t.versions() == versions_before[-1:]
+    assert stats["n_expired_versions"] == len(versions_before) - 1
+
+    live = set(t._manifest(t.versions()[0])["files"])
+    on_disk = set()
+    for root, _, files in os.walk(os.path.join(path, "data")):
+        for f in files:
+            if f.endswith(".parquet"):
+                on_disk.add(os.path.join(root, f))
+    assert on_disk == live  # nothing dead survives, nothing live deleted
+    assert stats["n_live_files"] == len(live)
+
+    assert sorted(map(tuple, t.read().collect())) == before_rows
+    with pytest.raises(Exception):
+        t.read(versions_before[0])  # expired snapshot must not be readable
+
+    # idempotence: a second vacuum finds nothing to do
+    again = t.vacuum(keep_last=1)
+    assert again["n_expired_versions"] == 0
+    assert again["n_deleted_files"] == 0
+
+
+def test_vacuum_does_not_tear_pinned_readers_of_kept_versions(spark, sf_dir):
+    """The retention contract: a DataFrame planned against the LATEST
+    manifest before vacuum still collects its full content after vacuum
+    (its files are the referenced set and must survive); a reader pinned
+    to an EXPIRED version fails only when it actually reads."""
+    t, _ = _fresh(spark, "manifest_vacuum_pinned")
+    ev = _events_cols(spark, sf_dir)
+    for r in range(2):
+        t.append(ev.filter(f"event_id % 2 = {r}"))
+    t.compact()
+    latest = t.versions()[-1]
+    expired_v = t.versions()[0]
+    pinned_kept = t.read(latest)      # plans against surviving files
+    pinned_expired = t.read(expired_v)  # plans against doomed files
+    expected = pinned_kept.count()
+
+    t.vacuum(keep_last=1)
+    assert pinned_kept.count() == expected  # kept reader unaffected
+    with pytest.raises(Exception):
+        pinned_expired.count()  # expired reader fails at read time
